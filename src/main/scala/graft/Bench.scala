@@ -1,21 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // shuffle partitions default to the thread count (right for the
-    // sf0.1 record) but are env-overridable: at a synthesized sf10 a
-    // fixed 32-way shuffle puts 100x the bytes in every hash-build
-    // task — partition count must scale with data volume, which a real
-    // cluster does through AQE/config (SURVEY §5 third-decade notes)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
     // one untimed smoke query warms JVM/codegen/scan machinery so the
     // first measured query doesn't absorb session startup

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Evidence main for BPE trainer scaling: the serial trainer pays one
   * driver argmax barrier per merge (~0.1-0.2s scheduling floor each —
   * 32k merges would be hours of pure orchestration at ANY corpus
@@ -23,13 +21,7 @@ object BpeScale {
     val merges = args.lift(1).map(_.toInt).getOrElse(256)
     val batchSizes = args.lift(2).getOrElse("1,8,32")
       .split(",").map(_.trim.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
 
     var baseline: Seq[(String, String)] = Seq.empty

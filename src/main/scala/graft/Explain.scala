@@ -1,5 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Plan-audit utility: print the formatted physical plan and timed
   * noop-write execution for the named `SparkEntry.queries` entries
@@ -12,11 +17,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
+    val builder = LocalSession.builder()
     // ad-hoc conf experiments: SPARK_GRAFT_CONF="k=v;k2=v2"
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
       .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
@@ -28,13 +29,14 @@ object Explain {
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val stages = new java.util.concurrent.atomic.AtomicInteger
     val tasks = new java.util.concurrent.atomic.AtomicInteger
-    // shuffle/input BYTES per pass (r11): at a data-bound SF the
+    // shuffle/scan BYTES per pass (r11): at a data-bound SF the
     // stage count stops being the cost model and shuffled bytes
     // become it — this is the §2 evidence the plan claims are checked
     // against (stageInfo.taskMetrics aggregates across the stage)
-    val shufW = new java.util.concurrent.atomic.AtomicLong
-    val shufR = new java.util.concurrent.atomic.AtomicLong
-    val inB   = new java.util.concurrent.atomic.AtomicLong
+    val shufW = new AtomicLong
+    val shufR = new AtomicLong
+    val scan = new ScanBytes
+    spark.listenerManager.register(scan)
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
@@ -44,7 +46,6 @@ object Explain {
         if (m != null) {
           shufW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
           shufR.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          inB.addAndGet(m.inputMetrics.bytesRead)
         }
       }
     })
@@ -74,7 +75,7 @@ object Explain {
       if (!sys.env.contains("SPARK_GRAFT_EXPLAIN_NOTIME")) {
         (1 to 2).foreach { i =>
           jobs.set(0); stages.set(0); tasks.set(0)
-          shufW.set(0); shufR.set(0); inB.set(0)
+          shufW.set(0); shufR.set(0); scan.bytes.set(0)
           val t0 = System.nanoTime()
           df.write.format("noop").mode("overwrite").save()
           val dt = (System.nanoTime() - t0) / 1e9
@@ -82,7 +83,7 @@ object Explain {
           Thread.sleep(250)
           def mb(x: Long): String = f"${x / 1048576.0}%.1f"
           println(f"[explain-timing] $n pass$i $dt%.3f s jobs=${jobs.get} stages=${stages.get} tasks=${tasks.get} " +
-            s"shufW=${mb(shufW.get)}MB shufR=${mb(shufR.get)}MB input=${mb(inB.get)}MB")
+            s"shufW=${mb(shufW.get)}MB shufR=${mb(shufR.get)}MB input=${mb(scan.bytes.get)}MB")
         }
         // the static plan above is AQE's INITIAL plan; the executed form
         // (isFinalPlan=true, AQEShuffleReads applied, runtime-elided
@@ -98,5 +99,22 @@ object Explain {
       }
     }
     spark.stop()
+  }
+
+  /** File bytes the executed plans' scan nodes read — their "size of
+    * files read" metric, subqueries included — summed over finished
+    * queries. The tasks' inputMetrics miss these reads (q1_agg at sf0.1
+    * reported 0.0 MB against 11 MB of lineitem parquet).
+    */
+  private[graft] final class ScanBytes extends QueryExecutionListener {
+    private object Plans extends AdaptiveSparkPlanHelper
+    val bytes = new AtomicLong
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+      Plans.collectWithSubqueries(qe.executedPlan) { case s: FileSourceScanExec =>
+        bytes.addAndGet(s.metrics.get("filesSize").fold(0L)(_.value))
+      }
+      ()
+    }
+    override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
   }
 }

@@ -1,59 +1,50 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
-/** Bounded registry for operator-internal persisted relations (r11,
-  * advisor ask): ONE live persisted relation per slot. Rebuilding a
-  * slot against a different data dir (or a different session)
-  * unpersists the previous relation first, so a long-lived session's
-  * cached storage is bounded by the operator-family count, not by how
-  * many corpora it has visited. Same-(session, dir) calls return the
-  * single registered DataFrame — which also stops the per-call
-  * re-persist of an identical plan (the CacheManager "already cached"
-  * warnings all over the r10 test logs).
+/** The one lifecycle for operator-internal shared relations: a
+  * subtree that several consumers of one plan read is persisted
+  * through a named slot, and each slot holds ONE live persisted
+  * relation. The key is the plan itself — a call whose relation is
+  * semantically the slot's registered one (same session) gets the
+  * registered DataFrame back; any other plan (another corpus, another
+  * input, a new session) unpersists the slot's previous relation and
+  * takes its place. A long-lived session therefore holds at most one
+  * relation per slot whatever corpora it visits, and a slot can never
+  * hand back a relation built from different inputs.
   *
-  * This intentionally does NOT memoize results: the DataFrame is a
-  * lazy plan; every bench/oracle action over it recomputes from
-  * parquet unless Spark's own cache holds blocks, exactly as a direct
-  * `.persist` call would.
+  * Every call path names its own slot: two call paths sharing a slot
+  * with different plans would evict each other on every call. A
+  * helper that several operators reach takes its slot from the caller.
+  *
+  * Nothing here memoizes results: the DataFrame is a lazy plan, and
+  * an action over it recomputes from the source unless Spark's cache
+  * holds its blocks.
   */
 private[graft] object OpCache {
-  private final case class Entry(dir: String, df: DataFrame)
-  private val reg = new java.util.concurrent.ConcurrentHashMap[String, Entry]()
+  private val reg = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
-  /** Return the slot's persisted relation for `dir`, building (and
-    * persisting MEMORY_AND_DISK) on first use or on corpus/session
-    * change — evicting whatever the slot held before.
+  /** `df` registered and persisted (MEMORY_AND_DISK) under `slot`, or
+    * the slot's relation when it is the same plan. Use inline as
+    * `df.transform(OpCache.shared("slot"))`.
     */
-  def cached(slot: String, spark: SparkSession, dir: String)
-            (build: => DataFrame): DataFrame =
-    reg.compute(slot, (_, old) => {
-      if (old != null && old.dir == dir && (old.df.sparkSession eq spark)) {
-        // an external spark.catalog.clearCache() drops the blocks but
-        // leaves the registration — re-persist so the slot keeps the
-        // multi-consumer sharing it exists for
-        if (old.df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-          old.df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        old
-      } else {
+  def shared(slot: String)(df: DataFrame): DataFrame =
+    reg.compute(slot, (_, old) =>
+      // a relation whose cache entry was dropped (clearCache, or a
+      // DROP/overwrite of a table it reads) is replaced by the fresh
+      // plan, not persisted again: its file listing predates the drop
+      if (old != null && (old.sparkSession eq df.sparkSession) &&
+          old.storageLevel != StorageLevel.NONE && old.sameSemantics(df)) old
+      else {
         if (old != null)
-          try old.df.unpersist()
-          catch { case _: Exception => () } // prior session may be stopped
-        Entry(dir,
-          build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      }
-    }).df
+          try old.unpersist() catch { case _: Exception => () } // prior session may be stopped
+        df.persist(StorageLevel.MEMORY_AND_DISK)
+      })
 
-  /** Test hook: drop and unpersist every registered relation. */
-  private[graft] def clear(): Unit = {
-    reg.values.forEach { e =>
-      try e.df.unpersist() catch { case _: Exception => () }
-    }
-    reg.clear()
-  }
-
-  private[graft] def registeredDirs: Map[String, String] = {
+  /** The registered relation per slot. */
+  private[graft] def slots: Map[String, DataFrame] = {
     import scala.jdk.CollectionConverters._
-    reg.asScala.map { case (k, v) => (k, v.dir) }.toMap
+    reg.asScala.toMap
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.VectorSearch
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Per-SF ANN recall sweep — the evidence harness behind the recall
@@ -35,11 +35,7 @@ object RecallSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val nQueries = args.lift(1).map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder()
-      .appName("graft-recall-sweep").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
     try {
       val emb = Tables.embeddings(spark, sfDir)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{OracleNum, Tables}
+import graft.{OpCache, OracleNum, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1268,7 +1268,7 @@ object Analytics {
     // (the ccnetBuckets precedent; three narrow columns, spillable)
     val branded = li.select(col("l_partkey"), col("l_quantity"), col("l_extendedprice"))
       .join(p.hint("shuffle_hash"), li("l_partkey") === p("p_partkey"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(OpCache.shared("q17.branded"))
     val avgQ = branded.groupBy(col("l_partkey"))
       .agg((avg(col("l_quantity")) * 0.2).as("q_thresh"))
     branded.join(avgQ.hint("shuffle_hash"), Seq("l_partkey"))
@@ -1374,7 +1374,7 @@ object Analytics {
       .groupBy(col("l_suppkey"))
       .agg(moneyFx(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
              .as("total_rev"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(OpCache.shared("q15.rev"))
     val maxRev = rev.agg(max(col("total_rev")).as("max_rev"))
     val s = Tables.supplier(spark, dir)
     rev.crossJoin(broadcast(maxRev))
@@ -1626,7 +1626,7 @@ object Analytics {
       .groupBy(col("l_partkey").as("p_partkey"))
       .agg(moneyFx(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
              .as("value_fx"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(OpCache.shared("q11.value"))
     val total = v.agg(sum(col("value_fx").cast("decimal(38,0)")).as("total_fx"),
                       count(lit(1)).as("n_parts"))
     v.crossJoin(broadcast(total))
@@ -1771,7 +1771,11 @@ object Analytics {
     // the bounded one-row-per-(order,supplier) sketch, q15/q17 precedent
     val perSupp = li.groupBy(col("l_orderkey"), col("l_suppkey"))
       .agg(max(col("l_shipdate")).as("m_s"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // one slot per store layout: the raw and the bucketed twin both
+      // run in one pass over the registered queries
+      .transform(OpCache.shared(
+        if (graft.sources.StoreLayout.bucketedOrNone(spark, dir, "lineitem").isEmpty) "q21.perSupp"
+        else "q21.perSupp.bucketed"))
     val perOrder = perSupp.groupBy(col("l_orderkey"))
       .agg(max(col("m_s")).as("m1"), count(lit(1)).as("n_supp"))
     val stats = perSupp
@@ -1991,7 +1995,7 @@ object Analytics {
     val ec = costs.join(eu.hint("shuffle_hash"), col("l_suppkey") === col("s_suppkey"))
       .select(col("l_partkey"), col("cost_fx"), col("s_name"),
               col("s_acctbal"), col("n_name"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(OpCache.shared("q2.ec"))
     val minc = ec.groupBy(col("l_partkey").as("m_partkey"))
       .agg(min(col("cost_fx")).as("min_cost_fx"))
     ec.join(minc.hint("shuffle_hash"),

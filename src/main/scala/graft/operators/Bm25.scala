@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{OracleNum, Tables}
+import graft.{OpCache, OracleNum, Tables}
 import graft.functions.TextFunctions._
 import graft.plans.ScoreTag
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -63,7 +63,8 @@ object Bm25 {
     */
   def searchDocs(spark: SparkSession, docs: DataFrame,
                  query: String = DefaultQuery, k: Int = 20,
-                 k1: Double = K1, b: Double = B): DataFrame = {
+                 k1: Double = K1, b: Double = B,
+                 slot: String = "corpus.toks"): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
     val terms = tokenizeQuery(query)
     // a stopword-only / too-short query has no searchable terms: the
@@ -72,14 +73,7 @@ object Bm25 {
     // empty-reduce plan
     if (terms.isEmpty)
       return docs.select(col("doc_id"), lit(0L).as("score", ScoreTag.metadata)).filter(lit(false))
-    // tokenization is the scan-side cost shared by every sparse query
-    // (bm25 + all five fusion strategies run it per branch); persist
-    // lets Spark's cache manager serve all of them from one pass.
-    // At 100 TB this is the posting table you would materialize once,
-    // bucketed by term.
-    val toks = Tables.spread(spark, docs.select(col("doc_id"), col("text")))
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val toks = corpusTokens(spark, docs, slot)
     val counts = toks.select(col("doc_id"),
       column(graft.functions.expressions.TokenTfs(
         expression(col("toks")), terms)).as("c"))
@@ -101,6 +95,19 @@ object Bm25 {
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
   }
+
+  /** (doc_id, toks) of `docs`, shared through `slot`: tokenization is
+    * the scan-side cost every sparse query pays (bm25, the batch, the
+    * fusion strategies and the LM scorer), so one pass serves all of
+    * them. Over the whole corpus every caller uses the one
+    * "corpus.toks" slot. At 100 TB this is the posting table you would
+    * materialize once, bucketed by term.
+    */
+  private[operators] def corpusTokens(spark: SparkSession, docs: DataFrame,
+                                      slot: String = "corpus.toks"): DataFrame =
+    Tables.spread(spark, docs.select(col("doc_id"), col("text")))
+      .select(col("doc_id"), tokens(col("text")).as("toks"))
+      .transform(OpCache.shared(slot))
 
   def searchSql(query: String = DefaultQuery, k: Int = 20): String =
     searchSqlOver("documents", query, k)
@@ -444,7 +451,7 @@ object Bm25 {
           expression(col("text")))).as("tc"))
       .select(col("doc_id"),
         expr("aggregate(tc, 0L, (a, e) -> a + e.tf)").as("dl"), col("tc"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(OpCache.shared("bm25.prf.tc"))
     // feedback arm — value-identical to searchDocs over the same
     // corpus (same IEEE expression tree, same fx(Σ,6) quantization),
     // but riding the shared sketch: orig-term tfs are a TermLookups
@@ -611,8 +618,9 @@ object Bm25 {
     val parted = v.repartitionByRange(col("df").desc, col("term"))
       .withColumn("_pid", spark_partition_id())
       // two consumers (local ranks + offsets census) of the
-      // explode+aggregate+range-exchange subtree
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // explode+aggregate+range-exchange subtree, and both must read
+      // ONE materialization: _pid is the partition the rows landed in
+      .transform(OpCache.shared("bm25.vocab.parted"))
     val local = parted.withColumn("_lrank",
       row_number().over(Window.partitionBy(col("_pid"))
         .orderBy(col("df").desc, col("term"))).cast("long"))
@@ -866,13 +874,8 @@ object Bm25 {
   def searchBatch(spark: SparkSession, dir: String,
                   queries: Seq[String] = BatchQueries, k: Int = 10): DataFrame = {
     // the stats aggregate and the scoring pass both read the token
-    // arrays; persist so tokenization is paid once (same reasoning as
-    // [[searchDocs]])
-    val toks = Tables.spread(spark,
-        Tables.documents(spark, dir).select(col("doc_id"), col("text")))
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    searchBatchToks(toks, queries, k)
+    // arrays: tokenization is paid once
+    searchBatchToks(corpusTokens(spark, Tables.documents(spark, dir)), queries, k)
   }
 
   /** [[searchBatch]] over a caller-supplied (doc_id, toks) relation —

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{OracleNum, Tables}
+import graft.{OpCache, OracleNum, Tables}
 import graft.OracleNum.{fx, fxSql}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -120,15 +120,13 @@ object Clustering {
     *
     * Scale: per-cluster moments are a k-row aggregate with map-side
     * partials; the join back is a broadcast of k = [[KmeansK]] rows
-    * (constant-bounded by construction). The assignment is persisted
+    * (constant-bounded by construction). The assignment is shared
     * because moments + output are two consumers of the iterative
-    * Lloyd lineage; the plan is parameter-free so the CacheManager
-    * holds one entry per session, not one per call.
+    * Lloyd lineage.
     */
   def embedOutliers(spark: SparkSession, dir: String): DataFrame = {
     val D = "decimal(38,0)"
-    val asg = finalAssign(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val asg = finalAssign(spark, dir).transform(OpCache.shared("clustering.outliers.asg"))
     val stats = asg.groupBy(col("cluster"))
       .agg(count(lit(1)).cast(D).as("n"),
         sum(col("dist")).cast(D).as("s"),
@@ -247,7 +245,7 @@ object Clustering {
         fx(col("ctf").cast("double") * log(lit(KmeansK.toDouble) / col("cdf")))
           .as("score"),
         hash60(col("term")).as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(OpCache.shared("clustering.topics.scored"))
     // long-scored heap: the fx'd score is a BIGINT — TopKLongAgg keeps
     // ranking exact past 2^53 where a double score slot would round
     val top = scored.groupBy(col("cluster"))
@@ -298,7 +296,8 @@ object Clustering {
   private[graft] def labelNoiseFromVecs(vecs: DataFrame, k: Int): DataFrame = {
     val knn = VectorSearch.annKnnGraphFromVecs(
       vecs.select(col("vec_id"), col("emb")),
-      k, VectorSearch.KnnGraphRadius, VectorSearch.KnnBucketCap)
+      k, VectorSearch.KnnGraphRadius, VectorSearch.KnnBucketCap,
+      "clustering.labelNoise.knn")
     labelNoiseFromEdges(knn, vecs.select(col("vec_id"), col("label")))
   }
 
@@ -473,7 +472,6 @@ object Clustering {
     * [[graphPagerankTop]]'s TakeOrdered instead.
     */
   def graphPagerank(spark: SparkSession, dir: String, iters: Int = PrIters): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     // the sparse-contribution iterate below has no round-0 relation:
     // a 0-iteration call would dereference contribs.get (the dense
     // form used to return uniform base ranks) — fail loudly instead
@@ -486,9 +484,9 @@ object Clustering {
       .select(col("vec_id").as("src"), col("neighbor_id").as("dst"))
     val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     // the per-iteration input: every iteration re-reads this relation,
-    // so it persists once
+    // so it is shared
     val withDeg = edges.join(outdeg.hint("shuffle_hash"), Seq("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(OpCache.shared("pagerank.withDeg"))
     // Iterate on the SPARSE contribution relation, not the dense rank
     // vector (r10): r_i(v) = 150000 + (85·contrib_i(v)) DIV 100 with
     // contrib_i(v) = 0 when v received nothing, so the rank is a pure

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{OracleNum, Tables}
+import graft.{OpCache, OracleNum, Tables}
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -323,12 +323,11 @@ object Curation {
     * [[curationFunnel]]: one row per document with 0/1 columns for
     * every gate (eval split, exact dup, near dup, contaminated,
     * repetitive). Both composites derive from this ONE relation, and
-    * it is persisted — within a session the expensive near-dup
-    * cluster pass (full minhash + label propagation) runs once and
-    * the second composite rides the cache (Spark's plan-fingerprint
-    * CacheManager matches the shared subtree), exactly the
-    * derived-relation reuse a 100 TB curation run materializes
-    * between its verdict and its gate-ablation report.
+    * it is shared — within a session the expensive near-dup cluster
+    * pass (full minhash + label propagation) runs once and the second
+    * composite rides the cache, exactly the derived-relation reuse a
+    * 100 TB curation run materializes between its verdict and its
+    * gate-ablation report.
     */
   private[graft] def curationFlags(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.TextFunctions.hash60
@@ -360,7 +359,7 @@ object Curation {
         coalesce(col("f_near"), lit(0L)).as("g_near"),
         coalesce(col("f_cont"), lit(0L)).as("g_cont"),
         coalesce(col("f_rep"), lit(0L)).as("g_rep"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(OpCache.shared("curation.flags"))
   }
 
   def curateCorpus(spark: SparkSession, dir: String): DataFrame = {
@@ -641,16 +640,16 @@ object Curation {
     // persisted: the regex-heavy quality map is the operator's
     // dominant cost and BOTH the level aggregate and the doc-level
     // admit join consume this relation — without the cache the scoring
-    // pipeline runs twice (measured 68 → 36s at a 500k-doc sf10, the
-    // dsirInst lifecycle rationale). The cached rows are 4 scalars per
-    // doc — far below the text they replace — and disk-spillable.
+    // pipeline runs twice (measured 68 → 36s at a 500k-doc sf10). The
+    // cached rows are 4 scalars per doc — far below the text they
+    // replace — and disk-spillable.
     val docs = Tables.spread(spark,
         Tables.documents(spark, dir).select(col("doc_id"), col("source"), col("text")))
       .select(col("doc_id"), col("source"),
         nToks.cast("long").as("toks"), fx(q, 6).as("q6"))
       .select(col("doc_id"), col("source"), col("toks"),
         expr("q6 DIV 10000").as("qbkt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(OpCache.shared("curation.mix.docs"))
     val wBp = weights.foldLeft(Option.empty[Column]) {
       case (None, (s, w))    => Some(when(col("source") === s, w.toLong))
       case (Some(c), (s, w)) => Some(c.when(col("source") === s, w.toLong))
@@ -890,7 +889,7 @@ object Curation {
       .select(col("doc_id"), col("mean_surprise_fx"))
     val src = Tables.documents(spark, dir).select(col("doc_id"), col("source"))
     val docs = scored.join(src.hint("shuffle_hash"), Seq("doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(OpCache.shared("curation.ccnet.docs"))
     val ts = thresholds(col("mean_surprise_fx"))
     val thr = docs.groupBy(col("source")).agg(ts.head, ts.tail: _*)
     docs.join(thr.hint("shuffle_hash"), Seq("source"))
@@ -1116,7 +1115,7 @@ object Curation {
       // two consumers (the gate and the join): without the cache the
       // eval scan runs twice, and the gate's whole point is to stay
       // cheaper than the work it gates
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(OpCache.shared("curation.semantic.eval"))
     // measured gate: broadcast only when the ACTUAL eval payload fits
     // (row count alone does not bound bytes — embedding width does)
     val (nEval, evElems) = {
@@ -1272,8 +1271,7 @@ object Curation {
     * instance pass runs once per branch (measured: five full corpus
     * scans in the uncached plan). The cached relation is
     * per-(doc, bucket) multiplicities — ≤[[DsirBuckets]] rows per doc,
-    * far below the gram instance stream — and disk-spillable, the
-    * lmScore `bc` lifecycle.
+    * far below the gram instance stream — and disk-spillable.
     */
   private[graft] def dsirInst(spark: SparkSession, dir: String): DataFrame = {
     val B = DsirBuckets.toLong
@@ -1299,7 +1297,7 @@ object Curation {
       .repartition(col("doc_id"))
       .groupBy(col("doc_id"), col("source"), col("b"))
       .agg(count(lit(1)).as("k"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(OpCache.shared("curation.dsirInst"))
   }
 
   /** Both DSIR bucket-count tables in ONE aggregate over [[dsirInst]]:

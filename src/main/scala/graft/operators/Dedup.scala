@@ -79,25 +79,24 @@ object Dedup {
     */
   private def saltedPairs(df: DataFrame, keys: Seq[String], idCol: String,
                           payload: Seq[String],
-                          hotExplode: DataFrame => DataFrame): DataFrame = {
+                          hotExplode: DataFrame => DataFrame,
+                          slot: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val kc = keys.map(col)
     val skc = kc :+ col("salt")
-    // persist the two window-counted frames: six pair-branch sides
+    // share the two window-counted frames: six pair-branch sides
     // consume them (small x2, subSmall x2, subBig x2) and Spark plans
     // each side as an independent subtree — without the cache the
     // whole upstream sketch pipeline (scan + fingerprint map + keyed
     // exchange + window) executes once PER SIDE (observed 6x in the
     // physical plan). Both frames are bucket-keyed and tiny relative
-    // to the corpus; the plans are parameter-free so the CacheManager
-    // holds one entry per operator, not one per query.
+    // to the corpus; they live in the caller's slot.
     val counted = df.withColumn("_bn", count(lit(1)).over(Window.partitionBy(kc: _*)))
-      .persist(lvl)
+      .transform(OpCache.shared(s"$slot.counted"))
     val small = counted.filter(col("_bn") >= 2 && col("_bn") <= MaxBucket).drop("_bn")
     val hot = hotExplode(counted.filter(col("_bn") > MaxBucket).drop("_bn"))
       .withColumn("_sn", count(lit(1)).over(Window.partitionBy(skc: _*)))
-      .persist(lvl)
+      .transform(OpCache.shared(s"$slot.hot"))
     val subSmall = hot.filter(col("_sn") >= 2 && col("_sn") <= MaxBucket).drop("_sn")
     val subBig = hot.filter(col("_sn") > MaxBucket).drop("_sn")
       .withColumn("_rep", min(col(idCol)).over(Window.partitionBy(skc: _*)))
@@ -233,7 +232,7 @@ object Dedup {
       // the sketch feeds 3+ plan branches (sigs/candidates/verify);
       // Spark has no subtree reuse across different shuffle keys, so
       // without this the tokenize+md5 pipeline runs once per branch.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(OpCache.shared("dedup.shingles"))
   }
 
   private def pairOverlap(a: Column, b: Column): Column = {
@@ -297,27 +296,21 @@ object Dedup {
     * census [[sweep]] histograms. One banding + one verify pass
     * however many thresholds are read off it.
     */
-  private[graft] def verifiedPairs(spark: SparkSession, dir: String): DataFrame =
-    // the persist lives HERE, not in [[sweep]] (r10): minhash,
-    // clusters, the sweep census and every curation consumer read
-    // this one near-dup-fraction-sized relation through their own
-    // thresholds, and with the cache registered only by whichever
-    // caller happened to run first, the banding + exact-verify
-    // lineage re-executed per call in any other order. Registered
-    // through [[graft.OpCache]] (r11): one live relation per slot,
-    // evicted on corpus change — a long-lived session no longer
-    // accumulates one cached pair relation per visited dir.
-    OpCache.cached("dedup.verifiedPairs", spark, dir) {
-      val docs = shingleDocs(spark, dir)
-      val bands = minhashBands(docs)
-      val bounded = boundBuckets(bands, col("band"), col("band_key"))
-      val cand = bounded.select(col("doc_id").as("id1"), col("band"), col("band_key"))
-        .join(bounded.select(col("doc_id").as("id2"), col("band"), col("band_key")),
-          Seq("band", "band_key"))
-        .filter(col("id1") < col("id2"))
-        .select(col("id1"), col("id2")).distinct()
-      verifyJaccard(cand, docs)
-    }
+  private[graft] def verifiedPairs(spark: SparkSession, dir: String): DataFrame = {
+    // shared HERE, not in [[sweep]] (r10): minhash, clusters, the
+    // sweep census and every curation consumer read this one
+    // near-dup-fraction-sized relation through their own thresholds,
+    // whichever of them runs first
+    val docs = shingleDocs(spark, dir)
+    val bands = minhashBands(docs)
+    val bounded = boundBuckets(bands, col("band"), col("band_key"))
+    val cand = bounded.select(col("doc_id").as("id1"), col("band"), col("band_key"))
+      .join(bounded.select(col("doc_id").as("id2"), col("band"), col("band_key")),
+        Seq("band", "band_key"))
+      .filter(col("id1") < col("id2"))
+      .select(col("id1"), col("id2")).distinct()
+    verifyJaccard(cand, docs).transform(OpCache.shared("dedup.verifiedPairs"))
+  }
 
   def minhash(spark: SparkSession, dir: String, threshold: Double = 0.5): DataFrame =
     verifiedPairs(spark, dir)
@@ -578,13 +571,14 @@ object Dedup {
     * component at linear cost instead of a quadratic pair blow-up.
     */
   def simhash(spark: SparkSession, dir: String, maxHamming: Int = 10): DataFrame =
-    simhashPairsFromWords(simhashWordsDf(spark, dir), maxHamming)
+    simhashPairsFromWords(simhashWordsDf(spark, dir), maxHamming, "dedup.simhash")
 
   /** Pair search over a prepared (doc_id, words: array<long>[lo, hi])
     * relation — split out so specs can drive synthetic fingerprint
     * corpora (hot-bucket coverage) through the exact production path.
     */
-  private[graft] def simhashPairsFromWords(docs: DataFrame, maxHamming: Int): DataFrame = {
+  private[graft] def simhashPairsFromWords(docs: DataFrame, maxHamming: Int,
+                                           slot: String): DataFrame = {
     val lo = col("words").getItem(0)
     val hi = col("words").getItem(1)
     // f packs the 60 fingerprint bits at positions 0..31 (lo) and
@@ -612,7 +606,7 @@ object Dedup {
           lit(1L * 16384) + shiftright(col("rem"), 11).bitwiseAND(0x7FF),
           lit(2L * 16384) + shiftright(col("rem"), 22).bitwiseAND(0x7FF),
           lit(3L * 16384) + shiftright(col("rem"), 33))))
-    saltedPairs(banded, Seq("band", "bits"), "doc_id", Seq("words"), hotExplode)
+    saltedPairs(banded, Seq("band", "bits"), "doc_id", Seq("words"), hotExplode, slot)
       .select(col("id1"), col("id2"),
         hammingDistance(col("words1"), col("words2")).as("hamming"))
       .distinct()
@@ -697,7 +691,7 @@ object Dedup {
       .withColumn("df", count(lit(1)).over(Window.partitionBy(col("h"))))
       .filter(col("df") <= dfCap && col("df") >= 2)
       .select(col("h"), col("doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(OpCache.shared("dedup.ngram.rare"))
     val cand = rarePosting.select(col("h"), col("doc_id").as("id1"))
       .join(rarePosting.select(col("h"), col("doc_id").as("id2")), "h")
       .filter(col("id1") < col("id2"))
@@ -803,7 +797,7 @@ object Dedup {
     */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 50,
                           localMaxEdges: Long = LocalSolveMaxEdges): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // AQE OFF for the propagation loop: adaptive re-planning defeats
     // cached-iterate reuse in iterative plans (each check re-executed
     // the whole lineage instead of reading the persisted previous
@@ -824,7 +818,7 @@ object Dedup {
     // subtree (LSH banding + salted self-join for the embedding path)
     // is computed CONCURRENTLY by both union branches before the cache
     // lands — the count pins it once, everything downstream reads cache
-    val p = pairs.persist(lvl)
+    val p = pairs.persist(MEMORY_AND_DISK)
     val nPairs = p.count()
     if (nPairs <= localMaxEdges) {
       // the count above fully pinned the cache, so this collect is a
@@ -849,7 +843,7 @@ object Dedup {
     val fwd = p.select(col("id1").as("a"), col("id2").as("b"))
     val edges = fwd.unionByName(fwd.select(col("b").as("a"), col("a").as("b")))
       .distinct()
-      .persist(lvl)
+      .persist(MEMORY_AND_DISK)
     // One propagation round. Every node keeps a self row carrying its
     // incoming label as `own` (neighbor rows carry a MaxValue
     // sentinel), so min(own) rides the SAME aggregate as min(label)
@@ -865,7 +859,7 @@ object Dedup {
       .agg(min(col("label")).as("label"), min(col("own")).as("old"))
     var cached = edges.select(col("a").as("node")).distinct()
       .withColumn("label", col("node"))
-      .persist(lvl)
+      .persist(MEMORY_AND_DISK)
     var labels = cached
     var converged = false
     var iter = 0
@@ -875,7 +869,7 @@ object Dedup {
       // the fixpoint condition, so stopping here is stopping at
       // convergence — with half the driver actions of check-per-round
       val mid = step(labels).select(col("node"), col("label"))
-      val next = step(mid).persist(lvl)
+      val next = step(mid).persist(MEMORY_AND_DISK)
       val changed = next.filter(col("label") =!= col("old")).count()
       cached.unpersist()
       cached = next
@@ -1020,7 +1014,7 @@ object Dedup {
       .withColumn("bucket", VectorSearch.lshBucket(col("emb"), base))
     val hotExplode: DataFrame => DataFrame =
       _.withColumn("salt", VectorSearch.lshBucket(col("emb"), extra))
-    saltedPairs(banded, Seq("bucket"), "vec_id", Seq("emb"), hotExplode)
+    saltedPairs(banded, Seq("bucket"), "vec_id", Seq("emb"), hotExplode, "dedup.embedding")
       .select(col("id1"), col("id2"),
         fx(cosineSimilarity(col("emb1"), col("emb2")), 6).as("cosine"))
       .orderBy(col("cosine").desc, col("id1"), col("id2"))
@@ -1217,7 +1211,7 @@ object Dedup {
       .withColumn("df", count(lit(1)).over(Window.partitionBy(col("h"))))
       .filter(col("df") >= 2 && col("df") <= MaxBucket)
       .select(col("h"), col("doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(OpCache.shared("dedup.winnow.rare"))
     rare.select(col("h"), col("doc_id").as("id1"))
       .join(rare.select(col("h"), col("doc_id").as("id2")), "h")
       .filter(col("id1") < col("id2"))
@@ -1513,7 +1507,7 @@ object Dedup {
         .select(col("doc_id"), col("text")))
       .select(col("doc_id"), hashes.as("sh"))
       // two consumers: batch bands + batch-side Jaccard verify
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(OpCache.shared("dedup.incr.batch"))
       // re-state the increment predicate ABOVE the cache: every row
       // already satisfies it (no-op at runtime), but an
       // InMemoryRelation hides its child's filters, and without a
@@ -1555,7 +1549,7 @@ object Dedup {
     val batchB = minhashBands(batchSh)
       .withColumn("bkt", pmod(col("band_key"), lit(bktMod)).cast("int"))
       .select(col("doc_id").as("id1"), col("band"), col("bkt"), col("band_key"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(OpCache.shared("dedup.incr.bands"))
       // a runtime-no-op comparison ABOVE the cache (band is always in
       // [0, NumBands)): PartitionPruning refuses to inject the dynamic
       // partition filter unless the probe side shows a likely-selective
@@ -1576,7 +1570,7 @@ object Dedup {
     val cand = batchB
       .join(corpusB.hint("shuffle_hash"), Seq("band", "band_key"))
       .select(col("id1"), col("id2")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(OpCache.shared("dedup.incr.cand"))
     // The candidate count picks the VERIFY strategy, exactly as the
     // components solve gates local vs distributed: the r9 sf10
     // crossover study measured a ~6.5s probe FLOOR independent of
@@ -1660,21 +1654,22 @@ object Dedup {
     * each call re-ran the bucket-bound self-join + Jaccard verify
     * against the layout parquet.
     */
-  private[graft] def indexedVerifiedPairs(spark: SparkSession, dir: String): DataFrame =
-    OpCache.cached("dedup.indexedVerifiedPairs", spark, dir) {
-      val path = graft.sources.VectorIndex.minhashIndexReady(spark, dir)
-      val bands = spark.read.parquet(path)
-        .select(col("doc_id"), col("band"), col("band_key"))
-      val bounded = boundBuckets(bands, col("band"), col("band_key"))
-      val cand = bounded.select(col("doc_id").as("id1"), col("band"), col("band_key"))
-        .join(bounded.select(col("doc_id").as("id2"), col("band"), col("band_key")),
-          Seq("band", "band_key"))
-        .filter(col("id1") < col("id2"))
-        .select(col("id1"), col("id2")).distinct()
-      val sketches = spark.read.parquet(path + "_sh")
-        .select(col("doc_id"), col("sh"))
-      verifyJaccard(cand, sketches)
-    }
+  private[graft] def indexedVerifiedPairs(spark: SparkSession, dir: String): DataFrame = {
+    val path = graft.sources.VectorIndex.minhashIndexReady(spark, dir)
+    // the layout's own column types, stated rather than inferred: the
+    // plan is rebuilt on every call to key the slot, and inferring a
+    // parquet schema runs a Spark job at build time
+    val bands = spark.read.schema("doc_id BIGINT, band_key BIGINT, band INT, bkt INT").parquet(path)
+      .select(col("doc_id"), col("band"), col("band_key"))
+    val bounded = boundBuckets(bands, col("band"), col("band_key"))
+    val cand = bounded.select(col("doc_id").as("id1"), col("band"), col("band_key"))
+      .join(bounded.select(col("doc_id").as("id2"), col("band"), col("band_key")),
+        Seq("band", "band_key"))
+      .filter(col("id1") < col("id2"))
+      .select(col("id1"), col("id2")).distinct()
+    val sketches = spark.read.schema("doc_id BIGINT, sh ARRAY<BIGINT>").parquet(path + "_sh")
+    verifyJaccard(cand, sketches).transform(OpCache.shared("dedup.indexedVerifiedPairs"))
+  }
 
   def minhashIndexed(spark: SparkSession, dir: String,
                      threshold: Double = 0.5): DataFrame =

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.OracleNum
+import graft.{OpCache, OracleNum}
 import graft.plans.ScoreTag
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -123,7 +123,8 @@ object HybridSearch {
     }
     val dense = ranked(VectorSearch.semanticTopKGated(
       spark, dir, allowed.select(col("doc_id")), qid, n), "vec_id")
-    val sparse = ranked(Bm25.searchDocs(spark, allowed, query, n), "doc_id")
+    val sparse = ranked(Bm25.searchDocs(spark, allowed, query, n,
+      slot = "hybrid.filtered.toks"), "doc_id")
     val txt = ranked(Bm25.textSearchDocs(allowed, query, n), "doc_id")
     dense.unionByName(sparse).unionByName(txt)
       .groupBy(col("doc_id"))
@@ -247,7 +248,7 @@ object HybridSearch {
         graft.Tables.documents(spark, dir).select(col("doc_id"), col("text")))
       .select(col("doc_id"), graft.functions.TextFunctions.tokens(col("text")).as("toks"),
         ts.as("ts"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(OpCache.shared("hybrid.sketch"))
   }
 
   /** Token-containment text branch for the batch, read off the shared

@@ -307,7 +307,7 @@ object Multimodal {
       .select(col("doc_id"),
         array(col("ahash").bitwiseAND(lit(0xFFFFFFFFL)),
           shiftright(col("ahash"), 32)).as("words"))
-    Dedup.simhashPairsFromWords(words, maxHamming)
+    Dedup.simhashPairsFromWords(words, maxHamming, "multimodal.phash")
       .select(col("id1").as("asset1"), col("id2").as("asset2"), col("hamming"))
       .orderBy(col("asset1"), col("asset2"))
   }

@@ -548,14 +548,9 @@ object TextAnalysis {
     // the vocab and instance branches each re-ran the full
     // regex-tokenize scan on every invocation (two corpus passes per
     // call; the Bm25 searchDocs precedent: this is the token
-    // materialization a standing pipeline keeps)
-    // all three lmScore persists ride [[graft.OpCache]] (r11): one
-    // live relation per slot, evicted on corpus change
-    val base = OpCache.cached("lm.base", spark, dir) {
-      Tables.spread(spark,
-          Tables.documents(spark, dir).select(col("doc_id"), col("text")))
-        .select(col("doc_id"), tokens(col("text")).as("toks"))
-    }
+    // materialization a standing pipeline keeps, and the very slot
+    // the sparse queries read)
+    val base = Bm25.corpusTokens(spark, Tables.documents(spark, dir))
     val vocab = base.select(explode(col("toks")).as("w"))
       .agg(countDistinct(col("w")).as("v"))
     val surprise = fx(log((col("c1") + col("v")).cast("double") /
@@ -581,22 +576,19 @@ object TextAnalysis {
     // join): without the cache each consumer re-runs the full
     // tokenize+explode+aggregate instance pass. The cached relation is
     // bigram-VOCABULARY-sized — orders of magnitude below the instance
-    // stream — and disk-spillable; eviction is the executor BlockManager
-    // LRU, the documented lifecycle for operator-internal caches (a
-    // standing pipeline would materialize the LM's count table to a
-    // table instead — it IS the trained model).
+    // stream — and disk-spillable (a standing pipeline would
+    // materialize the LM's count table to a table instead — it IS the
+    // trained model).
     // inst persists too (r10): it feeds BOTH the count-table rollup
     // (bc) and the scoring join — uncached, the scoring pass re-ran
     // the explode + instance aggregate (the plan's one big shuffle)
     // on every invocation even though bc was served from cache
-    val inst = OpCache.cached("lm.inst", spark, dir) {
-      base
-        .select(col("doc_id"), explode(wordShingles(col("toks"), 2)).as("b"))
-        .groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("k"))
-    }
-    val bc = OpCache.cached("lm.bc", spark, dir) {
-      inst.groupBy(col("b")).agg(sum(col("k")).as("c12"))
-    }
+    val inst = base
+      .select(col("doc_id"), explode(wordShingles(col("toks"), 2)).as("b"))
+      .groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("k"))
+      .transform(OpCache.shared("lm.inst"))
+    val bc = inst.groupBy(col("b")).agg(sum(col("k")).as("c12"))
+      .transform(OpCache.shared("lm.bc"))
     val uc = bc.select(substring_index(col("b"), " ", 1).as("w"), col("c12"))
       .groupBy(col("w")).agg(sum(col("c12")).as("c1"))
     val rates = bc.withColumn("w", substring_index(col("b"), " ", 1))
@@ -883,17 +875,11 @@ object TextAnalysis {
   private def bpeTrained(spark: SparkSession, dir: String)
       : (Seq[(Int, String, String, Long)], Map[String, Long], DataFrame) = {
     val fp = corpusFingerprint(spark, dir)
-    // bound (r11, advisor ask): ONE live trained model per JVM — a new
-    // corpus evicts the previous entry and unpersists its segmentation
-    // table, so sessions that visit many dirs don't strand one cached
-    // word table per corpus
-    val prior = bpeCache.get(fp)
-    if (prior == null && !bpeCache.isEmpty) {
-      bpeCache.forEach((_, v) =>
-        try v._3.unpersist() catch { case _: Exception => () })
-      bpeCache.clear()
-    }
-    bpeCache.computeIfAbsent(fp, _ => {
+    // ONE live trained model per JVM; its segmentation table lives in
+    // the "bpe.seg" slot, which a new corpus's training replaces — and
+    // which persists it again after an external clearCache()
+    if (!bpeCache.containsKey(fp)) bpeCache.clear()
+    val (merges, pid, segd) = bpeCache.computeIfAbsent(fp, _ => {
       import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
       val words = Tables.spread(spark,
           Tables.documents(spark, dir).select(col("doc_id"), col("text")))
@@ -929,7 +915,7 @@ object TextAnalysis {
       // cached doubled the resident footprint for a relation no
       // consumer reads again (every downstream join/aggregate starts
       // from segd)
-      val segd = cur.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val segd = cur.transform(OpCache.shared("bpe.seg"))
       segd.count()
       words.unpersist()
       val mergesList = merges.result()
@@ -940,6 +926,7 @@ object TextAnalysis {
       val pid = ids.groupBy(_._1).map { case (p, vs) => (p, vs.map(_._2).max) }
       (mergesList, pid, segd)
     })
+    (merges, pid, segd.transform(OpCache.shared("bpe.seg")))
   }
 
   /** The learned BPE merge table: one row per merge round —

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{OracleNum, Tables}
+import graft.{OpCache, OracleNum, Tables}
 import graft.functions.VectorFunctions._
 import graft.plans.ScoreTag
 import graft.functions.TextFunctions.hash60Sql
@@ -452,7 +452,7 @@ object VectorSearch {
 
   def annKnnGraph(spark: SparkSession, dir: String,
                   k: Int = KnnGraphK, radius: Int = KnnGraphRadius): DataFrame =
-    annKnnGraphFromVecs(embCorpus(spark, dir), k, radius, KnnBucketCap)
+    annKnnGraphFromVecs(embCorpus(spark, dir), k, radius, KnnBucketCap, "knn.graph")
 
   /** Graph build over a prepared (vec_id, emb) relation — split out so
     * specs can drive synthetic hot-bucket corpora through the exact
@@ -467,22 +467,21 @@ object VectorSearch {
     * base signature exploits).
     */
   private[graft] def annKnnGraphFromVecs(vecs: DataFrame, k: Int,
-                                         radius: Int, cap: Int): DataFrame = {
+                                         radius: Int, cap: Int,
+                                         slot: String): DataFrame = {
     val all = lshPlanes(64, AnnLshPlanes + KnnSaltPlanes)
     val masks = lshProbeMasks(AnnLshPlanes, radius)
     // THREE consumers read the signed corpus (candidate side, probe
     // side, bucket census) and signing is the expensive 16-plane
     // kernel pass — without the persist the plan signs the corpus
     // once PER consumer (audited: four full Scan+HyperplaneSig
-    // chains). Spillable storage level; entry lifecycle rides the
-    // session cache LRU like tfidfKeywords' shared subtree (at real
-    // scale the signed relation is the persisted LSH layout
-    // VectorIndex already materializes once per corpus, not a
-    // per-query cache).
+    // chains). Shared through the caller's slot (at real scale the
+    // signed relation is the persisted LSH layout VectorIndex already
+    // materializes once per corpus, not a per-query cache).
     val corpus = vecs
       .withColumn("bucket", lshBucket(col("emb"), all.take(AnnLshPlanes)))
       .withColumn("salt", lshBucket(col("emb"), all.drop(AnnLshPlanes)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(OpCache.shared(slot))
     val sizes = corpus.groupBy(col("bucket")).agg(count(lit(1)).as("bn"))
     val keyed = corpus.join(broadcast(sizes), Seq("bucket"))
       .withColumn("skey", when(col("bn") > cap, col("salt")).otherwise(lit(0L)))
@@ -535,11 +534,11 @@ object VectorSearch {
     val all = lshPlanes(64, AnnLshPlanes + KnnSaltPlanes)
     val masks = lshProbeMasks(AnnLshPlanes, radius)
     // two consumers of the signed candidate side (census + keyed) —
-    // persist, mirroring annKnnGraphFromVecs' audited plan
+    // shared, mirroring annKnnGraphFromVecs' audited plan
     val corpus = cands
       .withColumn("bucket", lshBucket(col("emb"), all.take(AnnLshPlanes)))
       .withColumn("salt", lshBucket(col("emb"), all.drop(AnnLshPlanes)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(OpCache.shared("knn.probes"))
     val sizes = corpus.groupBy(col("bucket")).agg(count(lit(1)).as("bn"))
     val keyed = corpus.join(broadcast(sizes), Seq("bucket"))
       .withColumn("skey", when(col("bn") > cap, col("salt")).otherwise(lit(0L)))

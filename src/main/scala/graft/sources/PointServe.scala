@@ -1197,7 +1197,8 @@ object PointServe {
     * [[refresh]] folds generations appended by
     * [[graft.streaming.EventStreams.knnGraphIndexStream]]: each new
     * node lands with its own neighbor list AND is back-linked from its
-    * neighbors (reverse edges make the new node REACHABLE — its
+    * neighbors and its nearest resident nodes (reverse edges make the
+    * new node REACHABLE — its
     * forward edges alone would leave it invisible to a walk that
     * starts elsewhere; add_document in the reference mutates both
     * directions for the same reason). Periodic
@@ -1246,7 +1247,10 @@ object PointServe {
 
     /** Fold generations appended since load/last refresh; new nodes
       * are inserted with their lists and back-linked from each listed
-      * neighbor. Returns rows picked up.
+      * neighbor AND from the nearest resident nodes a walk of the
+      * pre-refresh graph finds (the HNSW insert): a batch of novel
+      * nodes fills each other's lists, and links among themselves
+      * alone leave the whole batch unreachable. Returns rows picked up.
       */
     def refresh(): Int = {
       val (nodes, maxGen, _) = snap
@@ -1256,7 +1260,9 @@ object PointServe {
         val next = new GraphNodes(nodes)
         delta.foreach { case (id, emb, nbrs, _) =>
           next.put(id, (emb, nbrs))
-          nbrs.foreach { nb =>
+          // `query` still walks the pre-refresh snapshot
+          val resident = query(emb, k = math.max(nbrs.length, 1), excludeId = id).map(_.vecId)
+          (nbrs ++ resident).distinct.foreach { nb =>
             val t = next.get(nb)
             if (t != null && !t._2.contains(id)) next.put(nb, (t._1, t._2 :+ id))
           }

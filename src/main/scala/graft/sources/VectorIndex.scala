@@ -726,7 +726,7 @@ object VectorIndex {
     val reps = grouped.select(col("rep").as("vec_id"),
       toDouble(col("embedding")).as("emb"))
     val graph = VectorSearch.annKnnGraphFromVecs(reps, k,
-      VectorSearch.KnnGraphRadius, VectorSearch.KnnBucketCap)
+      VectorSearch.KnnGraphRadius, VectorSearch.KnnBucketCap, "index.knn")
     val fwd = graph.select(col("vec_id"), col("rank"), col("neighbor_id"))
     val rev = graph.select(col("neighbor_id").as("vec_id"),
       (col("rank") + k).as("rank"), col("vec_id").as("neighbor_id"))

@@ -15,6 +15,20 @@ class AnalyticsSpec extends GraftSuite {
     assert(keys == keys.sorted)
   }
 
+  test("Explain's scan counter reports q1_agg's lineitem bytes on disk") {
+    val onDisk = new java.io.File(sf, "lineitem.parquet").length
+    def drain(): Unit = org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
+    val q1 = graft.sources.StoreLayout.withRawStore(spark)(SparkEntry.queries("q1_agg")(spark, sf))
+    val scan = new Explain.ScanBytes
+    drain()
+    spark.listenerManager.register(scan)
+    try {
+      q1.write.format("noop").mode("overwrite").save()
+      drain()
+      assert(scan.bytes.get == onDisk)
+    } finally spark.listenerManager.unregister(scan)
+  }
+
   test("q3 returns top-10 revenue orders, descending") {
     val rows = Analytics.q3(spark, sf).collect()
     assert(rows.length <= 10 && rows.nonEmpty)

@@ -42,7 +42,7 @@ class DedupScaleSpec extends GraftSuite {
       (561L, words(base ^ (1L << 20) ^ (1L << 50))),
       (562L, words(base ^ (1L << 7) ^ (1L << 33) ^ (1L << 58))))
     val docs = (cluster ++ variants).toDF("doc_id", "words")
-    val pairs = Dedup.simhashPairsFromWords(docs, maxHamming = 3).collect()
+    val pairs = Dedup.simhashPairsFromWords(docs, maxHamming = 3, "spec.simhash").collect()
       .map(r => (r.getAs[Long]("id1"), r.getAs[Long]("id2"))).toSeq
     assert(pairs.nonEmpty, "over-cap buckets must still produce pairs")
     val ids = (0L until 563L).toSeq
@@ -62,7 +62,7 @@ class DedupScaleSpec extends GraftSuite {
       val f = base | (i << 15)
       Seq((2 * i, words(f)), (2 * i + 1, words(f)))
     }.toDF("doc_id", "words")
-    val got = Dedup.simhashPairsFromWords(docs, maxHamming = 3).collect()
+    val got = Dedup.simhashPairsFromWords(docs, maxHamming = 3, "spec.simhash").collect()
       .map(r => (r.getAs[Long]("id1"), r.getAs[Long]("id2"))).toSet
     (0L until 300L).foreach { i =>
       assert(got.contains((2 * i, 2 * i + 1)),

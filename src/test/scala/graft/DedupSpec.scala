@@ -325,11 +325,11 @@ class DedupSpec extends GraftSuite {
     assert(rows.head._2 > 0, "the sf0.001 corpus has injected near-dups")
   }
   test("pair relations are served from cache on repeat calls (r10 shared persist)") {
-    // verifiedPairs (raw) and indexedVerifiedPairs (band layout) own
-    // their persist, so every thresholded consumer (minhash, clusters,
-    // sweep, the curation flags) shares one banding + exact-verify
-    // lineage regardless of which ran first. A dropped persist shows
-    // up here as a cache miss on the second call.
+    // verifiedPairs (raw) and indexedVerifiedPairs (band layout) share
+    // their relation through a slot, so every thresholded consumer
+    // (minhash, clusters, sweep, the curation flags) reads one
+    // banding + exact-verify lineage regardless of which ran first. A
+    // dropped slot shows up here as a cache miss on the second call.
     import org.apache.spark.sql.functions.col
     spark.catalog.clearCache()
     Dedup.minhash(spark, sf).collect()           // populates the raw pair cache
@@ -342,23 +342,29 @@ class DedupSpec extends GraftSuite {
       .queryExecution.executedPlan.toString
     assert(idxPlan.contains("InMemoryTableScan"),
       s"indexed verified pairs not served from cache:\n${idxPlan.take(2000)}")
+    assert(Dedup.verifiedPairs(spark, sf) eq OpCache.slots("dedup.verifiedPairs"))
+    assert(Dedup.indexedVerifiedPairs(spark, sf) eq OpCache.slots("dedup.indexedVerifiedPairs"))
   }
 
   test("operator cache is bounded: a new corpus evicts the previous pair relation (r11)") {
-    // OpCache holds ONE live persisted relation per slot — visiting a
-    // second dir must unpersist the first dir's relation instead of
-    // stranding it for the session's lifetime (advisor r10 ask)
+    // an OpCache slot holds ONE live persisted relation, keyed by its
+    // plan — the same plan gets the registered relation back, and a
+    // second dir's plan unpersists the first dir's relation instead of
+    // stranding it for the session's lifetime
     import org.apache.spark.storage.StorageLevel
     val df1 = Dedup.verifiedPairs(spark, sf)
     assert(df1.storageLevel != StorageLevel.NONE)
+    assert(Dedup.verifiedPairs(spark, sf) eq df1)
     val df2 = Dedup.verifiedPairs(spark, "/root/testdata/sf0.01")
     assert(df1.storageLevel == StorageLevel.NONE,
       "previous corpus's pair relation must be unpersisted on corpus change")
     assert(df2.storageLevel != StorageLevel.NONE)
+    assert(OpCache.slots("dedup.verifiedPairs") eq df2)
     // switching back rebuilds (and evicts the sf0.01 relation) — the
     // slot never holds more than one corpus
     val df3 = Dedup.verifiedPairs(spark, sf)
     assert(df2.storageLevel == StorageLevel.NONE)
     assert(df3.storageLevel != StorageLevel.NONE)
+    assert(!(df3 eq df1) && (OpCache.slots("dedup.verifiedPairs") eq df3))
   }
 }

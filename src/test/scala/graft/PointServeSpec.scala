@@ -307,6 +307,35 @@ class PointServeSpec extends GraftSuite {
     assert(g.refresh() == 0)
   }
 
+  test("graph serve refresh reaches a batch of novel nodes that list only each other") {
+    // a batch of mutually near, novel vectors fills each other's
+    // neighbor lists; back-links along those lists alone leave the
+    // batch unreachable from every resident node, so refresh must also
+    // link each new node from its nearest resident nodes
+    val base = VectorIndex.knnGraphIndexReady(spark, sf)
+    val path = java.nio.file.Files.createTempDirectory("graph_novel").toString + "/graph"
+    spark.read.parquet(base).write.parquet(path)
+    val g = PointServe.loadGraphFrom(spark, path)
+    val maxId = queryVecs.keys.max
+    val rnd = new scala.util.Random(11)
+    val dir = Array.fill(queryVecs(7L).length)(rnd.nextGaussian())
+    val ids = (1L to 4L).map(maxId + _)
+    val vecs = ids.map(_ => dir.map(_ + 0.05 * rnd.nextGaussian()))
+    import spark.implicits._
+    ids.zip(vecs).map { case (id, v) => (id, v.toSeq, ids.filter(_ != id), 1L) }
+      .toDF("vec_id", "emb", "neighbors", "gen")
+      .select(col("vec_id"),
+        col("emb").cast(Tables.embeddings(spark, sf).schema("embedding").dataType)
+          .as("embedding"),
+        col("neighbors"), col("gen"))
+      .write.mode("append").parquet(path)
+    assert(g.refresh() == ids.size)
+    ids.zip(vecs).foreach { case (id, v) =>
+      val served = g.query(v, k = 1)
+      assert(served.map(_.vecId) == Seq(id), s"novel node $id unreachable: $served")
+    }
+  }
+
   test("point queries launch zero Spark jobs and beat the batch scheduling floor") {
     val lsh = PointServe.loadLsh(spark, sf)   // load cost: Spark jobs OK here
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)

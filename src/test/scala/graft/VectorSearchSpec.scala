@@ -206,7 +206,7 @@ class VectorSearchSpec extends GraftSuite {
     val vecs = (0 until n).map(i => (i.toLong, Array.fill(dim)(rnd.nextGaussian())))
     val (k, radius, cap) = (3, 1, 4)
     val out = VectorSearch
-      .annKnnGraphFromVecs(vecs.toDF("vec_id", "emb"), k, radius, cap)
+      .annKnnGraphFromVecs(vecs.toDF("vec_id", "emb"), k, radius, cap, "spec.knn")
       .collect()
       .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("rank"),
         r.getAs[Long]("neighbor_id"), r.getAs[Long]("score"))).toSeq
