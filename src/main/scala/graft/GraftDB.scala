@@ -86,11 +86,13 @@ final class GraftDB(val spark: SparkSession, val dir: String,
   /** Health snapshot (embedded.rs:100 HealthStatus / :356 health_check,
     * lib.rs:655 get_health_status): named checks with per-check detail
     * plus the rolled-up verdict. Checks are file-level probes — no
-    * table scan, so the call is safe on a 100 TB store. The optional
-    * index-debt probe ([[graft.sources.VectorIndex.shouldRebuild]]) is
-    * one aggregate over the footer-pruned `gen` column of each
-    * existing layout — a maintenance-scheduler cost, reported as
-    * detail (debt is a rebuild hint, not an outage).
+    * table scan, so the call is safe on a 100 TB store. The index
+    * detail names each built layout with its appended-generation
+    * count, read from the layout's `gen=` directory listing (no Spark
+    * job). The optional index-debt probe
+    * ([[graft.sources.VectorIndex.shouldRebuild]]) adds one row count
+    * per layout with appended generations — a maintenance-scheduler
+    * cost, reported as detail (debt is a rebuild hint, not an outage).
     */
   def healthCheck(checkIndexDebt: Boolean = false): GraftDB.HealthStatus = {
     def present(name: String) = new java.io.File(dir, name).exists()
@@ -110,7 +112,10 @@ final class GraftDB(val spark: SparkSession, val dir: String,
           config.index.rebuildAppendedFraction, config.index.rebuildMaxGenerations))
       GraftDB.CheckResult(ok = true,
         if (kinds.isEmpty) "no persisted layouts (built on first use)"
-        else s"layouts: ${kinds.mkString(",")}" +
+        else "layouts: " + kinds.map { k =>
+          val gens = VectorIndex.generations(spark, VectorIndex.indexPath(dir, k)).count(_ > 0L)
+          s"$k ($gens appended generations)"
+        }.mkString(", ") +
           (if (debt.nonEmpty) s"; rebuild recommended: ${debt.mkString(",")}" else ""))
     }
     val checks = Map("storage" -> storage, "embeddings" -> vectors,

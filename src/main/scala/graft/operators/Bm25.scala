@@ -206,13 +206,19 @@ object Bm25 {
     // rows are a no-op for the livePostings anti-join) and then lands
     // the postings once; postings-first would let a crash strand a
     // generation whose superseded predecessors are never killed.
-    docs.select(col("doc_id"), lit(gen - 1L).as("del_gen"))
-      .write.mode("append").saveAsTable(deleteLogTable(tableName))
-    postingRows(docs, gen)
-      .write.mode("append")
-      .bucketBy(buckets, "term")
-      .sortBy("term")
-      .saveAsTable(tableName)
+    // persisted for the two writes: each would otherwise scan `docs`
+    // again — a stream sink's micro-batch read twice
+    val batch = docs.select(col("doc_id"), col("text"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      batch.select(col("doc_id"), lit(gen - 1L).as("del_gen"))
+        .write.mode("append").saveAsTable(deleteLogTable(tableName))
+      postingRows(batch, gen)
+        .write.mode("append")
+        .bucketBy(buckets, "term")
+        .sortBy("term")
+        .saveAsTable(tableName)
+    } finally batch.unpersist()
   }
 
   /** remove_document (src/sparse.rs:110): append tombstones killing

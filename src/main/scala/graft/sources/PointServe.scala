@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.operators.VectorSearch
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** In-JVM point-query serving over the persisted ANN layouts — the
@@ -161,10 +161,9 @@ object PointServe {
     *
     * [[refresh]] catches the served snapshot up with streaming
     * maintenance ([[graft.streaming.EventStreams.vectorIndexStream]]
-    * appends generation-stamped rows into the same layout): it reads
-    * ONLY rows beyond the loaded generation (the `gen` predicate
-    * prunes appended files via footer stats — base-build row groups
-    * are constant gen 0) and swaps in a new snapshot. Queries read a
+    * adds `gen=<g>` directories to the same layout): it lists the
+    * layout root and reads ONLY the generation directories above the
+    * loaded one, then swaps in a new snapshot. Queries read a
     * @volatile immutable snapshot, so a concurrent refresh is
     * invisible mid-query; refresh itself is single-writer (the
     * reference's sequential add_document contract).
@@ -223,26 +222,31 @@ object PointServe {
     }
   }
 
+  /** Rows of a layout's generations above `afterGen` (every
+    * generation with None), projected by `select` and decoded by
+    * `decode`: the shared body of the tiers' load and refresh reads.
+    * No generation directory above `afterGen` — no rows, no Spark job.
+    */
+  private def genRows[T: scala.reflect.ClassTag](spark: SparkSession, path: String,
+                                                 afterGen: Option[Long])
+                                                (select: DataFrame => DataFrame)
+                                                (decode: Row => T): Array[T] =
+    VectorIndex.readGenerations(spark, path, afterGen)
+      .fold(Array.empty[T])(l => select(l).collect().map(decode))
+
   /** (bucket, vec_id, emb, gen) rows, optionally only beyond a
-    * generation — the gen filter reaches the parquet footer stats, so
-    * a delta read touches only appended files. A layout predating the
-    * `gen` column reads as gen 0 (nothing to delta-refresh). A
-    * `shard` restriction filters on the partition column, so a
-    * shard's load (and every refresh) lists and reads ONLY its own
-    * bucket directories.
+    * generation (only those `gen=` directories are read). A `shard`
+    * restriction filters on the bucket partition column: the listing
+    * still covers every directory, and only the read is pruned to the
+    * shard's buckets.
     */
   private def readLshRows(spark: SparkSession, path: String,
                           afterGen: Option[Long],
-                          shard: Option[Set[Int]] = None): Array[(Int, Long, Array[Double], Long)] = {
-    val layout = spark.read.parquet(path)
-    val genCol = if (layout.columns.contains("gen")) col("gen") else lit(0L)
-    val sharded = shard.fold(layout)(s =>
-      layout.filter(col("bucket").isin(s.toSeq: _*)))
-    val base = sharded.select(col("vec_id"),
-      col("embedding").cast("array<double>"), col("bucket"), genCol.as("gen"))
-    afterGen.fold(base)(g => base.filter(col("gen") > g)).collect()
-      .map(r => (r.getInt(2), r.getLong(0), r.getSeq[Double](1).toArray, r.getLong(3)))
-  }
+                          shard: Option[Set[Int]] = None): Array[(Int, Long, Array[Double], Long)] =
+    genRows(spark, path, afterGen) { l =>
+      shard.fold(l)(s => l.filter(col("bucket").isin(s.toSeq: _*)))
+        .select(col("vec_id"), col("embedding").cast("array<double>"), col("bucket"), col("gen"))
+    }(r => (r.getInt(2), r.getLong(0), r.getSeq[Double](1).toArray, r.getLong(3)))
 
   /** Scatter-gather merge for sharded serving: each shard answers
     * from its own bucket subset with the same ranking; the gather
@@ -310,8 +314,8 @@ object PointServe {
     * cells, (score DESC, vec_id ASC) top-k. [[refresh]] folds
     * generations appended by
     * [[graft.streaming.EventStreams.ivfIndexStream]] into the served
-    * snapshot — same gen-pruned delta read and volatile-swap contract
-    * as [[Lsh.refresh]].
+    * snapshot — same generation-directory delta read and volatile-swap
+    * contract as [[Lsh.refresh]].
     */
   final class Ivf private[PointServe] (
       spark: SparkSession, path: String,
@@ -372,19 +376,13 @@ object PointServe {
   }
 
   /** (cell, vec_id, emb, gen) rows, optionally only beyond a
-    * generation — the gen predicate prunes appended files via footer
-    * stats, same as [[readLshRows]]. A layout predating the `gen`
-    * column reads as gen 0.
+    * generation — same delta read as [[readLshRows]].
     */
   private def readIvfRows(spark: SparkSession, path: String,
-                          afterGen: Option[Long]): Array[(Int, Long, Array[Double], Long)] = {
-    val layout = spark.read.parquet(path)
-    val genCol = if (layout.columns.contains("gen")) col("gen") else lit(0L)
-    val base = layout.select(col("vec_id"),
-      col("embedding").cast("array<double>"), col("cell"), genCol.as("gen"))
-    afterGen.fold(base)(g => base.filter(col("gen") > g)).collect()
-      .map(r => (r.getInt(2), r.getLong(0), r.getSeq[Double](1).toArray, r.getLong(3)))
-  }
+                          afterGen: Option[Long]): Array[(Int, Long, Array[Double], Long)] =
+    genRows(spark, path, afterGen)(_.select(col("vec_id"),
+      col("embedding").cast("array<double>"), col("cell"), col("gen")))(
+      r => (r.getInt(2), r.getLong(0), r.getSeq[Double](1).toArray, r.getLong(3)))
 
   def loadIvf(spark: SparkSession, dir: String): Ivf =
     loadIvfFrom(spark, VectorIndex.ivfIndexReady(spark, dir))
@@ -453,8 +451,9 @@ object PointServe {
 
     /** Fold code rows appended by
       * [[graft.streaming.EventStreams.pqIndexStream]] since load/last
-      * refresh into the snapshot (same gen-pruned delta read and
-      * volatile-swap contract as [[Lsh.refresh]]); returns rows added.
+      * refresh into the snapshot (same generation-directory delta read
+      * and volatile-swap contract as [[Lsh.refresh]]); returns rows
+      * added.
       */
     def refresh(): Int = {
       val (ids, codes, maxGen) = snap
@@ -474,12 +473,9 @@ object PointServe {
   private def readPqRows(spark: SparkSession, path: String,
                          afterGen: Option[Long]): Array[(Long, Array[Int], Long)] = {
     import VectorSearch.PqM
-    val layout = spark.read.parquet(path)
-    val genCol = if (layout.columns.contains("gen")) col("gen") else lit(0L)
-    val base = layout.select(col("vec_id") +: genCol.as("gen") +:
-      (0 until PqM).map(m => col(s"code$m")): _*)
-    afterGen.fold(base)(g => base.filter(col("gen") > g)).collect()
-      .map(r => (r.getLong(0), Array.tabulate(PqM)(m => r.getInt(m + 2)), r.getLong(1)))
+    genRows(spark, path, afterGen)(_.select(col("vec_id") +: col("gen") +:
+      (0 until PqM).map(m => col(s"code$m")): _*))(
+      r => (r.getLong(0), Array.tabulate(PqM)(m => r.getInt(m + 2)), r.getLong(1)))
   }
 
   /** IVF-PQ point index — the billion-scale serving shape (FAISS's
@@ -580,19 +576,14 @@ object PointServe {
   }
 
   /** (cell, vec_id, codes, gen) rows, optionally only beyond a
-    * generation — same footer-stat-pruned delta contract as
-    * [[readIvfRows]].
+    * generation — same delta read as [[readLshRows]].
     */
   private def readIvfPqRows(spark: SparkSession, path: String,
                             afterGen: Option[Long]): Array[(Int, Long, Array[Int], Long)] = {
     import VectorSearch.PqM
-    val layout = spark.read.parquet(path)
-    val genCol = if (layout.columns.contains("gen")) col("gen") else lit(0L)
-    val base = layout.select(col("vec_id") +: col("cell") +: genCol.as("gen") +:
-      (0 until PqM).map(m => col(s"code$m")): _*)
-    afterGen.fold(base)(g => base.filter(col("gen") > g)).collect()
-      .map(r => (r.getInt(1), r.getLong(0),
-        Array.tabulate(PqM)(m => r.getInt(m + 3)), r.getLong(2)))
+    genRows(spark, path, afterGen)(_.select(col("vec_id") +: col("cell") +: col("gen") +:
+      (0 until PqM).map(m => col(s"code$m")): _*))(
+      r => (r.getInt(1), r.getLong(0), Array.tabulate(PqM)(m => r.getInt(m + 3)), r.getLong(2)))
   }
 
   /** Load the IVF-PQ layout into memory (builds it first if absent).
@@ -1310,20 +1301,14 @@ object PointServe {
   }
 
   /** (vec_id, emb, neighbors, gen) rows, optionally only beyond a
-    * generation — same footer-stat-pruned delta contract as
-    * [[readLshRows]].
+    * generation — same delta read as [[readLshRows]].
     */
   private def readGraphRows(spark: SparkSession, path: String,
                             afterGen: Option[Long])
-      : Array[(Long, Array[Double], Array[Long], Long)] = {
-    val layout = spark.read.parquet(path)
-    val genCol = if (layout.columns.contains("gen")) col("gen") else lit(0L)
-    val base = layout.select(col("vec_id"),
-      col("embedding").cast("array<double>"), col("neighbors"), genCol.as("gen"))
-    afterGen.fold(base)(g => base.filter(col("gen") > g)).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray,
-        r.getSeq[Long](2).toArray, r.getLong(3)))
-  }
+      : Array[(Long, Array[Double], Array[Long], Long)] =
+    genRows(spark, path, afterGen)(_.select(col("vec_id"),
+      col("embedding").cast("array<double>"), col("neighbors"), col("gen")))(
+      r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getSeq[Long](2).toArray, r.getLong(3)))
 
   /** Load the graph layout into memory (builds it first if absent).
     * One Spark job here; zero afterwards.
@@ -1385,7 +1370,8 @@ object PointServe {
     * sketches its buckets reference.
     *
     * [[refresh]] folds generations appended by the streaming upkeep
-    * into the served snapshot (gen-pruned delta read, volatile swap).
+    * into the served snapshot (generation-directory delta read,
+    * volatile swap).
     * The loaded generation tracks the BAND side — the stream's commit
     * point — so a refresh racing the upkeep's two appends can at worst
     * re-read next round a sketch whose bands hadn't landed yet
@@ -1506,23 +1492,18 @@ object PointServe {
   }
 
   /** (band<<60 | band_key, doc_id, gen) rows, optionally only beyond
-    * a generation — same footer-stat delta contract as
-    * [[readLshRows]]. A `shard` restriction filters on the layout's
-    * `bkt` partition column, so a shard's load (and every refresh)
-    * lists and reads ONLY its own sub-bucket directories.
+    * a generation — same delta read as [[readLshRows]]. A `shard`
+    * restriction filters on the layout's `bkt` partition column: the
+    * listing covers every directory, and only the read is pruned to
+    * the shard's sub-buckets.
     */
   private def readBandRows(spark: SparkSession, path: String,
                            afterGen: Option[Long],
-                           shard: Option[Set[Int]] = None): Array[(Long, Long, Long)] = {
-    val layout = spark.read.parquet(path)
-    val genCol = if (layout.columns.contains("gen")) col("gen") else lit(0L)
-    val sharded = shard.fold(layout)(s =>
-      layout.filter(col("bkt").isin(s.toSeq: _*)))
-    val base = sharded.select(col("band").cast("long"), col("band_key"),
-      col("doc_id"), genCol.as("gen"))
-    afterGen.fold(base)(g => base.filter(col("gen") > g)).collect()
-      .map(r => ((r.getLong(0) << 60) | r.getLong(1), r.getLong(2), r.getLong(3)))
-  }
+                           shard: Option[Set[Int]] = None): Array[(Long, Long, Long)] =
+    genRows(spark, path, afterGen) { l =>
+      shard.fold(l)(s => l.filter(col("bkt").isin(s.toSeq: _*)))
+        .select(col("band").cast("long"), col("band_key"), col("doc_id"), col("gen"))
+    }(r => ((r.getLong(0) << 60) | r.getLong(1), r.getLong(2), r.getLong(3)))
 
   /** (doc_id, shingle sketch, gen) rows from the companion `_sh`
     * relation. `forDocs` restricts to the given ids (a shard loads
@@ -1531,22 +1512,19 @@ object PointServe {
     */
   private def readSketchRows(spark: SparkSession, path: String,
                              afterGen: Option[Long],
-                             forDocs: Option[Array[Long]] = None): Array[(Long, Array[Long], Long)] = {
-    val layout = spark.read.parquet(path)
-    val genCol = if (layout.columns.contains("gen")) col("gen") else lit(0L)
-    val base = layout.select(col("doc_id"), col("sh"), genCol.as("gen"))
-    val restricted = forDocs.fold(base) { ids =>
-      val idRel = spark.createDataFrame(
-        spark.sparkContext.parallelize(ids.distinct.toSeq.map(Tuple1(_)), 1)
-          .map(t => org.apache.spark.sql.Row(t._1)),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType, nullable = false))))
-      base.join(broadcast(idRel), Seq("doc_id"), "left_semi")
-    }
-    afterGen.fold(restricted)(g => restricted.filter(col("gen") > g)).collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray, r.getLong(2)))
-  }
+                             forDocs: Option[Array[Long]] = None): Array[(Long, Array[Long], Long)] =
+    genRows(spark, path, afterGen) { l =>
+      val base = l.select(col("doc_id"), col("sh"), col("gen"))
+      forDocs.fold(base) { ids =>
+        val idRel = spark.createDataFrame(
+          spark.sparkContext.parallelize(ids.distinct.toSeq.map(Tuple1(_)), 1)
+            .map(t => Row(t._1)),
+          org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("doc_id",
+              org.apache.spark.sql.types.LongType, nullable = false))))
+        base.join(broadcast(idRel), Seq("doc_id"), "left_semi")
+      }
+    }(r => (r.getLong(0), r.getSeq[Long](1).toArray, r.getLong(2)))
 
   /** Scatter-gather merge for shard-scattered dedup probes: bucket
     * membership partitions by the layout's (band, bkt) directory, a

@@ -45,6 +45,13 @@ import org.apache.spark.sql.functions._
   * a 100 TB build would remap to a dense 0..nlist-1 int at index-build
   * time anyway.
   *
+  * Every maintained layout keeps each generation in its own outermost
+  * `gen=<g>` directory ([[writeGeneration]] / [[readGenerations]]): a
+  * base build writes `gen=0/…`, each streaming micro-batch adds
+  * `gen=<g>/…` beside it. A replayed batch is found by one directory
+  * check, and a serving tier's refresh reads only the directories
+  * above its snapshot's generation.
+  *
   * At demo scale the layout is slower than the scan-side twin: a few
   * thousand vectors fan out into hundreds of tiny per-bucket files, so
   * file listing costs more than the prune saves. The layout targets
@@ -100,23 +107,74 @@ object VectorIndex {
       .agg(bookCols.head, bookCols.tail: _*)
   }
 
-  /** Build (or rebuild, mode=overwrite) the LSH-partitioned layout.
-    * `gen` 0 marks base-build rows; streaming maintenance
-    * ([[graft.streaming.EventStreams.vectorIndexStream]]) appends
-    * later generations into the same bucket directories.
+  /** Build (or rebuild, mode=overwrite) the LSH-partitioned layout as
+    * generation 0; streaming maintenance
+    * ([[graft.streaming.EventStreams.vectorIndexStream]]) adds later
+    * generations beside it, each split into the same bucket keys.
     */
   def buildLshIndex(spark: SparkSession, dir: String, path: String): Unit = {
     val planes = VectorSearch.lshPlanes(64, VectorSearch.AnnLshPlanes)
-    Tables.embeddings(spark, dir)
-      .withColumn("gen", lit(0L))
+    writeGeneration(Tables.embeddings(spark, dir)
       .withColumn("bucket",
         VectorSearch.lshBucket(toDouble(col("embedding")), planes).cast("int"))
       // co-locate each bucket before the partitioned write: one file
       // per bucket directory instead of one per (shuffle partition x
       // bucket) — at scale use repartition(n, col) so a hot bucket
       // still splits across tasks
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
+      .repartition(col("bucket")), path, 0L, "bucket")
+  }
+
+  private def layoutFs(spark: SparkSession, path: String) = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+  }
+
+  /** The layout's generations, ascending, from one listing of its root
+    * through the session's Hadoop FileSystem — no Spark job. A missing
+    * layout has none.
+    */
+  def generations(spark: SparkSession, path: String): Seq[Long] = {
+    val (fs, root) = layoutFs(spark, path)
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).toSeq.map(_.getPath.getName)
+      .collect { case n if n.startsWith("gen=") => n.stripPrefix("gen=").toLong }
+      .sorted
+  }
+
+  /** Has generation `gen` landed in the layout? One directory check on
+    * the driver: the replay probe of every upkeep sink. A job that
+    * crashed mid-commit leaves its directory present, so a partly
+    * committed generation counts as landed.
+    */
+  def hasGeneration(spark: SparkSession, path: String, gen: Long): Boolean = {
+    val (fs, root) = layoutFs(spark, path)
+    fs.exists(new org.apache.hadoop.fs.Path(root, s"gen=$gen"))
+  }
+
+  /** The one generation writer of every maintained layout: `rows` land
+    * under `<path>/gen=<gen>/`, split beneath by the layout's own
+    * partition `keys`. Generation 0 is the base build and replaces the
+    * layout; a later generation adds its directory beside the others.
+    */
+  def writeGeneration(rows: DataFrame, path: String, gen: Long, keys: String*): Unit =
+    rows.withColumn("gen", lit(gen))
+      .write.mode(if (gen == 0L) "overwrite" else "append")
+      .partitionBy("gen" +: keys: _*).parquet(path)
+
+  /** The one generation reader: the layout's rows with `gen` as BIGINT
+    * (partition inference reads the directory values back as INT).
+    * With `afterGen` only the `gen=` directories above it are listed
+    * and read, under `basePath` = the layout root so `gen` and the
+    * layout's keys stay columns. No generation to read: None, and no
+    * Spark job.
+    */
+  def readGenerations(spark: SparkSession, path: String,
+                      afterGen: Option[Long] = None): Option[DataFrame] = {
+    val gens = generations(spark, path).filter(g => afterGen.forall(g > _))
+    if (gens.isEmpty) None
+    else Some(spark.read.option("basePath", path)
+      .parquet(gens.map(g => s"$path/gen=$g"): _*)
+      .withColumn("gen", col("gen").cast("long")))
   }
 
   /** Multi-probe LSH ANN served from the persisted layout: identical
@@ -176,15 +234,13 @@ object VectorIndex {
       .select(col("vec_id"), col("embedding"), toDouble(col("embedding")).as("emb"))
     val (coarseArr, fine, fineByCoarse) = ivfRouting(corpus, stride)
     fine.write.mode("overwrite").parquet(path + "_centroids")
-    corpus.crossJoin(broadcast(coarseArr))
+    // generation 0; ivfIndexStream adds later generations keyed by cell
+    writeGeneration(corpus.crossJoin(broadcast(coarseArr))
       .withColumn("ccid", nearestCentroidCol(col("emb"), col("carr")))
       .join(broadcast(fineByCoarse), Seq("ccid"))
-      // gen 0 = base build; ivfIndexStream appends later generations
-      // into the same cell directories
-      .select(col("vec_id"), col("embedding"), lit(0L).as("gen"),
+      .select(col("vec_id"), col("embedding"),
         nearestCentroidCol(col("emb"), col("fcents")).cast("int").as("cell"))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
+      .repartition(col("cell")), path, 0L, "cell")
   }
 
   /** IVF ANN served from the persisted layout: identical results to
@@ -271,11 +327,11 @@ object VectorIndex {
       slice(e, m * PqSubDim + 1, PqSubDim)
     val books = pqCodebook(corpus)
     books.coalesce(1).write.mode("overwrite").parquet(path + "_books")
-    // gen 0 = base build; pqIndexStream appends later generations
-    corpus.crossJoin(broadcast(books))
-      .select(col("vec_id") +: lit(0L).as("gen") +: (0 until PqM).map(m =>
-        nearestCentroidCol(sub(m, col("emb")), col(s"book$m")).cast("int").as(s"code$m")): _*)
-      .write.mode("overwrite").parquet(path)
+    // generation 0; pqIndexStream adds later generations
+    writeGeneration(corpus.crossJoin(broadcast(books))
+      .select(col("vec_id") +: (0 until PqM).map(m =>
+        nearestCentroidCol(sub(m, col("emb")), col(s"book$m")).cast("int").as(s"code$m")): _*),
+      path, 0L)
   }
 
   /** PQ-ADC ANN served from the persisted codes layout: identical
@@ -335,7 +391,9 @@ object VectorIndex {
     val srcTable =
       if (kind == "minhash") "documents.parquet" else "embeddings.parquet"
     val (sz, mt) = stat(new java.io.File(dir, srcTable))
-    System.getProperty("java.io.tmpdir") + "/graft_vindex_" + kind + "_" +
+    // `gen_`: generation-directory format; a layout written before it
+    // carries another name and is never read
+    System.getProperty("java.io.tmpdir") + "/graft_vindex_" + kind + "_gen_" +
       dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" + sz + "_" + mt
   }
 
@@ -427,24 +485,26 @@ object VectorIndex {
     * bucket directories into per-batch files, and PQ appends are coded
     * against an aging codebook), or when distinct appended generations
     * exceed `maxGenerations` (file count grows per generation
-    * regardless of row mass). The decision is one aggregate over the
-    * pruned `gen` column only — footer min/max stats skip base-build
-    * row groups (constant 0) — a maintenance-scheduler job, never a
-    * query-path cost. A layout with no `gen` column predates
-    * maintenance entirely: all base, nothing to fold.
+    * regardless of row mass). The generation count is the layout's
+    * directory listing; only a layout with appended generations pays
+    * one row count over its partition column — a maintenance-scheduler
+    * job, never a query-path cost.
     */
   def shouldRebuild(spark: SparkSession, path: String,
                     maxAppendedFraction: Double = 0.2,
                     maxGenerations: Int = 64): Boolean = {
-    val layout = spark.read.parquet(path)
-    layout.columns.contains("gen") && {
-      val r = layout.agg(
-        count(when(col("gen") === 0L, 1)).as("base"),
-        count(when(col("gen") > 0L, 1)).as("appended"),
-        countDistinct(when(col("gen") > 0L, col("gen"))).as("gens")).head
-      r.getLong(1) > maxAppendedFraction * math.max(r.getLong(0), 1L) ||
-        r.getLong(2) > maxGenerations
+    val gens = generations(spark, path).count(_ > 0L)
+    gens > maxGenerations || gens > 0 && {
+      val (base, appended) = rowCounts(readGenerations(spark, path).get)
+      appended > maxAppendedFraction * math.max(base, 1L)
     }
+  }
+
+  /** (generation-0 rows, appended rows) of a read layout. */
+  private def rowCounts(layout: DataFrame): (Long, Long) = {
+    val r = layout.agg(count(when(col("gen") === 0L, 1)),
+      count(when(col("gen") > 0L, 1))).head
+    (r.getLong(0), r.getLong(1))
   }
 
   /** Index observability snapshot (query.rs:271 get_index_stats /
@@ -466,28 +526,21 @@ object VectorIndex {
     val path = indexPath(dir, kind)
     if (!exists(spark, path))
       return IndexStats(kind, isBuilt = false, 0L, 0, 0L, 0L, 0L)
-    val layout = spark.read.parquet(path)
-    val hasGen = layout.columns.contains("gen")
-    val r = layout.agg(
-      count(lit(1)).as("n"),
-      (if (hasGen) count(when(col("gen") > 0L, 1)) else lit(0L)).as("appended"),
-      (if (hasGen) countDistinct(when(col("gen") > 0L, col("gen"))) else lit(0L))
-        .as("gens")).head
-    val dim = kind match {
-      // codes layouts carry no embedding column: report subspace count
-      case "pq" | "ivfpq" => layout.columns.count(_.startsWith("code"))
-      // band rows carry no vector either: report the signature width
-      // the bands are derived from
-      case "minhash" => graft.operators.Dedup.NumHashes
+    val gens = generations(spark, path).count(_ > 0L).toLong
+    // a built-but-empty layout has no generation directory: no rows
+    val layout = readGenerations(spark, path)
+    val (base, appended) = layout.fold((0L, 0L))(rowCounts)
+    val dim = (kind, layout) match {
+      // band rows carry no vector: report the signature width the
+      // bands are derived from
+      case ("minhash", _) => graft.operators.Dedup.NumHashes
       // an edge relation has no vector column at all
-      case "knn_edges" => 0
-      case _ =>
-        // head(1) not head(): a built-but-empty layout (zero rows,
-        // _SUCCESS present) must report dimension 0, not crash the
-        // observability path with NoSuchElementException.
-        val vecCol = Seq("embedding", "emb").find(layout.columns.contains).get
-        layout.select(size(col(vecCol))).head(1).headOption
-          .map(_.getInt(0)).getOrElse(0)
+      case ("knn_edges", _) | (_, None) => 0
+      // codes layouts carry no embedding column: report subspace count
+      case ("pq" | "ivfpq", Some(l)) => l.columns.count(_.startsWith("code"))
+      case (_, Some(l)) =>
+        val vecCol = Seq("embedding", "emb").find(l.columns.contains).get
+        l.select(size(col(vecCol))).head(1).headOption.map(_.getInt(0)).getOrElse(0)
     }
     val diskBytes = {
       def walk(f: java.io.File): Long =
@@ -496,8 +549,8 @@ object VectorIndex {
         else 0L
       walk(new java.io.File(path))
     }
-    IndexStats(kind, isBuilt = true, r.getLong(0), dim, diskBytes,
-      r.getLong(1), r.getLong(2))
+    IndexStats(kind, isBuilt = true, base + appended, dim, diskBytes,
+      appended, gens)
   }
 
   /** Conditional rebuild (index_optimizer.rs should_optimize →
@@ -570,17 +623,16 @@ object VectorIndex {
     fine.write.mode("overwrite").parquet(path + "_centroids")
     val books = pqCodebook(corpus)
     books.coalesce(1).write.mode("overwrite").parquet(path + "_books")
-    corpus.crossJoin(broadcast(coarseArr))
+    writeGeneration(corpus.crossJoin(broadcast(coarseArr))
       .withColumn("ccid", nearestCentroidCol(col("emb"), col("carr")))
       .join(broadcast(fineByCoarse), Seq("ccid"))
       .withColumn("cell", nearestCentroidCol(col("emb"), col("fcents")).cast("int"))
       .crossJoin(broadcast(books))
-      .select(col("vec_id") +: lit(0L).as("gen") +: col("cell") +:
+      .select(col("vec_id") +: col("cell") +:
         (0 until PqM).map(m =>
           nearestCentroidCol(sub(m, col("emb")), col(s"book$m")).cast("int")
             .as(s"code$m")): _*)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
+      .repartition(col("cell")), path, 0L, "cell")
   }
 
   def ivfPqIndexReady(spark: SparkSession, dir: String): String = {
@@ -666,8 +718,8 @@ object VectorIndex {
 
   /** Build (or rebuild) the kNN-GRAPH layout — the persisted form of
     * [[VectorSearch.annKnnGraph]]'s neighbor lists, one row per
-    * vector: (vec_id, embedding, neighbors array<long> nearest-first,
-    * gen). This is the on-disk shape of the reference's graph index
+    * vector: (vec_id, embedding, neighbors array<long> nearest-first)
+    * under its generation directory. This is the on-disk shape of the reference's graph index
     * (index.rs:95-260 builds an HNSW adjacency and mmaps it back):
     * [[PointServe.Graph]] loads it for zero-Spark-job greedy search,
     * and [[graft.streaming.EventStreams.knnGraphIndexStream]] appends
@@ -743,7 +795,7 @@ object VectorIndex {
       .select(col("vec_id"), col("rep"), col("embedding"))
     val chained = members.withColumn("next",
       lead(col("vec_id"), 1).over(Window.partitionBy(col("rep")).orderBy(col("vec_id"))))
-    chained.join(adj.hint("shuffle_hash"), Seq("rep"), "left")
+    writeGeneration(chained.join(adj.hint("shuffle_hash"), Seq("rep"), "left")
       .withColumn("rep_nbrs",
         coalesce(col("rep_nbrs"), expr("array()").cast("array<bigint>")))
       .withColumn("neighbors", expr(
@@ -753,8 +805,7 @@ object VectorIndex {
           |  CASE WHEN next IS NULL THEN CAST(array() AS array<bigint>) ELSE array(next) END,
           |  CASE WHEN vec_id = rep THEN CAST(array() AS array<bigint>) ELSE array(rep) END,
           |  rep_nbrs)), x -> x != vec_id)""".stripMargin))
-      .select(col("vec_id"), col("embedding"), col("neighbors"), lit(0L).as("gen"))
-      .write.mode("overwrite").parquet(path)
+      .select(col("vec_id"), col("embedding"), col("neighbors")), path, 0L)
   }
 
   def knnGraphIndexReady(spark: SparkSession, dir: String): String = {
@@ -774,9 +825,7 @@ object VectorIndex {
     * for reproducing the batch edge relation bit-for-bit.
     */
   def buildKnnEdgesIndex(spark: SparkSession, dir: String, path: String): Unit =
-    VectorSearch.annKnnGraph(spark, dir)
-      .withColumn("gen", lit(0L))
-      .write.mode("overwrite").parquet(path)
+    writeGeneration(VectorSearch.annKnnGraph(spark, dir), path, 0L)
 
   def knnEdgesReady(spark: SparkSession, dir: String): String = {
     val path = indexPath(dir, "knn_edges")
@@ -803,9 +852,9 @@ object VectorIndex {
     * probe and streaming upkeep read it back, so they can never band
     * differently than the build did — and the doc-level shingle
     * sketch is saved alongside as `<path>_sh` so candidate
-    * verification never re-reads corpus text. `gen` 0 marks
-    * base-build rows; [[graft.streaming.EventStreams.minhashIndexStream]]
-    * appends later generations.
+    * verification never re-reads corpus text. Both are written as
+    * generation 0; [[graft.streaming.EventStreams.minhashIndexStream]]
+    * adds later generations.
     */
   def buildMinhashIndex(spark: SparkSession, dir: String, path: String): Unit = {
     import graft.operators.Dedup
@@ -814,9 +863,8 @@ object VectorIndex {
       val bktMod = Dedup.bandSubBuckets(docs.count()).toLong
       spark.range(1).select(lit(bktMod).as("bkt_mod"))
         .write.mode("overwrite").parquet(path + "_meta")
-      Dedup.minhashBands(docs)
+      writeGeneration(Dedup.minhashBands(docs)
         .withColumn("bkt", pmod(col("band_key"), lit(bktMod)).cast("int"))
-        .withColumn("gen", lit(0L))
         // co-locate each directory before the partitioned write: one
         // file per (band, bkt) instead of one per (task x directory);
         // cluster by band_key within each file so parquet row-group
@@ -824,10 +872,9 @@ object VectorIndex {
         // (batch keys covering every (band, bkt)) still skips
         // row-groups outside its band_key range
         .repartition(col("band"), col("bkt"))
-        .sortWithinPartitions(col("band"), col("bkt"), col("band_key"))
-        .write.mode("overwrite").partitionBy("band", "bkt").parquet(path)
-      docs.select(col("doc_id"), col("sh"), lit(0L).as("gen"))
-        .write.mode("overwrite").parquet(path + "_sh")
+        .sortWithinPartitions(col("band"), col("bkt"), col("band_key")),
+        path, 0L, "band", "bkt")
+      writeGeneration(docs.select(col("doc_id"), col("sh")), path + "_sh", 0L)
     } finally docs.unpersist()
   }
 

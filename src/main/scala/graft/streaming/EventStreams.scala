@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.VectorIndex.{hasGeneration, writeGeneration}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -176,20 +177,6 @@ object EventStreams {
       .collect().map(_.getLong(0)).sorted
   }
 
-  /** Replay probe shared by the index-maintenance sinks: has
-    * generation `gen` already landed in the layout at `path`? Reads a
-    * gen-only projection with the equality pushed to the scan — footer
-    * min/max stats prune the base build (gen is constant 0 there) and
-    * every earlier generation's files, so the per-batch probe costs
-    * file listing + a handful of row groups, not a full-table read. A
-    * layout built before the `gen` column existed is all base rows:
-    * treated as gen-0, so no appended generation can be present
-    * (instead of an AnalysisException on the missing column).
-    */
-  private def generationPresent(layout: DataFrame, gen: Long): Boolean =
-    layout.columns.contains("gen") &&
-      !layout.select(col("gen")).filter(col("gen") === gen).isEmpty
-
   /** Streaming ingest → incremental BM25 index maintenance: each
     * micro-batch of (doc_id, text) rows appends its postings to the
     * bucketed posting table at generation baseGen + batchId via
@@ -215,7 +202,9 @@ object EventStreams {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val spark = batch.sparkSession
         val gen = baseGen + batchId
-        if (!generationPresent(spark.table(tableName), gen))
+        // a catalog table, not a generation-directory layout: the
+        // replay probe filters its gen column
+        if (spark.table(tableName).filter(col("gen") === gen).isEmpty)
           graft.operators.Bm25.addDocuments(
             spark, tableName,
             batch.select(col("doc_id"), col("text")), gen = gen)
@@ -230,8 +219,8 @@ object EventStreams {
     * directories probes already dynamic-prune to, so serving needs no
     * rebuild and no reader coordination (parquet appends are
     * job-atomic new files). Same effectively-once contract as
-    * [[indexStream]]: batchId-derived generations, replays detected
-    * by generation presence and skipped.
+    * [[indexStream]]: batchId-derived generations; a replay finds its
+    * `gen=` directory present and is skipped.
     */
   /** Streaming maintenance of the persisted PQ codes layout: each
     * micro-batch is encoded against the SAVED codebook (read back per
@@ -250,17 +239,16 @@ object EventStreams {
         val gen = baseGen + batchId
         import graft.operators.VectorSearch.{PqM, PqSubDim}
         import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-        if (!generationPresent(spark.read.parquet(path), gen)) {
+        if (!hasGeneration(spark, path, gen)) {
           val books = spark.read.parquet(path + "_books")
-          batch
+          writeGeneration(batch
             .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
             .crossJoin(broadcast(books))
-            .select(col("vec_id") +: lit(gen).as("gen") +: (0 until PqM).map { m =>
+            .select(col("vec_id") +: (0 until PqM).map { m =>
               graft.sources.VectorIndex.nearestCentroidCol(
                 slice(col("emb"), m * PqSubDim + 1, PqSubDim),
                 col(s"book$m")).cast("int").as(s"code$m")
-            }: _*)
-            .write.mode("append").parquet(path)
+            }: _*), path, gen)
         }
       }
       .start()
@@ -288,7 +276,7 @@ object EventStreams {
         def nearest(emb: org.apache.spark.sql.Column,
                     cents: org.apache.spark.sql.Column) =
           graft.sources.VectorIndex.nearestCentroidCol(emb, cents)
-        if (!generationPresent(spark.read.parquet(path), gen)) {
+        if (!hasGeneration(spark, path, gen)) {
           val fine = spark.read.parquet(path + "_centroids")
           val coarseArr = fine
             .filter(col("cid") %
@@ -296,16 +284,15 @@ object EventStreams {
             .agg(collect_list(struct(col("cid"), col("cemb"))).as("carr"))
           val fineByCoarse = fine.groupBy(col("ccid"))
             .agg(collect_list(struct(col("cid"), col("cemb"))).as("fcents"))
-          batch
+          writeGeneration(batch
             .select(col("vec_id"), col("embedding"),
-              col("embedding").cast("array<double>").as("emb"), lit(gen).as("gen"))
+              col("embedding").cast("array<double>").as("emb"))
             .crossJoin(broadcast(coarseArr))
             .withColumn("ccid", nearest(col("emb"), col("carr")))
             .join(broadcast(fineByCoarse), Seq("ccid"))
-            .select(col("vec_id"), col("embedding"), col("gen"),
+            .select(col("vec_id"), col("embedding"),
               nearest(col("emb"), col("fcents")).cast("int").as("cell"))
-            .repartition(col("cell"))
-            .write.mode("append").partitionBy("cell").parquet(path)
+            .repartition(col("cell")), path, gen, "cell")
         }
       }
       .start()
@@ -333,7 +320,7 @@ object EventStreams {
         def nearest(emb: org.apache.spark.sql.Column,
                     cents: org.apache.spark.sql.Column) =
           graft.sources.VectorIndex.nearestCentroidCol(emb, cents)
-        if (!generationPresent(spark.read.parquet(path), gen)) {
+        if (!hasGeneration(spark, path, gen)) {
           val fine = spark.read.parquet(path + "_centroids")
           val books = spark.read.parquet(path + "_books")
           val coarseArr = fine
@@ -342,20 +329,19 @@ object EventStreams {
             .agg(collect_list(struct(col("cid"), col("cemb"))).as("carr"))
           val fineByCoarse = fine.groupBy(col("ccid"))
             .agg(collect_list(struct(col("cid"), col("cemb"))).as("fcents"))
-          batch
+          writeGeneration(batch
             .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
             .crossJoin(broadcast(coarseArr))
             .withColumn("ccid", nearest(col("emb"), col("carr")))
             .join(broadcast(fineByCoarse), Seq("ccid"))
             .crossJoin(broadcast(books))
-            .select(col("vec_id") +: lit(gen).as("gen") +:
+            .select(col("vec_id") +:
               nearest(col("emb"), col("fcents")).cast("int").as("cell") +:
               (0 until PqM).map { m =>
                 nearest(slice(col("emb"), m * PqSubDim + 1, PqSubDim),
                   col(s"book$m")).cast("int").as(s"code$m")
               }: _*)
-            .repartition(col("cell"))
-            .write.mode("append").partitionBy("cell").parquet(path)
+            .repartition(col("cell")), path, gen, "cell")
         }
       }
       .start()
@@ -372,7 +358,7 @@ object EventStreams {
     * batch appends in O(batch × bucket) work at any corpus size, and
     * batch vectors can neighbor each other (two clones arriving
     * together find one another). Rows land as (vec_id, embedding,
-    * neighbors, gen); [[graft.sources.PointServe.Graph.refresh]]
+    * neighbors) under `gen=<g>/`; [[graft.sources.PointServe.Graph.refresh]]
     * folds them in and back-links reverse edges resident-side. Same
     * effectively-once generation contract as [[indexStream]].
     */
@@ -384,7 +370,7 @@ object EventStreams {
         val spark = batch.sparkSession
         val gen = baseGen + batchId
         import graft.operators.VectorSearch
-        if (!generationPresent(spark.read.parquet(path), gen)) {
+        if (!hasGeneration(spark, path, gen)) {
           val newVecs = batch
             .select(col("vec_id"), col("embedding"))
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -401,12 +387,11 @@ object EventStreams {
                 .as("ranked"))
               .select(col("query_id").as("vec_id"),
                 expr("transform(ranked, e -> e.vec_id)").as("neighbors"))
-            newVecs
+            writeGeneration(newVecs
               .join(adj.hint("shuffle_hash"), Seq("vec_id"), "left")
               .withColumn("neighbors",
-                coalesce(col("neighbors"), expr("array()").cast("array<bigint>")))
-              .withColumn("gen", lit(gen))
-              .write.mode("append").parquet(path)
+                coalesce(col("neighbors"), expr("array()").cast("array<bigint>"))),
+              path, gen)
           } finally newVecs.unpersist()
         }
       }
@@ -423,8 +408,8 @@ object EventStreams {
     * relation so verification covers the new docs too. Same
     * effectively-once contract as [[indexStream]]: batchId-derived
     * generations, replays detected and skipped. The `_sh` append runs
-    * BEFORE the band append — the probed main layout's generation
-    * marker is the commit point, so a crash between the two jobs
+    * BEFORE the band append — the main layout's `gen=` directory is
+    * the commit point, so a crash between the two jobs
     * leaves orphan sketches (harmless: joined only via candidates),
     * never bands whose verify side is missing.
     */
@@ -437,7 +422,7 @@ object EventStreams {
         val gen = baseGen + batchId
         import graft.operators.Dedup
         import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-        if (!generationPresent(spark.read.parquet(path), gen)) {
+        if (!hasGeneration(spark, path, gen)) {
           // the base build's persisted sub-bucket modulus: appending
           // under any other value would land rows in directories the
           // probe never prunes to
@@ -449,17 +434,15 @@ object EventStreams {
                 expression(col("text")), 3, Dedup.P)).as("sh"))
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           try {
-            if (!generationPresent(spark.read.parquet(path + "_sh"), gen))
-              sh.select(col("doc_id"), col("sh"), lit(gen).as("gen"))
-                .write.mode("append").parquet(path + "_sh")
-            Dedup.minhashBands(sh)
+            if (!hasGeneration(spark, path + "_sh", gen))
+              writeGeneration(sh, path + "_sh", gen)
+            writeGeneration(Dedup.minhashBands(sh)
               .withColumn("bkt", pmod(col("band_key"), lit(bktMod)).cast("int"))
-              .withColumn("gen", lit(gen))
               .repartition(col("band"), col("bkt"))
               // same band_key clustering as the base build: appended
               // files keep row-group min/max stats probe-tight
-              .sortWithinPartitions(col("band"), col("bkt"), col("band_key"))
-              .write.mode("append").partitionBy("band", "bkt").parquet(path)
+              .sortWithinPartitions(col("band"), col("bkt"), col("band_key")),
+              path, gen, "band", "bkt")
           } finally sh.unpersist()
         }
       }
@@ -474,13 +457,12 @@ object EventStreams {
         val gen = baseGen + batchId
         val planes = graft.operators.VectorSearch.lshPlanes(
           64, graft.operators.VectorSearch.AnnLshPlanes)
-        if (!generationPresent(spark.read.parquet(path), gen))
-          batch
-            .select(col("vec_id"), col("embedding"), lit(gen).as("gen"))
+        if (!hasGeneration(spark, path, gen))
+          writeGeneration(batch
+            .select(col("vec_id"), col("embedding"))
             .withColumn("bucket", graft.operators.VectorSearch.lshBucket(
               col("embedding").cast("array<double>"), planes).cast("int"))
-            .repartition(col("bucket"))
-            .write.mode("append").partitionBy("bucket").parquet(path)
+            .repartition(col("bucket")), path, gen, "bucket")
       }
       .start()
 }

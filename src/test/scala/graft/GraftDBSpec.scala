@@ -146,6 +146,25 @@ class GraftDBSpec extends GraftSuite {
     assert(!hb.checks("storage").ok && !hb.checks("embeddings").ok)
   }
 
+  test("healthCheck names each built layout's appended generations without a Spark job") {
+    graft.sources.VectorIndex.lshIndexReady(spark, sf) // build-if-missing
+    val sc = spark.sparkContext
+    org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    val detail = try {
+      val d = db.healthCheck().checks("index").detail
+      org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(sc)
+      d
+    } finally sc.removeSparkListener(listener)
+    assert(detail.contains("lsh (0 appended generations)"), detail)
+    assert(jobs.get() == 0, s"${jobs.get()} Spark jobs for a health check")
+  }
+
   test("annSearchIvfFiltered delegates to the label-gated indexed search") {
     assert(rows(db.annSearchIvfFiltered(0, Seq(1, 3, 5), 10)) ==
       rows(graft.sources.VectorIndex.annIvfFilteredIndexed(spark, sf, 0, Seq(1, 3, 5), k = 10)))

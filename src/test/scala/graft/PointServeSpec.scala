@@ -123,11 +123,10 @@ class PointServeSpec extends GraftSuite {
     val idx = PointServe.loadLshFrom(spark, lshPath)
     val n0 = idx.size
     val planes = operators.VectorSearch.lshPlanes(64, operators.VectorSearch.AnnLshPlanes)
-    Seq((newId, newVec.map(_.toFloat).toSeq)).toDF("vec_id", "embedding")
-      .withColumn("gen", lit(1L))
+    VectorIndex.writeGeneration(Seq((newId, newVec.map(_.toFloat).toSeq))
+      .toDF("vec_id", "embedding")
       .withColumn("bucket", operators.VectorSearch.lshBucket(
-        col("embedding").cast("array<double>"), planes).cast("int"))
-      .write.mode("append").partitionBy("bucket").parquet(lshPath)
+        col("embedding").cast("array<double>"), planes).cast("int")), lshPath, 1L, "bucket")
     assert(!idx.query(newVec, k = 5).exists(_.vecId == newId),
       "snapshot must not see unrefreshed appends")
     assert(idx.refresh() == 1 && idx.size == n0 + 1)
@@ -142,14 +141,13 @@ class PointServeSpec extends GraftSuite {
     import operators.VectorSearch.{PqM, PqSubDim}
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
     val books = spark.read.parquet(pqPath + "_books")
-    Seq((newId, newVec.toSeq)).toDF("vec_id", "emb")
+    VectorIndex.writeGeneration(Seq((newId, newVec.toSeq)).toDF("vec_id", "emb")
       .crossJoin(broadcast(books))
-      .select(col("vec_id") +: lit(1L).as("gen") +: (0 until PqM).map { m =>
+      .select(col("vec_id") +: (0 until PqM).map { m =>
         column(graft.functions.expressions.NearestCentroid(
           expression(slice(col("emb"), m * PqSubDim + 1, PqSubDim)),
           expression(col(s"book$m")))).cast("int").as(s"code$m")
-      }: _*)
-      .write.mode("append").parquet(pqPath)
+      }: _*), pqPath, 1L)
     assert(pq.refresh() == 1 && pq.size == m0 + 1)
     assert(pq.query(newVec, k = 20).exists(_.vecId == newId),
       "appended codes must serve after refresh")
@@ -172,6 +170,60 @@ class PointServeSpec extends GraftSuite {
     assert(ivf.query(newVec, k = 5).exists(h => h.vecId == newId && h.score == 10000L),
       "streamed vector must serve at cosine 1.0 after refresh")
     assert(ivf.refresh() == 0, "no new generations → no-op")
+  }
+
+  test("refresh with no new generation returns 0 and launches no Spark job") {
+    val path = java.nio.file.Files.createTempDirectory("pserve_noop").toString + "/lsh"
+    VectorIndex.buildLshIndex(spark, sf, path)
+    val idx = PointServe.loadLshFrom(spark, path)
+    val sc = spark.sparkContext
+    org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      assert(idx.refresh() == 0)
+      org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(sc)
+      assert(jobs.get() == 0, s"${jobs.get()} Spark jobs for a refresh with nothing to read")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a refresh reads only the files of the generation appended since load") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val path = java.nio.file.Files.createTempDirectory("pserve_delta").toString + "/lsh"
+    VectorIndex.buildLshIndex(spark, sf, path)
+    val idx = PointServe.loadLshFrom(spark, path)
+    val planes = operators.VectorSearch.lshPlanes(64, operators.VectorSearch.AnnLshPlanes)
+    VectorIndex.writeGeneration(queryVecs.toSeq.sortBy(_._1).take(3)
+      .map { case (id, v) => (id + 1000000L, v.map(_.toFloat).toSeq) }
+      .toDF("vec_id", "embedding")
+      .withColumn("bucket", operators.VectorSearch.lshBucket(
+        col("embedding").cast("array<double>"), planes).cast("int")), path, 1L, "bucket")
+    val files = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit =
+        qe.optimizedPlan.foreach {
+          case lr: LogicalRelation => lr.relation match {
+            case r: HadoopFsRelation => r.location.inputFiles.foreach(files.add)
+            case _ =>
+          }
+          case _ =>
+        }
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(idx.refresh() == 3)
+      org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val read = scala.jdk.CollectionConverters.IteratorHasAsScala(files.iterator()).asScala.toSeq
+    assert(read.nonEmpty, "the delta read was not observed")
+    assert(read.forall(_.contains("/gen=1/")), s"delta read files outside gen=1: $read")
   }
 
   test("sharded serve: complementary bucket shards scatter-gather to the exact unsharded result") {
@@ -284,7 +336,8 @@ class PointServeSpec extends GraftSuite {
     // private layout copy so the shared build is untouched
     val base = VectorIndex.knnGraphIndexReady(spark, sf)
     val path = java.nio.file.Files.createTempDirectory("graph_refresh").toString + "/graph"
-    spark.read.parquet(base).write.parquet(path)
+    VectorIndex.writeGeneration(VectorIndex.readGenerations(spark, base).get.drop("gen"),
+      path, 0L)
     val g = PointServe.loadGraphFrom(spark, path)
     val before = g.size
     val maxId = queryVecs.keys.max
@@ -292,13 +345,12 @@ class PointServeSpec extends GraftSuite {
     // for query 7, so once refreshed it MUST serve at the top
     import spark.implicits._
     val nbrs = g.query(queryVecs(7L), k = 5).map(_.vecId)
-    Seq((maxId + 1, queryVecs(7L).toSeq, nbrs, 1L))
-      .toDF("vec_id", "emb", "neighbors", "gen")
+    VectorIndex.writeGeneration(Seq((maxId + 1, queryVecs(7L).toSeq, nbrs))
+      .toDF("vec_id", "emb", "neighbors")
       .select(col("vec_id"),
         col("emb").cast(Tables.embeddings(spark, sf).schema("embedding").dataType)
           .as("embedding"),
-        col("neighbors"), col("gen"))
-      .write.mode("append").parquet(path)
+        col("neighbors")), path, 1L)
     assert(g.refresh() == 1 && g.size == before + 1)
     val served = g.query(queryVecs(7L), k = 5, excludeId = 7L)
     assert(served.head.vecId == maxId + 1,
@@ -314,7 +366,8 @@ class PointServeSpec extends GraftSuite {
     // link each new node from its nearest resident nodes
     val base = VectorIndex.knnGraphIndexReady(spark, sf)
     val path = java.nio.file.Files.createTempDirectory("graph_novel").toString + "/graph"
-    spark.read.parquet(base).write.parquet(path)
+    VectorIndex.writeGeneration(VectorIndex.readGenerations(spark, base).get.drop("gen"),
+      path, 0L)
     val g = PointServe.loadGraphFrom(spark, path)
     val maxId = queryVecs.keys.max
     val rnd = new scala.util.Random(11)
@@ -322,13 +375,12 @@ class PointServeSpec extends GraftSuite {
     val ids = (1L to 4L).map(maxId + _)
     val vecs = ids.map(_ => dir.map(_ + 0.05 * rnd.nextGaussian()))
     import spark.implicits._
-    ids.zip(vecs).map { case (id, v) => (id, v.toSeq, ids.filter(_ != id), 1L) }
-      .toDF("vec_id", "emb", "neighbors", "gen")
+    VectorIndex.writeGeneration(ids.zip(vecs).map { case (id, v) => (id, v.toSeq, ids.filter(_ != id)) }
+      .toDF("vec_id", "emb", "neighbors")
       .select(col("vec_id"),
         col("emb").cast(Tables.embeddings(spark, sf).schema("embedding").dataType)
           .as("embedding"),
-        col("neighbors"), col("gen"))
-      .write.mode("append").parquet(path)
+        col("neighbors")), path, 1L)
     assert(g.refresh() == ids.size)
     ids.zip(vecs).foreach { case (id, v) =>
       val served = g.query(v, k = 1)

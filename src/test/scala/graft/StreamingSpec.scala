@@ -84,6 +84,9 @@ class StreamingSpec extends GraftSuite {
       val q = EventStreams.indexStream(stream, "posting_stream")
       q.processAllAvailable()
       q.stop()
+      // the sink reads its micro-batch once, for both of its writes
+      assert(q.recentProgress.map(_.numInputRows).sum == 2L,
+        s"posting sink read ${q.recentProgress.map(_.numInputRows).sum} rows for 2 staged")
       // the streamed doc must now surface in BM25 served from the
       // maintained table
       val hits = Bm25.searchFromTable(spark, "posting_stream",
@@ -373,7 +376,7 @@ class StreamingSpec extends GraftSuite {
     def newStream() = spark.readStream.schema(schema).parquet(stageDir.toString)
     val q = EventStreams.ivfPqIndexStream(newStream(), idxPath)
     q.processAllAvailable(); q.stop()
-    val layout = spark.read.parquet(idxPath)
+    val layout = VectorIndex.readGenerations(spark, idxPath).get
     val base0 = layout.filter(col("vec_id") === 0L).head
     val appended = layout.filter(col("vec_id") === maxId + 1).head
     assert(appended.getAs[Long]("gen") > 0L, "appended row must carry its generation")

@@ -30,8 +30,8 @@ class VectorIndexSpec extends GraftSuite {
     // pruning filter (file-level prune to the probed buckets)
     val plan = served.queryExecution.executedPlan.toString
     assert(plan.contains("dynamicpruning"), s"no DPP on bucket join:\n$plan")
-    // the layout is partitioned by bucket
-    val parts = new java.io.File(path).listFiles()
+    // the layout is partitioned by bucket beneath its generation
+    val parts = new java.io.File(path, "gen=0").listFiles()
       .filter(_.getName.startsWith("bucket=")).map(_.getName)
     assert(parts.nonEmpty && parts.forall(_.matches("bucket=\\d+")))
   }
@@ -65,11 +65,11 @@ class VectorIndexSpec extends GraftSuite {
     // sits under the increment filter (batch side only)
     assert(plan.contains("graft_minhash_idx"), s"probe does not read the layout:\n$plan")
     assert(plan.contains("% 10) = 7"), s"batch side not increment-filtered:\n$plan")
-    // the layout is partitioned by (band, bkt)
-    val bands = new java.io.File(path).listFiles()
+    // the layout is partitioned by (band, bkt) beneath its generation
+    val bands = new java.io.File(path, "gen=0").listFiles()
       .filter(_.getName.startsWith("band=")).map(_.getName)
     assert(bands.length == Dedup.NumBands && bands.forall(_.matches("band=\\d+")))
-    val bkts = new java.io.File(path + "/" + bands.head).listFiles()
+    val bkts = new java.io.File(path + "/gen=0/" + bands.head).listFiles()
       .filter(_.getName.startsWith("bkt=")).map(_.getName)
     assert(bkts.nonEmpty && bkts.forall(_.matches("bkt=\\d+")))
     // observability: the layout reports through the same stats surface
@@ -195,14 +195,13 @@ class VectorIndexSpec extends GraftSuite {
     // simulate streaming maintenance: three generations totalling >20%
     // of the base build, landed the way vectorIndexStream lands them
     val planes = VectorSearch.lshPlanes(64, VectorSearch.AnnLshPlanes)
-    val nBase = spark.read.parquet(path).count()
+    val nBase = VectorIndex.readGenerations(spark, path).get.count()
     (1 to 3).foreach { g =>
-      Tables.embeddings(spark, sf).limit((nBase / 10).toInt)
-        .select((col("vec_id") + g * 100000L).as("vec_id"), col("embedding"),
-          org.apache.spark.sql.functions.lit(g.toLong).as("gen"))
+      VectorIndex.writeGeneration(Tables.embeddings(spark, sf).limit((nBase / 10).toInt)
+        .select((col("vec_id") + g * 100000L).as("vec_id"), col("embedding"))
         .withColumn("bucket", VectorSearch.lshBucket(
-          graft.functions.VectorFunctions.toDouble(col("embedding")), planes).cast("int"))
-        .write.mode("append").partitionBy("bucket").parquet(path)
+          graft.functions.VectorFunctions.toDouble(col("embedding")), planes).cast("int")),
+        path, g.toLong, "bucket")
     }
     assert(VectorIndex.shouldRebuild(spark, path), "30% appended rows must trip the heuristic")
     // generation-count arm trips independently of row mass
@@ -248,5 +247,34 @@ class VectorIndexSpec extends GraftSuite {
     assert(ivfpq.isBuilt && ivfpq.dimension == graft.operators.VectorSearch.PqM)
     val missing = VectorIndex.indexStats(spark, sf, "nope")
     assert(!missing.isBuilt && missing.pointCount == 0L && missing.diskBytes == 0L)
+  }
+
+  test("band_key stays non-decreasing within every file of the MinHash layout") {
+    import graft.streaming.EventStreams
+    import org.apache.spark.sql.functions.{input_file_name, monotonically_increasing_id}
+    // gen leads the partition keys: the write must not re-sort away
+    // the band_key clustering the probe's row-group stats rely on
+    val path = tmpDir("graft_minhash_sorted")
+    VectorIndex.buildMinhashIndex(spark, sf, path)
+    val stageDir = java.nio.file.Files.createTempDirectory("mh_sorted_docs")
+    Tables.documents(spark, sf).limit(20)
+      .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
+      .write.mode("overwrite").parquet(stageDir.toString)
+    val q = EventStreams.minhashIndexStream(spark.readStream
+      .schema("doc_id BIGINT, text STRING").parquet(stageDir.toString), path)
+    q.processAllAvailable(); q.stop()
+    // files are far below the split size: each is read whole, in
+    // order, by one task, so the row ids follow each file's row order
+    val perFile = spark.read.parquet(path)
+      .select(input_file_name().as("f"), monotonically_increasing_id().as("i"),
+        col("band_key"), col("gen"))
+      .collect().groupBy(_.getString(0)).values.toSeq
+    assert(perFile.exists(_.head.getAs[Int]("gen") > 0), "no appended generation written")
+    val unsorted = perFile.filter { rs =>
+      val keys = rs.sortBy(_.getLong(1)).map(_.getLong(2))
+      keys.zip(keys.drop(1)).exists { case (a, b) => a > b }
+    }
+    assert(unsorted.isEmpty,
+      s"${unsorted.size} of ${perFile.size} files lost their band_key order")
   }
 }
