@@ -103,9 +103,7 @@ final class GraftDB(val spark: SparkSession, val dir: String,
     val session = GraftDB.CheckResult(!spark.sparkContext.isStopped,
       if (spark.sparkContext.isStopped) "SparkContext stopped" else s"master=${spark.sparkContext.master}")
     val index = {
-      val kinds = Seq("lsh", "ivf", "pq", "ivfpq", "graph", "minhash").filter { k =>
-        new java.io.File(VectorIndex.indexPath(dir, k), "_SUCCESS").exists()
-      }
+      val kinds = VectorIndex.kinds.filter(k => VectorIndex.exists(VectorIndex.indexPath(dir, k)))
       val debt =
         if (!checkIndexDebt || kinds.isEmpty) Nil
         else kinds.filter(k => VectorIndex.shouldRebuild(spark, VectorIndex.indexPath(dir, k),

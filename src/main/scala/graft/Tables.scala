@@ -64,13 +64,6 @@ object Tables {
   def documents(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "embeddings")
 
-  /** Ensure at least default-parallelism partitions before a CPU-heavy
-    * map stage (tokenize/hash pipelines). A small local corpus arrives
-    * as ONE parquet split, which would serialize the whole map onto a
-    * single task; at real scale the scan already has thousands of
-    * splits and this is a no-op — the gate keeps the repartition from
-    * ever shuffling a big corpus.
-    */
   /** Total on-disk bytes of a table's raw parquet — the measured scale
     * gate for optimizations whose FIXED cost (an extra bounded pass, a
     * sketch build) only pays above a data volume (q9's Bloom
@@ -83,6 +76,13 @@ object Tables {
     if (!fs.exists(p)) 0L else fs.getContentSummary(p).getLength
   }
 
+  /** Ensure at least default-parallelism partitions before a CPU-heavy
+    * map stage (tokenize/hash pipelines). A small local corpus arrives
+    * as ONE parquet split, which would serialize the whole map onto a
+    * single task; at real scale the scan already has thousands of
+    * splits and this is a no-op — the gate keeps the repartition from
+    * ever shuffling a big corpus.
+    */
   def spread(spark: SparkSession, df: DataFrame): DataFrame = {
     val p = spark.sparkContext.defaultParallelism
     // probe the file index, not df.rdd — instantiating the RDD lineage

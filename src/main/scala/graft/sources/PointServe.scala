@@ -320,13 +320,12 @@ object PointServe {
   final class Ivf private[PointServe] (
       spark: SparkSession, path: String,
       @volatile private var snap: (java.util.HashMap[Int, Array[(Long, Array[Double])]], Long),
-      fine: Array[(Long, Array[Double], Long)], // (cid, cemb, ccid)
-      stride: Int) {
+      fine: Array[(Long, Array[Double], Long)]) { // (cid, cemb, ccid)
 
     def query(qv: Array[Double], k: Int = 20, excludeId: Long = -1L,
               nprobe: Int = VectorSearch.IvfNprobe): Seq[Hit] = {
       val cells = snap._1
-      val coarseMod = stride.toLong * VectorSearch.IvfCoarse
+      val coarseMod = VectorSearch.IvfStride.toLong * VectorSearch.IvfCoarse
       val qcoarse = fine.iterator.filter(_._1 % coarseMod == 0)
         .map { case (cid, cemb, _) => (cid, l2Sq(cemb, qv, 0, math.min(cemb.length, qv.length), 0)) }
         .toSeq.sortBy { case (cid, d) => (d, cid) }
@@ -397,7 +396,7 @@ object PointServe {
     val fine = spark.read.parquet(path + "_centroids")
       .select(col("cid"), col("cemb"), col("ccid")).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getLong(2)))
-    new Ivf(spark, path, (cells, maxGen), fine, VectorSearch.IvfStride)
+    new Ivf(spark, path, (cells, maxGen), fine)
   }
 
   /** PQ point index: codes + codebook resident (no vectors — the
@@ -494,8 +493,7 @@ object PointServe {
       spark: SparkSession, path: String,
       @volatile private var snap: (java.util.HashMap[Int, Array[(Long, Array[Int])]], Long),
       fine: Array[(Long, Array[Double], Long)], // (cid, cemb, ccid)
-      books: Array[Array[Array[Double]]],       // m -> cid -> subvector
-      stride: Int) {
+      books: Array[Array[Array[Double]]]) {     // m -> cid -> subvector
 
     import VectorSearch.{PqM, PqSubDim}
 
@@ -510,7 +508,7 @@ object PointServe {
         while (it.hasNext) n += it.next().length
         VectorSearch.pqCoarseKFor(n)
       } else coarseK
-      val coarseMod = stride.toLong * VectorSearch.IvfCoarse
+      val coarseMod = VectorSearch.IvfStride.toLong * VectorSearch.IvfCoarse
       val qcoarse = fine.iterator.filter(_._1 % coarseMod == 0)
         .map { case (cid, cemb, _) => (cid, l2Sq(cemb, qv, 0, math.min(cemb.length, qv.length), 0)) }
         .toSeq.sortBy { case (cid, d) => (d, cid) }
@@ -611,7 +609,7 @@ object PointServe {
         .sortBy(_.getLong(0))
         .map(_.getSeq[Double](1).toArray).toArray
     }
-    new IvfPq(spark, path, (cells, maxGen), fine, books, VectorSearch.IvfStride)
+    new IvfPq(spark, path, (cells, maxGen), fine, books)
   }
 
   /** Embedded retrieval serving: the reference engine's in-memory

@@ -5,7 +5,7 @@ import graft.OracleNum.fx
 import graft.plans.ScoreTag
 import graft.functions.VectorFunctions.{cosineSimilarity, l2DistanceSq, toDouble}
 import graft.operators.VectorSearch
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted ANN index layouts (reference grape-vector-db
@@ -72,39 +72,137 @@ object VectorIndex {
       expression(emb), expression(cents)))
   }
 
-  /** The two-level IVF routing relations from a (…, emb) corpus
-    * frame: (coarse centroid array, fine-centroid relation,
-    * fine-by-coarse groups). Shared by the IVF and IVF-PQ builders so
-    * their cell assignments are bit-identical by construction.
+  /** The fine-centroid relation (cid, cemb, ccid) of the two-level IVF
+    * routing, from a (vec_id, emb) corpus: every
+    * [[VectorSearch.IvfStride]]-th vector is a fine centroid, every
+    * [[VectorSearch.IvfCoarse]]-th of those also a coarse one, and ccid
+    * is a fine centroid's nearest coarse centroid. The IVF and IVF-PQ
+    * builds save it as `<path>_centroids`.
     */
-  private def ivfRouting(corpus: org.apache.spark.sql.DataFrame, stride: Int)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-         org.apache.spark.sql.DataFrame) = {
+  private def ivfCentroids(corpus: DataFrame): DataFrame = {
     val coarseArr = corpus
-      .filter(col("vec_id") % (stride.toLong * VectorSearch.IvfCoarse) === 0)
+      .filter(col("vec_id") % (VectorSearch.IvfStride.toLong * VectorSearch.IvfCoarse) === 0)
       .agg(collect_list(struct(col("vec_id").as("cid"), col("emb").as("cemb"))).as("carr"))
-    val fine = corpus.filter(col("vec_id") % stride === 0)
+    corpus.filter(col("vec_id") % VectorSearch.IvfStride === 0)
       .crossJoin(broadcast(coarseArr))
       .select(col("vec_id").as("cid"), col("emb").as("cemb"),
         nearestCentroidCol(col("emb"), col("carr")).as("ccid"))
-    val fineByCoarse = fine.groupBy(col("ccid"))
-      .agg(collect_list(struct(col("cid"), col("cemb"))).as("fcents"))
-    (coarseArr, fine, fineByCoarse)
   }
 
-  /** The one-row PQ codebook from a (vec_id, emb) corpus frame —
-    * shared by the PQ and IVF-PQ builders.
+  /** The one-row PQ codebook from a (vec_id, emb) corpus frame — the
+    * PQ and IVF-PQ builds save it as `<path>_books`.
     */
-  private def pqCodebook(corpus: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    import VectorSearch.{PqM, PqSubDim, PqK, PqStride}
+  private def pqCodebook(corpus: DataFrame): DataFrame = {
+    import VectorSearch.{PqM, PqK, PqStride}
     val bookCols = (0 until PqM).map { m =>
       collect_list(struct((col("vec_id") / PqStride).cast("long").as("cid"),
-        slice(col("emb"), m * PqSubDim + 1, PqSubDim).as("cemb"))).as(s"book$m")
+        sub(m, col("emb")).as("cemb"))).as(s"book$m")
     }
     corpus
       .filter(col("vec_id") % PqStride === 0 && col("vec_id") < PqK.toLong * PqStride)
       .agg(bookCols.head, bookCols.tail: _*)
+  }
+
+  /** The m-th PQ subvector of a vector column. */
+  private def sub(m: Int, e: Column): Column =
+    slice(e, m * VectorSearch.PqSubDim + 1, VectorSearch.PqSubDim)
+
+  private def withEmb(rows: DataFrame): DataFrame =
+    rows.withColumn("emb", toDouble(col("embedding")))
+
+  /** (…, emb) rows with their fine `cell`, routed through the saved
+    * `<path>_centroids`: the nearest coarse centroid, then the nearest
+    * fine centroid inside it — [[VectorSearch.annIvf]]'s assignment.
+    */
+  private def withCell(rows: DataFrame, path: String): DataFrame = {
+    val fine = rows.sparkSession.read.parquet(path + "_centroids")
+    val coarseArr = fine
+      .filter(col("cid") % (VectorSearch.IvfStride.toLong * VectorSearch.IvfCoarse) === 0)
+      .agg(collect_list(struct(col("cid"), col("cemb"))).as("carr"))
+    val fineByCoarse = fine.groupBy(col("ccid"))
+      .agg(collect_list(struct(col("cid"), col("cemb"))).as("fcents"))
+    rows.crossJoin(broadcast(coarseArr))
+      .withColumn("ccid", nearestCentroidCol(col("emb"), col("carr")))
+      .join(broadcast(fineByCoarse), Seq("ccid"))
+      .withColumn("cell", nearestCentroidCol(col("emb"), col("fcents")).cast("int"))
+  }
+
+  /** (…, emb) rows beside the saved `<path>_books` codebook, ready for
+    * [[codeCols]].
+    */
+  private def withBooks(rows: DataFrame, path: String): DataFrame =
+    rows.crossJoin(broadcast(rows.sparkSession.read.parquet(path + "_books")))
+
+  /** `code0..`: each subvector's nearest codebook entry. */
+  private def codeCols: Seq[Column] = (0 until VectorSearch.PqM).map(m =>
+    nearestCentroidCol(sub(m, col("emb")), col(s"book$m")).cast("int").as(s"code$m"))
+
+  // The encoders: one per maintained layout, shared by the base build
+  // (generation 0, after its sidecars are written) and the upkeep
+  // streams of graft.streaming.EventStreams (generation g, from the
+  // same sidecars), so an appended row is routed exactly as its twin
+  // in the base build.
+
+  /** LSH: the rows as given plus their `bucket`, the signature under
+    * the fixed hyperplane family.
+    */
+  private[graft] def encodeLsh(rows: DataFrame, path: String, gen: Long): Unit = {
+    val planes = VectorSearch.lshPlanes(64, VectorSearch.AnnLshPlanes)
+    writeGeneration(rows
+      .withColumn("bucket",
+        VectorSearch.lshBucket(toDouble(col("embedding")), planes).cast("int"))
+      // co-locate each bucket before the partitioned write: one file
+      // per bucket directory instead of one per (shuffle partition x
+      // bucket) — at scale use repartition(n, col) so a hot bucket
+      // still splits across tasks
+      .repartition(col("bucket")), path, gen, "bucket")
+  }
+
+  /** IVF: (vec_id, embedding, cell), keyed by cell. */
+  private[graft] def encodeIvf(rows: DataFrame, path: String, gen: Long): Unit =
+    writeGeneration(withCell(withEmb(rows), path)
+      .select(col("vec_id"), col("embedding"), col("cell"))
+      .repartition(col("cell")), path, gen, "cell")
+
+  /** PQ: (vec_id, code0..). */
+  private[graft] def encodePq(rows: DataFrame, path: String, gen: Long): Unit =
+    writeGeneration(withBooks(withEmb(rows), path)
+      .select(col("vec_id") +: codeCols: _*), path, gen)
+
+  /** IVF-PQ: the IVF routing composed with the PQ encoding —
+    * (vec_id, cell, code0..), keyed by cell.
+    */
+  private[graft] def encodeIvfPq(rows: DataFrame, path: String, gen: Long): Unit =
+    writeGeneration(withBooks(withCell(withEmb(rows), path), path)
+      .select(col("vec_id") +: col("cell") +: codeCols: _*)
+      .repartition(col("cell")), path, gen, "cell")
+
+  /** MinHash, from (doc_id, sh) shingle sketches: the sketches land in
+    * `<path>_sh`, then one row per (doc, band) with its 60-bit band key,
+    * keyed (band, bkt) with bkt = band_key mod the saved `<path>_meta`
+    * modulus — banding under any other modulus would land rows in
+    * directories the probe never prunes to. The band layout's `gen=`
+    * directory is the commit point: a crash between the two writes
+    * leaves orphan sketches (harmless: joined only via candidates),
+    * never bands whose verify side is missing, and a replay finds its
+    * sketches landed and does not append them twice.
+    */
+  private[graft] def encodeMinhash(sh: DataFrame, path: String, gen: Long): Unit = {
+    val spark = sh.sparkSession
+    val bktMod = spark.read.parquet(path + "_meta").head.getAs[Long]("bkt_mod")
+    if (gen == 0L || !hasGeneration(spark, path + "_sh", gen))
+      writeGeneration(sh.select(col("doc_id"), col("sh")), path + "_sh", gen)
+    writeGeneration(graft.operators.Dedup.minhashBands(sh)
+      .withColumn("bkt", pmod(col("band_key"), lit(bktMod)).cast("int"))
+      // co-locate each directory before the partitioned write: one
+      // file per (band, bkt) instead of one per (task x directory);
+      // cluster by band_key within each file so parquet row-group
+      // min/max stats stay tight — a probe that can't directory-prune
+      // (batch keys covering every (band, bkt)) still skips
+      // row-groups outside its band_key range
+      .repartition(col("band"), col("bkt"))
+      .sortWithinPartitions(col("band"), col("bkt"), col("band_key")),
+      path, gen, "band", "bkt")
   }
 
   /** Build (or rebuild, mode=overwrite) the LSH-partitioned layout as
@@ -112,17 +210,8 @@ object VectorIndex {
     * ([[graft.streaming.EventStreams.vectorIndexStream]]) adds later
     * generations beside it, each split into the same bucket keys.
     */
-  def buildLshIndex(spark: SparkSession, dir: String, path: String): Unit = {
-    val planes = VectorSearch.lshPlanes(64, VectorSearch.AnnLshPlanes)
-    writeGeneration(Tables.embeddings(spark, dir)
-      .withColumn("bucket",
-        VectorSearch.lshBucket(toDouble(col("embedding")), planes).cast("int"))
-      // co-locate each bucket before the partitioned write: one file
-      // per bucket directory instead of one per (shuffle partition x
-      // bucket) — at scale use repartition(n, col) so a hot bucket
-      // still splits across tasks
-      .repartition(col("bucket")), path, 0L, "bucket")
-  }
+  def buildLshIndex(spark: SparkSession, dir: String, path: String): Unit =
+    encodeLsh(Tables.embeddings(spark, dir), path, 0L)
 
   private def layoutFs(spark: SparkSession, path: String) = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -222,25 +311,37 @@ object VectorIndex {
       .filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), toDouble(col("embedding")).as("qv"))
 
-  /** Build (or rebuild) the IVF cell-partitioned layout: corpus rows
-    * routed to their fine cell (two-level strided centroids, identical
-    * assignment to [[VectorSearch.annIvf]]) and written
-    * `partitionBy(cell)`; the fine-centroid relation (cid, cemb, ccid)
-    * is saved alongside as `<path>_centroids`.
+  /** Build (or rebuild) the IVF cell-partitioned layout: the
+    * fine-centroid relation (cid, cemb, ccid) is saved first as
+    * `<path>_centroids`, then the corpus rows are routed through it to
+    * their fine cell ([[encodeIvf]]; identical assignment to
+    * [[VectorSearch.annIvf]]) and written `partitionBy(cell)`.
     */
-  def buildIvfIndex(spark: SparkSession, dir: String, path: String,
-                    stride: Int = VectorSearch.IvfStride): Unit = {
-    val corpus = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"), toDouble(col("embedding")).as("emb"))
-    val (coarseArr, fine, fineByCoarse) = ivfRouting(corpus, stride)
-    fine.write.mode("overwrite").parquet(path + "_centroids")
-    // generation 0; ivfIndexStream adds later generations keyed by cell
-    writeGeneration(corpus.crossJoin(broadcast(coarseArr))
-      .withColumn("ccid", nearestCentroidCol(col("emb"), col("carr")))
-      .join(broadcast(fineByCoarse), Seq("ccid"))
-      .select(col("vec_id"), col("embedding"),
-        nearestCentroidCol(col("emb"), col("fcents")).cast("int").as("cell"))
-      .repartition(col("cell")), path, 0L, "cell")
+  def buildIvfIndex(spark: SparkSession, dir: String, path: String): Unit = {
+    val vecs = Tables.embeddings(spark, dir)
+    ivfCentroids(withEmb(vecs)).write.mode("overwrite").parquet(path + "_centroids")
+    encodeIvf(vecs, path, 0L)
+  }
+
+  /** The query's probe cells from the saved centroid relation: its
+    * [[VectorSearch.IvfProbeCoarse]] nearest coarse centroids, then the
+    * `nprobe` nearest fine cells inside them — annIvf's selection
+    * (coarse membership is the stride arithmetic, not cid == ccid,
+    * which a duplicate-embedding centroid could break on the argmin
+    * tie). Rows (cid, dist, qv), nearest first.
+    */
+  private def probeCells(fine: DataFrame, qv: DataFrame, nprobe: Int): DataFrame = {
+    val coarse = fine
+      .filter(col("cid") % (VectorSearch.IvfStride.toLong * VectorSearch.IvfCoarse) === 0)
+      .select(col("cid").as("pccid"), col("cemb").as("coarse_emb"))
+    val qcoarse = coarse.crossJoin(broadcast(qv))
+      .select(col("pccid"), l2DistanceSq(col("coarse_emb"), col("qv")).as("dist"), col("qv"))
+      .orderBy(col("dist"), col("pccid"))
+      .limit(VectorSearch.IvfProbeCoarse)
+    fine.join(broadcast(qcoarse), col("ccid") === col("pccid"))
+      .select(col("cid"), l2DistanceSq(col("cemb"), col("qv")).as("dist"), col("qv"))
+      .orderBy(col("dist"), col("cid"))
+      .limit(nprobe)
   }
 
   /** IVF ANN served from the persisted layout: identical results to
@@ -251,7 +352,6 @@ object VectorIndex {
     */
   def annIvfFromIndex(spark: SparkSession, path: String, queries: DataFrame,
                       qid: Long = 0,
-                      stride: Int = VectorSearch.IvfStride,
                       nprobe: Int = VectorSearch.IvfNprobe, k: Int = 20,
                       labelGate: Option[DataFrame] = None): DataFrame = {
     val fine = spark.read.parquet(path + "_centroids")
@@ -261,23 +361,9 @@ object VectorIndex {
     // NOT from the cell-partitioned layout, which cannot prune a
     // vec_id filter and would scan every cell directory
     val qv = queries.filter(col("query_id") === qid).select(col("qv"))
-    // IvfProbeCoarse nearest coarse cells, then the nprobe nearest
-    // fine cells inside them — same selection as annIvf, driven from
-    // the saved centroid relation instead of a rebuilt one (coarse
-    // membership is the stride arithmetic, not cid == ccid, which a
-    // duplicate-embedding centroid could break on the argmin tie)
-    val coarse = fine.filter(col("cid") % (stride.toLong * VectorSearch.IvfCoarse) === 0)
-      .select(col("cid").as("pccid"), col("cemb").as("coarse_emb"))
-    val qcoarse = coarse.crossJoin(broadcast(qv))
-      .select(col("pccid"), l2DistanceSq(col("coarse_emb"), col("qv")).as("dist"), col("qv"))
-      .orderBy(col("dist"), col("pccid"))
-      .limit(VectorSearch.IvfProbeCoarse)
-    val probeCells = fine.join(broadcast(qcoarse), col("ccid") === col("pccid"))
-      .select(col("cid"), l2DistanceSq(col("cemb"), col("qv")).as("dist"), col("qv"))
-      .orderBy(col("dist"), col("cid"))
-      .limit(nprobe)
+    val cells = probeCells(fine, qv, nprobe)
       .select(col("cid").cast("int").as("cell"), col("qv"))
-    val cand = corpus.join(broadcast(probeCells), Seq("cell"))
+    val cand = corpus.join(broadcast(cells), Seq("cell"))
       .filter(col("vec_id") =!= qid)
     // metadata gate (post-filtering): applied to the probed candidate
     // set BEFORE the top-k, joined on vec_id — candidates are
@@ -314,24 +400,31 @@ object VectorIndex {
     * persisted form of [[VectorSearch.annPq]]'s encode pass. The codes
     * table (vec_id + 16 byte-ish code columns, ~10 bytes/vector — the
     * ~25x compression that makes a 100 TB embedding corpus servable)
-    * is the layout; the one-row codebook is saved alongside as
-    * `<path>_books`. Full vectors are NOT in the layout: only the
-    * rescore pass touches them, [[VectorSearch.PqCoarseK]] rows per
-    * query read back from the flat table.
+    * is the layout, encoded ([[encodePq]]) against the one-row
+    * codebook saved first as `<path>_books`. Full vectors are NOT in
+    * the layout: only the rescore pass touches them,
+    * [[VectorSearch.PqCoarseK]] rows per query read back from the flat
+    * table.
     */
   def buildPqIndex(spark: SparkSession, dir: String, path: String): Unit = {
-    import VectorSearch.{PqM, PqSubDim}
-    val corpus = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("emb"))
-    def sub(m: Int, e: org.apache.spark.sql.Column) =
-      slice(e, m * PqSubDim + 1, PqSubDim)
-    val books = pqCodebook(corpus)
-    books.coalesce(1).write.mode("overwrite").parquet(path + "_books")
-    // generation 0; pqIndexStream adds later generations
-    writeGeneration(corpus.crossJoin(broadcast(books))
-      .select(col("vec_id") +: (0 until PqM).map(m =>
-        nearestCentroidCol(sub(m, col("emb")), col(s"book$m")).cast("int").as(s"code$m")): _*),
-      path, 0L)
+    val vecs = Tables.embeddings(spark, dir)
+    pqCodebook(withEmb(vecs)).coalesce(1).write.mode("overwrite").parquet(path + "_books")
+    encodePq(vecs, path, 0L)
+  }
+
+  /** The query's ADC table against the saved codebook — per subspace,
+    * the distance from the query's subvector to every codebook entry,
+    * in cid order — and the ADC distance of a `code0..` row read off
+    * it.
+    */
+  private def adcTable(qv: DataFrame, books: DataFrame): (DataFrame, Column) = {
+    import VectorSearch.PqM
+    val adc = qv.crossJoin(broadcast(books)).select((0 until PqM).map { m =>
+      transform(array_sort(col(s"book$m")),
+        c => l2DistanceSq(sub(m, col("qv")), c.getField("cemb"))).as(s"adc$m")
+    }: _*)
+    (adc, (0 until PqM).map(m =>
+      element_at(col(s"adc$m"), col(s"code$m") + 1)).reduce(_ + _))
   }
 
   /** PQ-ADC ANN served from the persisted codes layout: identical
@@ -344,20 +437,11 @@ object VectorIndex {
   def annPqFromIndex(spark: SparkSession, dir: String, path: String,
                      queries: DataFrame, qid: Long = 0, k: Int = 20,
                      coarseK: Int = VectorSearch.AutoCoarseK): DataFrame = {
-    import VectorSearch.{PqM, PqSubDim}
     val ck = VectorSearch.resolveCoarseK(spark, dir, coarseK)
     val books = spark.read.parquet(path + "_books")
     val codes = spark.read.parquet(path)
     val qv = queries.filter(col("query_id") === qid).select(col("qv"))
-    def sub(m: Int, e: org.apache.spark.sql.Column) =
-      slice(e, m * PqSubDim + 1, PqSubDim)
-    val adcCols = (0 until PqM).map { m =>
-      transform(array_sort(col(s"book$m")),
-        c => l2DistanceSq(sub(m, col("qv")), c.getField("cemb"))).as(s"adc$m")
-    }
-    val adc = qv.crossJoin(broadcast(books)).select(adcCols: _*)
-    val adcDist = (0 until PqM).map(m =>
-      element_at(col(s"adc$m"), col(s"code$m") + 1)).reduce(_ + _)
+    val (adc, adcDist) = adcTable(qv, books)
     val coarse = codes.crossJoin(broadcast(adc))
       .filter(col("vec_id") =!= qid)
       .select(col("vec_id"), fx(adcDist).as("adc_dist"))
@@ -397,8 +481,14 @@ object VectorIndex {
       dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" + sz + "_" + mt
   }
 
-  private def exists(spark: SparkSession, path: String): Boolean =
+  /** Is the layout at `path` built? Readers gate on its `_SUCCESS`. */
+  private[graft] def exists(path: String): Boolean =
     new java.io.File(path, "_SUCCESS").exists()
+
+  private def rm(f: java.io.File): Unit = if (f.exists()) {
+    if (f.isDirectory) f.listFiles().foreach(rm)
+    f.delete()
+  }
 
   /** Build-if-missing with concurrent-builder safety: build into a
     * process-unique staging path, then atomically rename into place
@@ -407,14 +497,9 @@ object VectorIndex {
     * serve the winner's layout; a reader can never observe a
     * half-written or mid-overwrite directory.
     */
-  private def rm(f: java.io.File): Unit = if (f.exists()) {
-    if (f.isDirectory) f.listFiles().foreach(rm)
-    f.delete()
-  }
-
   private def buildIfMissing(path: String, suffixes: Seq[String])
                             (build: String => Unit): Unit = {
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+    if (!exists(path)) {
       // a directory present WITHOUT _SUCCESS is a crashed build: move
       // it aside so the fresh rename can land (serving it forever was
       // the alternative)
@@ -460,20 +545,58 @@ object VectorIndex {
     }
   }
 
-  /** Force-rebuild all persisted layouts (lib.rs:560 rebuild_index). */
-  def rebuildIndexes(spark: SparkSession, dir: String): Unit = {
-    rebuildStaged(indexPath(dir, "lsh"), Seq(""))(buildLshIndex(spark, dir, _))
-    rebuildStaged(indexPath(dir, "ivf"), Seq("_centroids", ""))(
-      buildIvfIndex(spark, dir, _))
-    rebuildStaged(indexPath(dir, "pq"), Seq("_books", ""))(
-      buildPqIndex(spark, dir, _))
-    rebuildStaged(indexPath(dir, "ivfpq"), Seq("_centroids", "_books", ""))(
-      buildIvfPqIndex(spark, dir, _))
-    rebuildStaged(indexPath(dir, "minhash"), Seq("_meta", "_sh", ""))(
-      buildMinhashIndex(spark, dir, _))
-    rebuildStaged(indexPath(dir, "knn_edges"), Seq(""))(
-      buildKnnEdgesIndex(spark, dir, _))
+  /** One persisted layout: its [[indexPath]] kind, the sidecar
+    * directories its base build writes before the layout itself, and
+    * that base build.
+    */
+  private final case class Layout(kind: String, sidecars: Seq[String],
+                                  build: (SparkSession, String, String) => Unit) {
+    /** Sidecars first, the layout last: readers gate on the layout's
+      * `_SUCCESS`, so its sidecars are in place once it is visible.
+      */
+    def dirs: Seq[String] = sidecars :+ ""
   }
+
+  /** Every persisted layout, once: the build-if-missing entries, both
+    * rebuild paths and `GraftDB.healthCheck` read this list.
+    */
+  private val layouts: Seq[Layout] = Seq(
+    Layout("lsh", Nil, buildLshIndex),
+    Layout("ivf", Seq("_centroids"), buildIvfIndex),
+    Layout("pq", Seq("_books"), buildPqIndex),
+    Layout("ivfpq", Seq("_centroids", "_books"), buildIvfPqIndex),
+    Layout("graph", Nil, buildKnnGraphIndex(_, _, _)),
+    Layout("minhash", Seq("_meta", "_sh"), buildMinhashIndex),
+    Layout("knn_edges", Nil, buildKnnEdgesIndex))
+
+  /** The kinds of every persisted layout. */
+  def kinds: Seq[String] = layouts.map(_.kind)
+
+  private def rebuild(spark: SparkSession, dir: String, l: Layout): Unit =
+    rebuildStaged(indexPath(dir, l.kind), l.dirs)(l.build(spark, dir, _))
+
+  /** Build-if-missing, returning the ready layout path — the shared
+    * entry for the batch driver queries below and [[PointServe]]'s
+    * load-time reads.
+    */
+  private def ready(spark: SparkSession, dir: String, kind: String): String = {
+    val l = layouts.find(_.kind == kind).get
+    val path = indexPath(dir, kind)
+    buildIfMissing(path, l.dirs)(l.build(spark, dir, _))
+    path
+  }
+
+  def lshIndexReady(spark: SparkSession, dir: String): String = ready(spark, dir, "lsh")
+  def ivfIndexReady(spark: SparkSession, dir: String): String = ready(spark, dir, "ivf")
+  def pqIndexReady(spark: SparkSession, dir: String): String = ready(spark, dir, "pq")
+  def ivfPqIndexReady(spark: SparkSession, dir: String): String = ready(spark, dir, "ivfpq")
+  def knnGraphIndexReady(spark: SparkSession, dir: String): String = ready(spark, dir, "graph")
+  def minhashIndexReady(spark: SparkSession, dir: String): String = ready(spark, dir, "minhash")
+  def knnEdgesReady(spark: SparkSession, dir: String): String = ready(spark, dir, "knn_edges")
+
+  /** Force-rebuild every persisted layout (lib.rs:560 rebuild_index). */
+  def rebuildIndexes(spark: SparkSession, dir: String): Unit =
+    layouts.foreach(rebuild(spark, dir, _))
 
   /** Auto-optimize heuristic (reference
     * src/performance/index_optimizer.rs:51 should_optimize): a layout
@@ -524,7 +647,7 @@ object VectorIndex {
 
   def indexStats(spark: SparkSession, dir: String, kind: String): IndexStats = {
     val path = indexPath(dir, kind)
-    if (!exists(spark, path))
+    if (!exists(path))
       return IndexStats(kind, isBuilt = false, 0L, 0, 0L, 0L, 0L)
     val gens = generations(spark, path).count(_ > 0L).toLong
     // a built-but-empty layout has no generation directory: no rows
@@ -562,44 +685,18 @@ object VectorIndex {
     */
   def rebuildIfNeeded(spark: SparkSession, dir: String,
                       maxAppendedFraction: Double = 0.2,
-                      maxGenerations: Int = 64): Seq[String] = {
-    val kinds: Seq[(String, Seq[String], String => Unit)] = Seq(
-      ("lsh", Seq(""), buildLshIndex(spark, dir, _)),
-      ("ivf", Seq("_centroids", ""), buildIvfIndex(spark, dir, _)),
-      ("pq", Seq("_books", ""), buildPqIndex(spark, dir, _)),
-      ("ivfpq", Seq("_centroids", "_books", ""), buildIvfPqIndex(spark, dir, _)),
-      // graph debt matters doubly: appended nodes carry un-pruned
-      // reverse-edge growth in the served snapshot; a rebuild restores
-      // the nearest-first 2k-degree invariant
-      ("graph", Seq(""), buildKnnGraphIndex(spark, dir, _)),
-      // minhash debt: appended generations fragment the probed band
-      // directories into per-batch files exactly like the LSH buckets
-      ("minhash", Seq("_meta", "_sh", ""), buildMinhashIndex(spark, dir, _)))
-    kinds.collect {
-      case (kind, sfx, build)
-        if exists(spark, indexPath(dir, kind)) &&
-          shouldRebuild(spark, indexPath(dir, kind),
-            maxAppendedFraction, maxGenerations) =>
-        rebuildStaged(indexPath(dir, kind), sfx)(build)
-        kind
+                      maxGenerations: Int = 64): Seq[String] =
+    // graph debt matters doubly: appended nodes carry un-pruned
+    // reverse-edge growth in the served snapshot, and a rebuild restores
+    // the nearest-first 2k-degree invariant; minhash debt fragments the
+    // probed band directories into per-batch files exactly like the LSH
+    // buckets. knn_edges is never appended to, so it never trips.
+    layouts.collect {
+      case l if exists(indexPath(dir, l.kind)) &&
+          shouldRebuild(spark, indexPath(dir, l.kind), maxAppendedFraction, maxGenerations) =>
+        rebuild(spark, dir, l)
+        l.kind
     }
-  }
-
-  /** Build-if-missing, returning the ready layout path — the shared
-    * entry for the batch driver queries below and [[PointServe]]'s
-    * load-time reads.
-    */
-  def lshIndexReady(spark: SparkSession, dir: String): String = {
-    val path = indexPath(dir, "lsh")
-    buildIfMissing(path, Seq(""))(buildLshIndex(spark, dir, _))
-    path
-  }
-
-  def ivfIndexReady(spark: SparkSession, dir: String): String = {
-    val path = indexPath(dir, "ivf")
-    buildIfMissing(path, Seq("_centroids", ""))(buildIvfIndex(spark, dir, _))
-    path
-  }
 
   /** Build (or rebuild) the IVF-PQ layout — the on-disk form of the
     * billion-scale index ([[VectorSearch.annIvfPq]]; FAISS stores
@@ -610,35 +707,14 @@ object VectorIndex {
     * nprobe directories AND reads ~10 bytes per candidate. Centroid
     * relation and codebook saved alongside.
     */
-  def buildIvfPqIndex(spark: SparkSession, dir: String, path: String,
-                      stride: Int = VectorSearch.IvfStride): Unit = {
-    import VectorSearch.{PqM, PqSubDim}
-    val corpus = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("emb"))
-    def sub(m: Int, e: org.apache.spark.sql.Column) =
-      slice(e, m * PqSubDim + 1, PqSubDim)
-    // cell routing and codebook come from the SAME helpers the IVF and
-    // PQ builders use, so the three layouts can never drift apart
-    val (coarseArr, fine, fineByCoarse) = ivfRouting(corpus, stride)
-    fine.write.mode("overwrite").parquet(path + "_centroids")
-    val books = pqCodebook(corpus)
-    books.coalesce(1).write.mode("overwrite").parquet(path + "_books")
-    writeGeneration(corpus.crossJoin(broadcast(coarseArr))
-      .withColumn("ccid", nearestCentroidCol(col("emb"), col("carr")))
-      .join(broadcast(fineByCoarse), Seq("ccid"))
-      .withColumn("cell", nearestCentroidCol(col("emb"), col("fcents")).cast("int"))
-      .crossJoin(broadcast(books))
-      .select(col("vec_id") +: col("cell") +:
-        (0 until PqM).map(m =>
-          nearestCentroidCol(sub(m, col("emb")), col(s"book$m")).cast("int")
-            .as(s"code$m")): _*)
-      .repartition(col("cell")), path, 0L, "cell")
-  }
-
-  def ivfPqIndexReady(spark: SparkSession, dir: String): String = {
-    val path = indexPath(dir, "ivfpq")
-    buildIfMissing(path, Seq("_centroids", "_books", ""))(buildIvfPqIndex(spark, dir, _))
-    path
+  def buildIvfPqIndex(spark: SparkSession, dir: String, path: String): Unit = {
+    val vecs = Tables.embeddings(spark, dir)
+    // the IVF and PQ builds' own sidecars, so the three layouts can
+    // never drift apart
+    val corpus = withEmb(vecs)
+    ivfCentroids(corpus).write.mode("overwrite").parquet(path + "_centroids")
+    pqCodebook(corpus).coalesce(1).write.mode("overwrite").parquet(path + "_books")
+    encodeIvfPq(vecs, path, 0L)
   }
 
   /** IVF-PQ served from the persisted layout: identical results to
@@ -659,37 +735,16 @@ object VectorIndex {
     */
   def annIvfPqFromIndex(spark: SparkSession, dir: String, path: String,
                         queries: DataFrame, qid: Long = 0, k: Int = 10,
-                        stride: Int = VectorSearch.IvfStride,
                         nprobe: Int = VectorSearch.IvfNprobe,
                         coarseK: Int = VectorSearch.AutoCoarseK): DataFrame = {
-    import VectorSearch.{PqM, PqSubDim}
     val ck = VectorSearch.resolveCoarseK(spark, dir, coarseK)
     val fine = spark.read.parquet(path + "_centroids")
     val books = spark.read.parquet(path + "_books")
     val codes = spark.read.parquet(path)
     val qv = queries.filter(col("query_id") === qid).select(col("qv"))
-    def sub(m: Int, e: org.apache.spark.sql.Column) =
-      slice(e, m * PqSubDim + 1, PqSubDim)
-    // probe selection — identical to annIvfFromIndex
-    val coarse = fine.filter(col("cid") % (stride.toLong * VectorSearch.IvfCoarse) === 0)
-      .select(col("cid").as("pccid"), col("cemb").as("coarse_emb"))
-    val qcoarse = coarse.crossJoin(broadcast(qv))
-      .select(col("pccid"), l2DistanceSq(col("coarse_emb"), col("qv")).as("dist"), col("qv"))
-      .orderBy(col("dist"), col("pccid"))
-      .limit(VectorSearch.IvfProbeCoarse)
-    val probeCells = fine.join(broadcast(qcoarse), col("ccid") === col("pccid"))
-      .select(col("cid"), l2DistanceSq(col("cemb"), col("qv")).as("dist"))
-      .orderBy(col("dist"), col("cid"))
-      .limit(nprobe)
-      .select(col("cid").cast("int").as("cell"))
-    val adcCols = (0 until PqM).map { m =>
-      transform(array_sort(col(s"book$m")),
-        c => l2DistanceSq(sub(m, col("qv")), c.getField("cemb"))).as(s"adc$m")
-    }
-    val adc = qv.crossJoin(broadcast(books)).select(adcCols: _*)
-    val adcDist = (0 until PqM).map(m =>
-      element_at(col(s"adc$m"), col(s"code$m") + 1)).reduce(_ + _)
-    val ranked = codes.join(broadcast(probeCells), Seq("cell"))
+    val cells = probeCells(fine, qv, nprobe).select(col("cid").cast("int").as("cell"))
+    val (adc, adcDist) = adcTable(qv, books)
+    val ranked = codes.join(broadcast(cells), Seq("cell"))
       .filter(col("vec_id") =!= qid)
       .crossJoin(broadcast(adc))
       .select(col("vec_id"), fx(adcDist).as("adc_dist"))
@@ -709,12 +764,6 @@ object VectorIndex {
                       k: Int = 10): DataFrame =
     annIvfPqFromIndex(spark, dir, ivfPqIndexReady(spark, dir),
       queryBatch(spark, dir, qid.toInt + 1), qid, k)
-
-  def pqIndexReady(spark: SparkSession, dir: String): String = {
-    val path = indexPath(dir, "pq")
-    buildIfMissing(path, Seq("_books", ""))(buildPqIndex(spark, dir, _))
-    path
-  }
 
   /** Build (or rebuild) the kNN-GRAPH layout — the persisted form of
     * [[VectorSearch.annKnnGraph]]'s neighbor lists, one row per
@@ -808,12 +857,6 @@ object VectorIndex {
       .select(col("vec_id"), col("embedding"), col("neighbors")), path, 0L)
   }
 
-  def knnGraphIndexReady(spark: SparkSession, dir: String): String = {
-    val path = indexPath(dir, "graph")
-    buildIfMissing(path, Seq(""))(buildKnnGraphIndex(spark, dir, _))
-    path
-  }
-
   /** Build (or rebuild) the kNN EDGE layout: the exact
     * [[VectorSearch.annKnnGraph]] relation — (vec_id, rank,
     * neighbor_id, score) — persisted once per corpus so the
@@ -826,12 +869,6 @@ object VectorIndex {
     */
   def buildKnnEdgesIndex(spark: SparkSession, dir: String, path: String): Unit =
     writeGeneration(VectorSearch.annKnnGraph(spark, dir), path, 0L)
-
-  def knnEdgesReady(spark: SparkSession, dir: String): String = {
-    val path = indexPath(dir, "knn_edges")
-    buildIfMissing(path, Seq(""))(buildKnnEdgesIndex(spark, dir, _))
-    path
-  }
 
   /** The persisted edge relation, built if missing — the shared
     * graph input of the embedding-space analytics.
@@ -860,28 +897,10 @@ object VectorIndex {
     import graft.operators.Dedup
     val docs = Dedup.shingleDocs(spark, dir)
     try {
-      val bktMod = Dedup.bandSubBuckets(docs.count()).toLong
-      spark.range(1).select(lit(bktMod).as("bkt_mod"))
+      spark.range(1).select(lit(Dedup.bandSubBuckets(docs.count()).toLong).as("bkt_mod"))
         .write.mode("overwrite").parquet(path + "_meta")
-      writeGeneration(Dedup.minhashBands(docs)
-        .withColumn("bkt", pmod(col("band_key"), lit(bktMod)).cast("int"))
-        // co-locate each directory before the partitioned write: one
-        // file per (band, bkt) instead of one per (task x directory);
-        // cluster by band_key within each file so parquet row-group
-        // min/max stats stay tight — a probe that can't directory-prune
-        // (batch keys covering every (band, bkt)) still skips
-        // row-groups outside its band_key range
-        .repartition(col("band"), col("bkt"))
-        .sortWithinPartitions(col("band"), col("bkt"), col("band_key")),
-        path, 0L, "band", "bkt")
-      writeGeneration(docs.select(col("doc_id"), col("sh")), path + "_sh", 0L)
+      encodeMinhash(docs, path, 0L)
     } finally docs.unpersist()
-  }
-
-  def minhashIndexReady(spark: SparkSession, dir: String): String = {
-    val path = indexPath(dir, "minhash")
-    buildIfMissing(path, Seq("_meta", "_sh", ""))(buildMinhashIndex(spark, dir, _))
-    path
   }
 
   /** Driver entry: build-if-missing (rebuild_index), then serve. */

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import graft.sources.VectorIndex.{hasGeneration, writeGeneration}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.sources.VectorIndex
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Structured Streaming pipelines over the events stream.
   *
@@ -177,6 +177,35 @@ object EventStreams {
       .collect().map(_.getLong(0)).sorted
   }
 
+  /** The one upkeep sink: each micro-batch of `rows` becomes
+    * generation baseGen + batchId, written by `write` unless `landed`
+    * finds that generation already there. foreachBatch is
+    * at-least-once, and a replayed batch carries its old batchId, so
+    * the probe skips it: every append job either commits fully or not
+    * at all (the file-output commit protocol is job-atomic), which
+    * makes the upkeep effectively-once with the single-writer
+    * monotonic-generation contract intact.
+    */
+  private def upkeep(rows: DataFrame, baseGen: Long)
+                    (landed: (SparkSession, Long) => Boolean)
+                    (write: (DataFrame, Long) => Unit): StreamingQuery =
+    rows.writeStream
+      .outputMode("append")
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        val gen = baseGen + batchId
+        if (!landed(batch.sparkSession, gen)) write(batch, gen)
+      }
+      .start()
+
+  /** [[upkeep]] of a generation-directory layout at `path`: the
+    * replay probe is one directory check, and `write` is the layout's
+    * encoder in [[graft.sources.VectorIndex]] — the one its base build
+    * encodes generation 0 with.
+    */
+  private def layoutUpkeep(rows: DataFrame, path: String, baseGen: Long)
+                          (write: (DataFrame, String, Long) => Unit): StreamingQuery =
+    upkeep(rows, baseGen)(VectorIndex.hasGeneration(_, path, _))(write(_, path, _))
+
   /** Streaming ingest → incremental BM25 index maintenance: each
     * micro-batch of (doc_id, text) rows appends its postings to the
     * bucketed posting table at generation baseGen + batchId via
@@ -185,173 +214,79 @@ object EventStreams {
     * patches the inverted index immediately). foreachBatch is the
     * idiomatic sink here because a bucketed saveAsTable append is a
     * batch-transactional side effect Structured Streaming cannot
-    * express as a direct streaming write; batchId-derived generations
-    * make the sink idempotent under foreachBatch's at-least-once
-    * replay: an append job either commits fully or not at all (the
-    * file-output commit protocol is job-atomic), so a replayed batch
-    * is detected by its generation already being present and skipped —
-    * effectively-once maintenance with the single-writer
-    * monotonic-generation contract intact. Probe-side plans on the
+    * express as a direct streaming write. The posting table is a
+    * catalog table, not a generation-directory layout: its replay
+    * probe filters the table's gen column. Probe-side plans on the
     * maintained table stay Exchange-free (see Bm25.livePostings) — the
     * stream never forces an index rebuild.
     */
   def indexStream(docs: DataFrame, tableName: String,
-                  baseGen: Long = 1L): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val gen = baseGen + batchId
-        // a catalog table, not a generation-directory layout: the
-        // replay probe filters its gen column
-        if (spark.table(tableName).filter(col("gen") === gen).isEmpty)
-          graft.operators.Bm25.addDocuments(
-            spark, tableName,
-            batch.select(col("doc_id"), col("text")), gen = gen)
-      }
-      .start()
+                  baseGen: Long = 1L): StreamingQuery =
+    upkeep(docs, baseGen)((spark, gen) =>
+      !spark.table(tableName).filter(col("gen") === gen).isEmpty) { (batch, gen) =>
+      graft.operators.Bm25.addDocuments(batch.sparkSession, tableName,
+        batch.select(col("doc_id"), col("text")), gen = gen)
+    }
 
   /** Streaming maintenance of the persisted LSH vector index
     * (query.rs:282 save_index + lib.rs add_document, incremental
     * form): each micro-batch of (vec_id, embedding) rows is signed
-    * with the SAME hyperplane family as the base build and appended
-    * into the bucket-partitioned layout — new vectors land in the
-    * directories probes already dynamic-prune to, so serving needs no
-    * rebuild and no reader coordination (parquet appends are
-    * job-atomic new files). Same effectively-once contract as
-    * [[indexStream]]: batchId-derived generations; a replay finds its
-    * `gen=` directory present and is skipped.
+    * with the base build's hyperplane family
+    * ([[VectorIndex.encodeLsh]]) and appended into the
+    * bucket-partitioned layout — new vectors land in the directories
+    * probes already dynamic-prune to, so serving needs no rebuild and
+    * no reader coordination (parquet appends are job-atomic new
+    * files).
     */
+  def vectorIndexStream(vecs: DataFrame, path: String,
+                        baseGen: Long = 1L): StreamingQuery =
+    layoutUpkeep(vecs.select(col("vec_id"), col("embedding")), path, baseGen)(
+      VectorIndex.encodeLsh)
+
   /** Streaming maintenance of the persisted PQ codes layout: each
-    * micro-batch is encoded against the SAVED codebook (read back per
-    * batch — one row, KB-scale) and its codes appended; the serving
-    * path's coarse ADC pass picks new vectors up with no rebuild.
-    * Codebook drift is the operator's call (reference rebuild_index
-    * contract): codes are exact for whatever codebook is live, and a
-    * periodic rebuildIndexes refreshes both together.
+    * micro-batch is encoded against the SAVED codebook
+    * ([[VectorIndex.encodePq]]; one row, KB-scale) and its codes
+    * appended; the serving path's coarse ADC pass picks new vectors up
+    * with no rebuild. Codebook drift is the operator's call (reference
+    * rebuild_index contract): codes are exact for whatever codebook is
+    * live, and a periodic rebuildIndexes refreshes both together.
     */
   def pqIndexStream(vecs: DataFrame, path: String,
-                    baseGen: Long = 1L): org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val gen = baseGen + batchId
-        import graft.operators.VectorSearch.{PqM, PqSubDim}
-        import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-        if (!hasGeneration(spark, path, gen)) {
-          val books = spark.read.parquet(path + "_books")
-          writeGeneration(batch
-            .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-            .crossJoin(broadcast(books))
-            .select(col("vec_id") +: (0 until PqM).map { m =>
-              graft.sources.VectorIndex.nearestCentroidCol(
-                slice(col("emb"), m * PqSubDim + 1, PqSubDim),
-                col(s"book$m")).cast("int").as(s"code$m")
-            }: _*), path, gen)
-        }
-      }
-      .start()
+                    baseGen: Long = 1L): StreamingQuery =
+    layoutUpkeep(vecs, path, baseGen)(VectorIndex.encodePq)
 
   /** Streaming maintenance of the persisted IVF cell layout: each
     * micro-batch is routed through the SAVED two-level centroid
-    * relation (coarse argmin, then fine argmin within the coarse
-    * cell — identical assignment to the base build, reconstructed
-    * from `<path>_centroids`, KB-scale) and appended into the cell
-    * directory probes already dynamic-prune to. Centroid drift is the
-    * operator's call, exactly as with [[pqIndexStream]]'s codebook:
-    * assignments are exact for whatever centroids are live, and
-    * `VectorIndex.rebuildIfNeeded` refreshes layout + centroids
-    * together once appended generations trip the heuristic. Same
-    * effectively-once generation contract as [[indexStream]].
+    * relation ([[VectorIndex.encodeIvf]]: coarse argmin, then fine
+    * argmin within the coarse cell, from `<path>_centroids`) and
+    * appended into the cell directory probes already dynamic-prune to.
+    * Centroid drift is the operator's call, exactly as with
+    * [[pqIndexStream]]'s codebook: assignments are exact for whatever
+    * centroids are live, and `VectorIndex.rebuildIfNeeded` refreshes
+    * layout + centroids together once appended generations trip the
+    * heuristic.
     */
-  def ivfIndexStream(vecs: DataFrame, path: String, baseGen: Long = 1L,
-                     stride: Int = graft.operators.VectorSearch.IvfStride)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val gen = baseGen + batchId
-        def nearest(emb: org.apache.spark.sql.Column,
-                    cents: org.apache.spark.sql.Column) =
-          graft.sources.VectorIndex.nearestCentroidCol(emb, cents)
-        if (!hasGeneration(spark, path, gen)) {
-          val fine = spark.read.parquet(path + "_centroids")
-          val coarseArr = fine
-            .filter(col("cid") %
-              (stride.toLong * graft.operators.VectorSearch.IvfCoarse) === 0)
-            .agg(collect_list(struct(col("cid"), col("cemb"))).as("carr"))
-          val fineByCoarse = fine.groupBy(col("ccid"))
-            .agg(collect_list(struct(col("cid"), col("cemb"))).as("fcents"))
-          writeGeneration(batch
-            .select(col("vec_id"), col("embedding"),
-              col("embedding").cast("array<double>").as("emb"))
-            .crossJoin(broadcast(coarseArr))
-            .withColumn("ccid", nearest(col("emb"), col("carr")))
-            .join(broadcast(fineByCoarse), Seq("ccid"))
-            .select(col("vec_id"), col("embedding"),
-              nearest(col("emb"), col("fcents")).cast("int").as("cell"))
-            .repartition(col("cell")), path, gen, "cell")
-        }
-      }
-      .start()
+  def ivfIndexStream(vecs: DataFrame, path: String,
+                     baseGen: Long = 1L): StreamingQuery =
+    layoutUpkeep(vecs, path, baseGen)(VectorIndex.encodeIvf)
 
   /** Streaming maintenance of the persisted IVF-PQ codes layout:
-    * each micro-batch is routed through the SAVED centroids (the
-    * [[ivfIndexStream]] cell assignment) AND encoded through the
-    * SAVED codebook (the [[pqIndexStream]] codes), appended into the
-    * cell directories the probe dynamic-prunes to — every persisted
-    * layout keeps its generation-keyed, replay-safe upkeep path.
+    * each micro-batch is routed through the SAVED centroids AND
+    * encoded through the SAVED codebook ([[VectorIndex.encodeIvfPq]]),
+    * appended into the cell directories the probe dynamic-prunes to.
     * Pair with the flat-store append for the same vectors: the
     * serving rescore reads full vectors by id from the flat table
     * (see annIvfPqFromIndex's contract note), so index upkeep and
     * store ingest are two halves of one logical write.
     */
-  def ivfPqIndexStream(vecs: DataFrame, path: String, baseGen: Long = 1L,
-                       stride: Int = graft.operators.VectorSearch.IvfStride)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val gen = baseGen + batchId
-        import graft.operators.VectorSearch.{PqM, PqSubDim}
-        def nearest(emb: org.apache.spark.sql.Column,
-                    cents: org.apache.spark.sql.Column) =
-          graft.sources.VectorIndex.nearestCentroidCol(emb, cents)
-        if (!hasGeneration(spark, path, gen)) {
-          val fine = spark.read.parquet(path + "_centroids")
-          val books = spark.read.parquet(path + "_books")
-          val coarseArr = fine
-            .filter(col("cid") %
-              (stride.toLong * graft.operators.VectorSearch.IvfCoarse) === 0)
-            .agg(collect_list(struct(col("cid"), col("cemb"))).as("carr"))
-          val fineByCoarse = fine.groupBy(col("ccid"))
-            .agg(collect_list(struct(col("cid"), col("cemb"))).as("fcents"))
-          writeGeneration(batch
-            .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-            .crossJoin(broadcast(coarseArr))
-            .withColumn("ccid", nearest(col("emb"), col("carr")))
-            .join(broadcast(fineByCoarse), Seq("ccid"))
-            .crossJoin(broadcast(books))
-            .select(col("vec_id") +:
-              nearest(col("emb"), col("fcents")).cast("int").as("cell") +:
-              (0 until PqM).map { m =>
-                nearest(slice(col("emb"), m * PqSubDim + 1, PqSubDim),
-                  col(s"book$m")).cast("int").as(s"code$m")
-              }: _*)
-            .repartition(col("cell")), path, gen, "cell")
-        }
-      }
-      .start()
+  def ivfPqIndexStream(vecs: DataFrame, path: String,
+                       baseGen: Long = 1L): StreamingQuery =
+    layoutUpkeep(vecs, path, baseGen)(VectorIndex.encodeIvfPq)
 
-  /** Streaming maintenance of the persisted kNN-GRAPH layout — the
-    * last rebuild-only layout gains the generation-keyed upkeep path
-    * every other index has. Each micro-batch's vectors get their
-    * neighbor lists computed INCREMENTALLY (reference query.rs
-    * add_document: search the existing index for the new point's
-    * neighbors, never rebuild) via
+  /** Streaming maintenance of the persisted kNN-GRAPH layout. Each
+    * micro-batch's vectors get their neighbor lists computed
+    * INCREMENTALLY (reference query.rs add_document: search the
+    * existing index for the new point's neighbors, never rebuild) via
     * [[graft.operators.VectorSearch.knnForProbes]]: resident layout ∪
     * batch as candidates, batch as probes — bucket-blocked with the
     * same plane family and salt subdivision as the base build, so a
@@ -359,110 +294,57 @@ object EventStreams {
     * batch vectors can neighbor each other (two clones arriving
     * together find one another). Rows land as (vec_id, embedding,
     * neighbors) under `gen=<g>/`; [[graft.sources.PointServe.Graph.refresh]]
-    * folds them in and back-links reverse edges resident-side. Same
-    * effectively-once generation contract as [[indexStream]].
+    * folds them in and back-links reverse edges resident-side.
     */
   def knnGraphIndexStream(vecs: DataFrame, path: String,
-                          baseGen: Long = 1L): org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val gen = baseGen + batchId
-        import graft.operators.VectorSearch
-        if (!hasGeneration(spark, path, gen)) {
-          val newVecs = batch
-            .select(col("vec_id"), col("embedding"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            val asEmb = newVecs
-              .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-            val cands = spark.read.parquet(path)
-              .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-              .unionByName(asEmb)
-            val probes = asEmb.select(col("vec_id").as("query_id"), col("emb").as("qv"))
-            val adj = VectorSearch.knnForProbes(cands, probes)
-              .groupBy(col("query_id"))
-              .agg(sort_array(collect_list(struct(col("rank"), col("vec_id"))))
-                .as("ranked"))
-              .select(col("query_id").as("vec_id"),
-                expr("transform(ranked, e -> e.vec_id)").as("neighbors"))
-            writeGeneration(newVecs
-              .join(adj.hint("shuffle_hash"), Seq("vec_id"), "left")
-              .withColumn("neighbors",
-                coalesce(col("neighbors"), expr("array()").cast("array<bigint>"))),
-              path, gen)
-          } finally newVecs.unpersist()
-        }
-      }
-      .start()
+                          baseGen: Long = 1L): StreamingQuery =
+    layoutUpkeep(vecs, path, baseGen) { (batch, _, gen) =>
+      import graft.operators.VectorSearch
+      val spark = batch.sparkSession
+      val newVecs = batch
+        .select(col("vec_id"), col("embedding"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val asEmb = newVecs
+          .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+        val cands = spark.read.parquet(path)
+          .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+          .unionByName(asEmb)
+        val probes = asEmb.select(col("vec_id").as("query_id"), col("emb").as("qv"))
+        val adj = VectorSearch.knnForProbes(cands, probes)
+          .groupBy(col("query_id"))
+          .agg(sort_array(collect_list(struct(col("rank"), col("vec_id"))))
+            .as("ranked"))
+          .select(col("query_id").as("vec_id"),
+            expr("transform(ranked, e -> e.vec_id)").as("neighbors"))
+        VectorIndex.writeGeneration(newVecs
+          .join(adj.hint("shuffle_hash"), Seq("vec_id"), "left")
+          .withColumn("neighbors",
+            coalesce(col("neighbors"), expr("array()").cast("array<bigint>"))),
+          path, gen)
+      } finally newVecs.unpersist()
+    }
 
   /** Streaming maintenance of the persisted MinHash band layout
     * ([[graft.sources.VectorIndex.buildMinhashIndex]]; reference
     * sparse.rs:71 add_document — the signature index is maintained,
     * never rebuilt per batch): each micro-batch of (doc_id, text)
-    * rows is shingled and banded with the SAME permutation family as
-    * the base build; band rows append into the (band, bkt)
-    * directories incremental-dedup probes already prune to, and the
-    * doc-level shingle sketches append into the companion `_sh`
-    * relation so verification covers the new docs too. Same
-    * effectively-once contract as [[indexStream]]: batchId-derived
-    * generations, replays detected and skipped. The `_sh` append runs
-    * BEFORE the band append — the main layout's `gen=` directory is
-    * the commit point, so a crash between the two jobs
-    * leaves orphan sketches (harmless: joined only via candidates),
-    * never bands whose verify side is missing.
+    * rows is shingled, and [[VectorIndex.encodeMinhash]] bands it with
+    * the base build's permutation family and sub-bucket modulus: band
+    * rows append into the (band, bkt) directories incremental-dedup
+    * probes already prune to, and the doc-level shingle sketches
+    * append into the companion `_sh` relation so verification covers
+    * the new docs too.
     */
   def minhashIndexStream(docs: DataFrame, path: String,
-                         baseGen: Long = 1L): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val gen = baseGen + batchId
-        import graft.operators.Dedup
-        import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-        if (!hasGeneration(spark, path, gen)) {
-          // the base build's persisted sub-bucket modulus: appending
-          // under any other value would land rows in directories the
-          // probe never prunes to
-          val bktMod = spark.read.parquet(path + "_meta")
-            .head.getAs[Long]("bkt_mod")
-          val sh = batch
-            .select(col("doc_id"),
-              column(graft.functions.expressions.ShingleHashes(
-                expression(col("text")), 3, Dedup.P)).as("sh"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            if (!hasGeneration(spark, path + "_sh", gen))
-              writeGeneration(sh, path + "_sh", gen)
-            writeGeneration(Dedup.minhashBands(sh)
-              .withColumn("bkt", pmod(col("band_key"), lit(bktMod)).cast("int"))
-              .repartition(col("band"), col("bkt"))
-              // same band_key clustering as the base build: appended
-              // files keep row-group min/max stats probe-tight
-              .sortWithinPartitions(col("band"), col("bkt"), col("band_key")),
-              path, gen, "band", "bkt")
-          } finally sh.unpersist()
-        }
-      }
-      .start()
-
-  def vectorIndexStream(vecs: DataFrame, path: String,
-                        baseGen: Long = 1L): org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val gen = baseGen + batchId
-        val planes = graft.operators.VectorSearch.lshPlanes(
-          64, graft.operators.VectorSearch.AnnLshPlanes)
-        if (!hasGeneration(spark, path, gen))
-          writeGeneration(batch
-            .select(col("vec_id"), col("embedding"))
-            .withColumn("bucket", graft.operators.VectorSearch.lshBucket(
-              col("embedding").cast("array<double>"), planes).cast("int"))
-            .repartition(col("bucket")), path, gen, "bucket")
-      }
-      .start()
+                         baseGen: Long = 1L): StreamingQuery =
+    layoutUpkeep(docs, path, baseGen) { (batch, _, gen) =>
+      import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+      val sh = batch
+        .select(col("doc_id"),
+          column(graft.functions.expressions.ShingleHashes(
+            expression(col("text")), 3, graft.operators.Dedup.P)).as("sh"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try VectorIndex.encodeMinhash(sh, path, gen) finally sh.unpersist()
+    }
 }

@@ -376,16 +376,11 @@ class StreamingSpec extends GraftSuite {
     def newStream() = spark.readStream.schema(schema).parquet(stageDir.toString)
     val q = EventStreams.ivfPqIndexStream(newStream(), idxPath)
     q.processAllAvailable(); q.stop()
+    // the clone's cell and codes equal vec 0's: the encoding-parity
+    // case below covers every layout
     val layout = VectorIndex.readGenerations(spark, idxPath).get
-    val base0 = layout.filter(col("vec_id") === 0L).head
     val appended = layout.filter(col("vec_id") === maxId + 1).head
     assert(appended.getAs[Long]("gen") > 0L, "appended row must carry its generation")
-    assert(appended.getAs[Int]("cell") == base0.getAs[Int]("cell"),
-      "identical embedding must route to the identical cell")
-    (0 until graft.operators.VectorSearch.PqM).foreach { m =>
-      assert(appended.getAs[Int](s"code$m") == base0.getAs[Int](s"code$m"),
-        s"code$m drifted from the base encoding")
-    }
     // replay safety
     val nRows = layout.count()
     val q2 = EventStreams.ivfPqIndexStream(newStream(), idxPath)
@@ -405,6 +400,51 @@ class StreamingSpec extends GraftSuite {
     val served = srv.query(qv, k = 5, excludeId = 0L)
     assert(served.map(_.vecId).contains(maxId + 1),
       s"streamed codes not served: $served")
+  }
+
+  test("every maintained layout encodes a streamed clone exactly as its original in generation 0") {
+    import graft.sources.VectorIndex
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.StreamingQuery
+    val codes = (0 until graft.operators.VectorSearch.PqM).map(m => s"code$m")
+    val vecs = Tables.embeddings(spark, sf).select(col("vec_id"), col("embedding"))
+    val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
+    // (kind, base build, upkeep stream, source rows, id column, the
+    // columns the layout's encoder derives)
+    val cases: Seq[(String, String => Unit, (DataFrame, String) => StreamingQuery,
+        DataFrame, String, Seq[String])] = Seq(
+      ("lsh", VectorIndex.buildLshIndex(spark, sf, _), EventStreams.vectorIndexStream(_, _),
+        vecs, "vec_id", Seq("bucket")),
+      ("ivf", VectorIndex.buildIvfIndex(spark, sf, _), EventStreams.ivfIndexStream(_, _),
+        vecs, "vec_id", Seq("cell")),
+      ("pq", VectorIndex.buildPqIndex(spark, sf, _), EventStreams.pqIndexStream(_, _),
+        vecs, "vec_id", codes),
+      ("ivfpq", VectorIndex.buildIvfPqIndex(spark, sf, _), EventStreams.ivfPqIndexStream(_, _),
+        vecs, "vec_id", "cell" +: codes),
+      ("minhash", VectorIndex.buildMinhashIndex(spark, sf, _),
+        EventStreams.minhashIndexStream(_, _), docs, "doc_id", Seq("band", "bkt", "band_key")))
+    // a fine centroid (61) and a coarse one (0) among the originals
+    val originals = Seq(0L, 1L, 61L, 257L, 488L)
+    val root = java.nio.file.Files.createTempDirectory("layout_parity").toString
+    cases.foreach { case (kind, build, stream, src, id, derived) =>
+      val path = s"$root/$kind"
+      build(path)
+      val shift = src.agg(max(col(id))).head.getLong(0) + 1
+      val stage = s"$root/${kind}_clones"
+      src.filter(col(id).isin(originals: _*)).withColumn(id, col(id) + shift)
+        .write.parquet(stage)
+      val q = stream(spark.readStream.schema(src.schema).parquet(stage), path)
+      q.processAllAvailable(); q.stop()
+      val layout = VectorIndex.readGenerations(spark, path).get
+      def encoded(rows: DataFrame, idCol: org.apache.spark.sql.Column) =
+        rows.select(idCol.as(id) +: derived.map(col): _*)
+          .collect().map(_.toSeq.mkString(",")).sorted.toSeq
+      val base = encoded(layout.filter(col("gen") === 0L && col(id).isin(originals: _*)),
+        col(id))
+      val clones = encoded(layout.filter(col("gen") > 0L), col(id) - shift)
+      assert(base.nonEmpty, s"$kind: no gen-0 rows for the originals")
+      assert(clones == base, s"$kind: clones encode differently from their originals")
+    }
   }
 
   test("end-to-end ingestion: admit → curate → append → every layout upkeep → all point tiers agree") {

@@ -229,6 +229,42 @@ class VectorIndexSpec extends GraftSuite {
     assert(stray.isEmpty, s"stray index dirs left: ${stray.toSeq}")
   }
 
+  test("rebuildIndexes folds the served kNN graph's appended generations into a fresh base") {
+    import graft.streaming.EventStreams
+    import java.nio.file.{Files, Path}
+    // a private copy of the source tables: the stream and the rebuild
+    // touch only this copy's layouts, never the ones other suites share
+    val copy: Path = Files.createTempDirectory("graft_rebuild_")
+    Seq("embeddings.parquet", "documents.parquet").foreach { name =>
+      val src = new java.io.File(sf, name).toPath
+      Files.walk(src).forEach(p => Files.copy(p, copy.resolve(name).resolve(src.relativize(p))))
+    }
+    val tag = copy.toString.replaceAll("[^a-zA-Z0-9]", "_")
+    def rmTree(f: java.io.File): Unit = {
+      if (f.isDirectory) f.listFiles().foreach(rmTree)
+      f.delete()
+    }
+    try {
+      val path = VectorIndex.knnGraphIndexReady(spark, copy.toString)
+      val maxId = Tables.embeddings(spark, sf).agg(max(col("vec_id"))).head.getLong(0)
+      val stageDir = Files.createTempDirectory("graph_rebuild_vecs").toString
+      Tables.embeddings(spark, sf).filter(col("vec_id") === 0)
+        .select((col("vec_id") + maxId + 1).as("vec_id"), col("embedding"))
+        .write.mode("overwrite").parquet(stageDir)
+      val q = EventStreams.knnGraphIndexStream(spark.readStream
+        .schema("vec_id BIGINT, embedding ARRAY<FLOAT>").parquet(stageDir), path)
+      q.processAllAvailable(); q.stop()
+      assert(VectorIndex.generations(spark, path) == Seq(0L, 1L))
+      VectorIndex.rebuildIndexes(spark, copy.toString)
+      assert(VectorIndex.generations(spark, path) == Seq(0L))
+    } finally {
+      rmTree(copy.toFile)
+      new java.io.File(System.getProperty("java.io.tmpdir")).listFiles()
+        .filter(f => f.getName.startsWith("graft_vindex_") && f.getName.contains(tag))
+        .foreach(rmTree)
+    }
+  }
+
   test("indexStats reports points, dimension, disk size and maintenance debt") {
     VectorIndex.annLshIndexed(spark, sf) // build-if-missing
     val s = VectorIndex.indexStats(spark, sf, "lsh")
