@@ -76,7 +76,7 @@ object RecallSweep {
           .map(_.getAs[Long]("vec_id")).toSet
         recallOf(got, bruteL2(emb, qid, 10))
       })
-      // graph index at untouched ef=48 via the serving-tier greedy
+      // graph index at the fixed GraphEf (48) via the serving-tier greedy
       // walk over the persisted kNN layout (the r7 clone-collapse was
       // found by hand; this re-measures it every round)
       val graphIdx = graft.sources.PointServe.loadGraph(spark, sfDir)
@@ -92,7 +92,7 @@ object RecallSweep {
       // graph over its slice (the distributed-ANN deployment shape —
       // per-shard index, per-shard walk, exact gather re-rank); the
       // merged top-k recall vs brute is the figure the 100 TB dense
-      // serving story rests on, measured per SF at untouched ef
+      // serving story rests on, measured per SF at the fixed GraphEf
       val nShards = 4
       val shardDirs = (0 until nShards).map { s =>
         val p = java.nio.file.Files.createTempDirectory(s"gshard$s")
@@ -112,7 +112,7 @@ object RecallSweep {
       })
       // served ANN-backed hybrid (r10): fused-overlap@10 of the
       // graph-dense-branch hybrid vs the brute-parity hybrid, at the
-      // SAME untouched ef the QPS record quotes — the recall contract
+      // SAME fixed GraphEf the QPS record quotes — the recall contract
       // measured at the SF where the speed claim is made, not just at
       // the spec's unit scale
       val served = graft.sources.PointServe.loadEmbedded(spark, sfDir)

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.operators.VectorSearch
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** In-JVM point-query serving over the persisted ANN layouts — the
@@ -20,7 +20,16 @@ import org.apache.spark.sql.functions._
   * batch kernels loop-for-loop (sequential accumulation order
   * included), so served results are BIT-IDENTICAL to the batch twins:
   * PointServeSpec asserts equality against [[VectorIndex.annLshFromIndex]]
-  * / `annIvfFromIndex` / `annPqFromIndex` row sets.
+  * / `annIvfFromIndex` / `annPqFromIndex` / `annIvfPqFromIndex` rows and
+  * [[graft.operators.Dedup.minhashIncrementalIndexed]]'s per-document
+  * rows, and pins the kNN-graph walk's recall floor against brute
+  * force.
+  *
+  * Every maintained layout is served by one [[Maintained]] tier: its
+  * `fold` of a layout's generations into a snapshot plus its `query`.
+  * The LSH, IVF, PQ and IVF-PQ tiers share one resident cell map
+  * ([[CellTier]]); LSH and IVF share one cosine scan, PQ and IVF-PQ one
+  * ADC scan.
   *
   * Memory contracts (what each index holds resident):
   *  - LSH / IVF: vec_id + full vector per row — the embedded
@@ -29,13 +38,13 @@ import org.apache.spark.sql.functions._
   *    fits the reference; there the layout's bucket/cell directories
   *    shard across serving nodes, each loading its partitions (the
   *    partition column IS the shard key).
-  *  - PQ: vec_id + M codes (~25x compressed — the shape that makes a
-  *    large corpus servable from memory) + the one-row codebook. The
-  *    exact-rescore stage needs original vectors, which the codes
-  *    layout deliberately omits: the caller plugs a `vectorLookup`
-  *    (in embedded mode a heap map; at scale the KV/feature-store
-  *    tier) or gets ADC-ranked results unrescored — the same
-  *    approximate/exact split as the batch twin.
+  *  - PQ / IVF-PQ: vec_id + M codes (~25x compressed — the shape that
+  *    makes a large corpus servable from memory) + the one-row codebook
+  *    (and IVF-PQ's centroid table). The exact-rescore stage needs
+  *    original vectors, which the codes layout deliberately omits: the
+  *    caller plugs a `vectorLookup` (in embedded mode a heap map; at
+  *    scale the KV/feature-store tier) or gets ADC-ranked results
+  *    unrescored — the same approximate/exact split as the batch twin.
   */
 object PointServe {
 
@@ -89,9 +98,6 @@ object PointServe {
     sig
   }
 
-  /** Rank candidates exactly like the batch twins: score DESC (or dist
-    * ASC via negation), vec_id ASC, take k, rank 1..k.
-    */
   /** Primitive bounded selection — the zero-boxing counterpart of
     * [[topK]] for corpus-sized scans with a LARGE k (the PQ coarse
     * pool is scale-relative and reaches 10^4 entries at sf10, where
@@ -139,6 +145,9 @@ object PointServe {
     }
   }
 
+  /** Rank candidates exactly like the batch twins: score DESC (or dist
+    * ASC via negation), vec_id ASC, take k, rank 1..k.
+    */
   private def topK(cands: Iterator[(Long, Long)], k: Int,
                    ascending: Boolean = false): Seq[Hit] = {
     val ord = if (ascending) Ordering.by[(Long, Long), (Long, Long)](c => (c._2, c._1))
@@ -154,108 +163,6 @@ object PointServe {
       .map { case ((id, s), i) => Hit(i + 1, id, s) }
   }
 
-  /** LSH point index: bucket → members with full vectors resident.
-    * Query math mirrors [[VectorIndex.annLshFromIndex]] exactly:
-    * signature on the same deterministic plane family, XOR multi-probe
-    * mask set, fx4 cosine, (score DESC, vec_id ASC) ranking.
-    *
-    * [[refresh]] catches the served snapshot up with streaming
-    * maintenance ([[graft.streaming.EventStreams.vectorIndexStream]]
-    * adds `gen=<g>` directories to the same layout): it lists the
-    * layout root and reads ONLY the generation directories above the
-    * loaded one, then swaps in a new snapshot. Queries read a
-    * @volatile immutable snapshot, so a concurrent refresh is
-    * invisible mid-query; refresh itself is single-writer (the
-    * reference's sequential add_document contract).
-    */
-  final class Lsh private[PointServe] (
-      spark: SparkSession, path: String,
-      @volatile private var snap: (java.util.HashMap[Int, Array[(Long, Array[Double])]], Long),
-      planes: Array[Array[Int]], masks: Array[Long],
-      shard: Option[Set[Int]] = None) {
-
-    def query(qv: Array[Double], k: Int = 5, excludeId: Long = -1L): Seq[Hit] = {
-      val buckets = snap._1
-      val qbucket = signature(qv, planes).toInt
-      // primitive loop + selection (see PrimTopK): clone-dense probe
-      // buckets make the candidate set corpus-fraction-sized, where a
-      // boxed tuple per cosine dominated the walk (r9 sf1 measure)
-      val sel = new PrimTopK(k, ascending = false)
-      var mi = 0
-      while (mi < masks.length) {
-        val b = buckets.get(qbucket ^ masks(mi).toInt)
-        if (b != null) {
-          var i = 0
-          while (i < b.length) {
-            val (id, emb) = b(i)
-            if (id != excludeId) sel.add(id, fx4(cosine(emb, qv)))
-            i += 1
-          }
-        }
-        mi += 1
-      }
-      sel.hits()
-    }
-
-    /** Fold generations appended since load/last refresh into the
-      * snapshot; returns the number of rows picked up.
-      */
-    def refresh(): Int = {
-      val (buckets, maxGen) = snap
-      val delta = PointServe.readLshRows(spark, path, Some(maxGen), shard)
-      if (delta.isEmpty) 0
-      else {
-        val next = new java.util.HashMap[Int, Array[(Long, Array[Double])]](buckets)
-        delta.groupBy(_._1).foreach { case (b, rs) =>
-          val add = rs.map(r => (r._2, r._3))
-          next.put(b, Option(next.get(b)).map(_ ++ add).getOrElse(add))
-        }
-        snap = (next, delta.iterator.map(_._4).max max maxGen)
-        delta.length
-      }
-    }
-
-    def size: Int = {
-      var n = 0
-      snap._1.values().forEach(a => n += a.length)
-      n
-    }
-  }
-
-  /** Rows of a layout's generations above `afterGen` (every
-    * generation with None), projected by `select` and decoded by
-    * `decode`: the shared body of the tiers' load and refresh reads.
-    * No generation directory above `afterGen` — no rows, no Spark job.
-    */
-  private def genRows[T: scala.reflect.ClassTag](spark: SparkSession, path: String,
-                                                 afterGen: Option[Long])
-                                                (select: DataFrame => DataFrame)
-                                                (decode: Row => T): Array[T] =
-    VectorIndex.readGenerations(spark, path, afterGen)
-      .fold(Array.empty[T])(l => select(l).collect().map(decode))
-
-  /** (bucket, vec_id, emb, gen) rows, optionally only beyond a
-    * generation (only those `gen=` directories are read). A `shard`
-    * restriction filters on the bucket partition column: the listing
-    * still covers every directory, and only the read is pruned to the
-    * shard's buckets.
-    */
-  private def readLshRows(spark: SparkSession, path: String,
-                          afterGen: Option[Long],
-                          shard: Option[Set[Int]] = None): Array[(Int, Long, Array[Double], Long)] =
-    genRows(spark, path, afterGen) { l =>
-      shard.fold(l)(s => l.filter(col("bucket").isin(s.toSeq: _*)))
-        .select(col("vec_id"), col("embedding").cast("array<double>"), col("bucket"), col("gen"))
-    }(r => (r.getInt(2), r.getLong(0), r.getSeq[Double](1).toArray, r.getLong(3)))
-
-  /** Scatter-gather merge for sharded serving: each shard answers
-    * from its own bucket subset with the same ranking; the gather
-    * re-ranks the union — identical to the unsharded result because
-    * bucket membership partitions the candidate set and the ranking
-    * key (score, vec_id) is global. This is the 100 TB deployment
-    * shape: the layout's partition column is the shard key, each
-    * serving node loads its directories, a router merges top-ks.
-    */
   /** RRF fusion over ranked branch hit lists — 1/(RrfK + rank) summed
     * per doc in branch order, fx6, (score DESC, id ASC) top-`limit`.
     * Shared by the embedded server's hybrid forms and the sharded
@@ -276,16 +183,247 @@ object PointServe {
     topK(cands, limit)
   }
 
+  /** Scatter-gather merge for sharded serving: each shard answers
+    * from its own bucket subset with the same ranking; the gather
+    * re-ranks the union — identical to the unsharded result because
+    * bucket membership partitions the candidate set and the ranking
+    * key (score, vec_id) is global. This is the 100 TB deployment
+    * shape: the layout's partition column is the shard key, each
+    * serving node loads its directories, a router merges top-ks.
+    */
   def mergeHits(shardHits: Seq[Seq[Hit]], k: Int,
                 ascending: Boolean = false): Seq[Hit] =
     topK(shardHits.iterator.flatten.map(h => (h.vecId, h.score)), k, ascending)
 
+  /** The generation contract every maintained tier shares. A tier
+    * serves one immutable snapshot, published by a single volatile
+    * write, so a concurrent refresh is invisible mid-query.
+    * [[refresh]] catches the snapshot up with streaming maintenance
+    * ([[graft.streaming.EventStreams]]'s upkeep streams add `gen=<g>`
+    * directories to the layout): it lists the generations above the
+    * highest one already folded (one listing of the layout root, no
+    * Spark job); with none it returns 0, otherwise the tier's `fold`
+    * reads exactly those generation directories into a new snapshot
+    * built beside the served one, the new snapshot is swapped in, and
+    * refresh returns the rows it added. The folded generation then
+    * advances to the highest one listed, also when none of its rows
+    * fell into a shard's part of the layout. A tier loads by folding
+    * every generation into its empty snapshot. Refresh is
+    * single-writer (the reference's sequential add_document contract).
+    */
+  private[graft] sealed abstract class Maintained[S] private[PointServe] (
+      spark: SparkSession, path: String, empty: S) {
+    @volatile protected var snap: S = empty
+    private var folded = -1L
+
+    /** `s` plus the rows of generations `gens`; the rows added. */
+    protected def fold(s: S, gens: Seq[Long]): (S, Int)
+
+    def refresh(): Int = synchronized {
+      val gens = VectorIndex.generations(spark, path).filter(_ > folded)
+      if (gens.isEmpty) 0
+      else {
+        val (next, added) = fold(snap, gens)
+        snap = next
+        folded = gens.last
+        added
+      }
+    }
+
+    def size: Int
+  }
+
+  /** A tier loaded: every generation folded into its empty snapshot. */
+  private def loaded[T <: Maintained[_]](tier: T): T = { tier.refresh(); tier }
+
+  /** The rows of a layout's generations `gens`, projected by `select`
+    * and decoded by `decode`. No generation — no rows, no Spark job.
+    */
+  private def genRows[T: scala.reflect.ClassTag](spark: SparkSession, path: String,
+                                                 gens: Seq[Long])
+                                                (select: DataFrame => DataFrame)
+                                                (decode: Row => T): Array[T] =
+    VectorIndex.readGenerations(spark, path, gens)
+      .fold(Array.empty[T])(l => select(l).collect().map(decode))
+
+  /** The resident cells of the LSH, IVF, PQ and IVF-PQ tiers: cell →
+    * (vec_id, payload) members, and the resident row count.
+    */
+  private[PointServe] final case class Cells[P](
+      members: java.util.HashMap[Int, Array[(Long, P)]], rows: Int)
+
+  /** A tier over one resident cell map: an LSH bucket, an IVF or
+    * IVF-PQ fine cell, or PQ's one cell that holds every row. `select`
+    * projects a generation's rows to (cell INT, vec_id, payload
+    * columns…) and `payload` decodes a row's payload; a fold appends
+    * each generation's members to their cells.
+    */
+  private[graft] sealed abstract class CellTier[P] private[PointServe] (
+      spark: SparkSession, path: String, select: DataFrame => DataFrame,
+      payload: Row => P)
+      extends Maintained[Cells[P]](spark, path, Cells(new java.util.HashMap(), 0)) {
+
+    protected def fold(s: Cells[P], gens: Seq[Long]): (Cells[P], Int) = {
+      val delta = genRows(spark, path, gens)(select)(r =>
+        (r.getInt(0), (r.getLong(1), payload(r))))
+      val next = new java.util.HashMap[Int, Array[(Long, P)]](s.members)
+      delta.groupBy(_._1).foreach { case (c, rs) =>
+        val add = rs.map(_._2)
+        next.put(c, Option(next.get(c)).map(_ ++ add).getOrElse(add))
+      }
+      (Cells(next, s.rows + delta.length), delta.length)
+    }
+
+    def size: Int = snap.rows
+  }
+
+  private def cellRows(cell: Column, payload: Seq[Column]): DataFrame => DataFrame =
+    _.select(cell +: col("vec_id") +: payload: _*)
+  private val vecCol = Seq(col("embedding").cast("array<double>"))
+  private def vecOf(r: Row): Array[Double] = r.getSeq[Double](2).toArray
+  private val codeCols = (0 until VectorSearch.PqM).map(m => col(s"code$m"))
+  private def codesOf(r: Row): Array[Int] = Array.tabulate(VectorSearch.PqM)(m => r.getInt(m + 2))
+
+  /** fx4 cosine over the members of the `probe` cells, (score DESC,
+    * vec_id ASC) top-k: the LSH and IVF scan. Primitive selection (see
+    * PrimTopK): clone-dense probe cells make the candidate set
+    * corpus-fraction-sized, where a boxed tuple per cosine dominated
+    * the walk (r9 sf1 measure).
+    */
+  private def cosineScan(cells: java.util.HashMap[Int, Array[(Long, Array[Double])]],
+                         probe: Array[Int], qv: Array[Double], k: Int,
+                         excludeId: Long): Seq[Hit] = {
+    val sel = new PrimTopK(k, ascending = false)
+    var c = 0
+    while (c < probe.length) {
+      val members = cells.get(probe(c))
+      if (members != null) {
+        var i = 0
+        while (i < members.length) {
+          val (id, emb) = members(i)
+          if (id != excludeId) sel.add(id, fx4(cosine(emb, qv)))
+          i += 1
+        }
+      }
+      c += 1
+    }
+    sel.hits()
+  }
+
+  /** The ADC scan of PQ and IVF-PQ, [[VectorIndex.annPqFromIndex]] /
+    * `annIvfPqFromIndex` loop-for-loop: per-query ADC table, fx4 ADC
+    * distance over the `probe` cells' codes, (dist ASC, vec_id ASC)
+    * coarse pool of [[VectorSearch.pqCoarseKFor]] the resident rows —
+    * the same n the batch twin resolves its pool from — then exact-L2
+    * rescore through `vectorLookup`. With a lookup the result is
+    * bit-identical to the batch twin; without one the fx4 ADC ranking
+    * is returned as-is (approximate tier).
+    */
+  private def adcScan(cells: Cells[Array[Int]], probe: Array[Int],
+                      books: Array[Array[Array[Double]]], qv: Array[Double], k: Int,
+                      excludeId: Long,
+                      vectorLookup: Long => Option[Array[Double]]): Seq[Hit] = {
+    import VectorSearch.{PqM, PqSubDim}
+    val adc = Array.tabulate(PqM, books(0).length) { (m, c) =>
+      l2Sq(qv, books(m)(c), m * PqSubDim, PqSubDim, 0)
+    }
+    // primitive selection: the coarse pool is scale-relative (10^4
+    // at sf10) — a boxed tuple per scanned code would dominate
+    val sel = new PrimTopK(VectorSearch.pqCoarseKFor(cells.rows.toLong), ascending = true)
+    var c = 0
+    while (c < probe.length) {
+      val members = cells.members.get(probe(c))
+      if (members != null) {
+        var r = 0
+        while (r < members.length) {
+          val (id, code) = members(r)
+          if (id != excludeId) {
+            var dist = 0.0
+            var m = 0
+            while (m < PqM) { dist += adc(m)(code(m)); m += 1 }
+            sel.add(id, fx4(dist))
+          }
+          r += 1
+        }
+      }
+      c += 1
+    }
+    val coarse = sel.hits()
+    val rescored = coarse.flatMap(h => vectorLookup(h.vecId).map(emb =>
+      (h.vecId, fx4(l2Sq(emb, qv, 0, math.min(emb.length, qv.length), 0)))))
+    if (rescored.isEmpty) coarse.take(k).zipWithIndex.map {
+      case (h, i) => Hit(i + 1, h.vecId, h.score)
+    }
+    else topK(rescored.iterator, k, ascending = true)
+  }
+
+  /** A fine centroid: (cid, cemb, ccid). */
+  private type Centroid = (Long, Array[Double], Long)
+
+  /** `<path>_centroids`, the IVF and IVF-PQ routing table. */
+  private def readCentroids(spark: SparkSession, path: String): Array[Centroid] =
+    spark.read.parquet(path + "_centroids")
+      .select(col("cid"), col("cemb"), col("ccid")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getLong(2)))
+
+  /** `<path>_books`, m → cid → subvector: one row of PqM
+    * array<struct<cid,cemb>> columns; codes index cid-sorted order
+    * (annPqFromIndex array_sorts), and cids are the dense 0..PqK-1
+    * range by construction.
+    */
+  private def readBooks(spark: SparkSession, path: String): Array[Array[Array[Double]]] = {
+    import VectorSearch.PqM
+    val bookRow = spark.read.parquet(path + "_books")
+      .select((0 until PqM).map(m => col(s"book$m")): _*).collect()(0)
+    Array.tabulate(PqM) { m =>
+      bookRow.getSeq[Row](m).sortBy(_.getLong(0)).map(_.getSeq[Double](1).toArray).toArray
+    }
+  }
+
+  /** The fine cells an IVF query probes, [[VectorIndex.annIvfFromIndex]]'s
+    * selection: the [[VectorSearch.IvfProbeCoarse]] nearest coarse
+    * centroids by (L2, cid), then the [[VectorSearch.IvfNprobe]]
+    * nearest fine cells inside them.
+    */
+  private def probeCells(fine: Array[Centroid], qv: Array[Double]): Array[Int] = {
+    def nearest(cands: Iterator[Centroid], n: Int): Seq[Long] = cands
+      .map { case (cid, cemb, _) => (cid, l2Sq(cemb, qv, 0, math.min(cemb.length, qv.length), 0)) }
+      .toSeq.sortBy { case (cid, d) => (d, cid) }
+      .take(n).map(_._1)
+    val coarseMod = VectorSearch.IvfStride.toLong * VectorSearch.IvfCoarse
+    val qcoarse = nearest(fine.iterator.filter(_._1 % coarseMod == 0),
+      VectorSearch.IvfProbeCoarse).toSet
+    nearest(fine.iterator.filter(f => qcoarse.contains(f._3)), VectorSearch.IvfNprobe)
+      .map(_.toInt).toArray
+  }
+
+  /** LSH point index: bucket → members with full vectors resident.
+    * Query math mirrors [[VectorIndex.annLshFromIndex]] exactly:
+    * signature on the same deterministic plane family, XOR multi-probe
+    * mask set of [[VectorSearch.LshProbeRadius]], fx4 cosine,
+    * (score DESC, vec_id ASC) ranking. A `shard` tier loads and
+    * refreshes only the rows of its buckets: the listing still covers
+    * every directory, and the read is pruned to the shard's buckets.
+    */
+  final class Lsh private[PointServe] (spark: SparkSession, path: String,
+                                       shard: Option[Set[Int]])
+      extends CellTier[Array[Double]](spark, path,
+        l => cellRows(col("bucket"), vecCol)(
+          shard.fold(l)(s => l.filter(col("bucket").isin(s.toSeq: _*)))), vecOf) {
+    private val planes = VectorSearch.lshPlanes(64, VectorSearch.AnnLshPlanes)
+    private val masks = VectorSearch.lshProbeMasks(VectorSearch.AnnLshPlanes)
+
+    def query(qv: Array[Double], k: Int = 5, excludeId: Long = -1L): Seq[Hit] = {
+      val qbucket = signature(qv, planes).toInt
+      cosineScan(snap.members, masks.map(m => qbucket ^ m.toInt), qv, k, excludeId)
+    }
+  }
+
   /** Load the LSH layout into memory (builds it first if absent). One
     * Spark job here; zero afterwards.
     */
-  def loadLsh(spark: SparkSession, dir: String,
-              radius: Int = VectorSearch.LshProbeRadius): Lsh =
-    loadLshFrom(spark, VectorIndex.lshIndexReady(spark, dir), radius)
+  def loadLsh(spark: SparkSession, dir: String): Lsh =
+    loadLshFrom(spark, VectorIndex.lshIndexReady(spark, dir))
 
   /** [[loadLsh]] over an explicit layout path (a test copy, a layout
     * built elsewhere) and optionally a bucket shard: a serving node
@@ -294,294 +432,63 @@ object PointServe {
     * exact unsharded result.
     */
   def loadLshFrom(spark: SparkSession, path: String,
-                  radius: Int = VectorSearch.LshProbeRadius,
-                  shard: Option[Set[Int]] = None): Lsh = {
-    val rows = readLshRows(spark, path, None, shard)
-    val buckets = new java.util.HashMap[Int, Array[(Long, Array[Double])]]()
-    rows.groupBy(_._1).foreach { case (b, rs) =>
-      buckets.put(b, rs.map(r => (r._2, r._3)))
-    }
-    val maxGen = if (rows.isEmpty) 0L else rows.iterator.map(_._4).max
-    new Lsh(spark, path, (buckets, maxGen),
-      VectorSearch.lshPlanes(64, VectorSearch.AnnLshPlanes),
-      VectorSearch.lshProbeMasks(VectorSearch.AnnLshPlanes, radius), shard)
-  }
+                  shard: Option[Set[Int]] = None): Lsh =
+    loaded(new Lsh(spark, path, shard))
 
   /** IVF point index: fine-centroid table + cell → members resident.
-    * Query math mirrors [[VectorIndex.annIvfFromIndex]]: nearest
-    * [[VectorSearch.IvfProbeCoarse]] coarse centroids by (L2, cid),
-    * nprobe nearest fine cells inside them, fx4 cosine over the probed
-    * cells, (score DESC, vec_id ASC) top-k. [[refresh]] folds
-    * generations appended by
-    * [[graft.streaming.EventStreams.ivfIndexStream]] into the served
-    * snapshot — same generation-directory delta read and volatile-swap
-    * contract as [[Lsh.refresh]].
+    * Query math mirrors [[VectorIndex.annIvfFromIndex]]: [[probeCells]],
+    * then fx4 cosine over the probed cells, (score DESC, vec_id ASC)
+    * top-k.
     */
-  final class Ivf private[PointServe] (
-      spark: SparkSession, path: String,
-      @volatile private var snap: (java.util.HashMap[Int, Array[(Long, Array[Double])]], Long),
-      fine: Array[(Long, Array[Double], Long)]) { // (cid, cemb, ccid)
+  final class Ivf private[PointServe] (spark: SparkSession, path: String,
+                                       fine: Array[Centroid])
+      extends CellTier[Array[Double]](spark, path, cellRows(col("cell"), vecCol), vecOf) {
 
-    def query(qv: Array[Double], k: Int = 20, excludeId: Long = -1L,
-              nprobe: Int = VectorSearch.IvfNprobe): Seq[Hit] = {
-      val cells = snap._1
-      val coarseMod = VectorSearch.IvfStride.toLong * VectorSearch.IvfCoarse
-      val qcoarse = fine.iterator.filter(_._1 % coarseMod == 0)
-        .map { case (cid, cemb, _) => (cid, l2Sq(cemb, qv, 0, math.min(cemb.length, qv.length), 0)) }
-        .toSeq.sortBy { case (cid, d) => (d, cid) }
-        .take(VectorSearch.IvfProbeCoarse).map(_._1).toSet
-      val probeCells = fine.iterator.filter(f => qcoarse.contains(f._3))
-        .map { case (cid, cemb, _) => (cid, l2Sq(cemb, qv, 0, math.min(cemb.length, qv.length), 0)) }
-        .toSeq.sortBy { case (cid, d) => (d, cid) }
-        .take(nprobe).map(_._1.toInt)
-      val sel = new PrimTopK(k, ascending = false)
-      probeCells.foreach { c =>
-        val members = cells.get(c)
-        if (members != null) {
-          var i = 0
-          while (i < members.length) {
-            val (id, emb) = members(i)
-            if (id != excludeId) sel.add(id, fx4(cosine(emb, qv)))
-            i += 1
-          }
-        }
-      }
-      sel.hits()
-    }
-
-    /** Fold generations appended since load/last refresh into the
-      * snapshot; returns the number of rows picked up.
-      */
-    def refresh(): Int = {
-      val (cells, maxGen) = snap
-      val delta = PointServe.readIvfRows(spark, path, Some(maxGen))
-      if (delta.isEmpty) 0
-      else {
-        val next = new java.util.HashMap[Int, Array[(Long, Array[Double])]](cells)
-        delta.groupBy(_._1).foreach { case (c, rs) =>
-          val add = rs.map(r => (r._2, r._3))
-          next.put(c, Option(next.get(c)).map(_ ++ add).getOrElse(add))
-        }
-        snap = (next, delta.iterator.map(_._4).max max maxGen)
-        delta.length
-      }
-    }
-
-    def size: Int = {
-      var n = 0
-      snap._1.values().forEach(a => n += a.length)
-      n
-    }
+    def query(qv: Array[Double], k: Int = 20, excludeId: Long = -1L): Seq[Hit] =
+      cosineScan(snap.members, probeCells(fine, qv), qv, k, excludeId)
   }
-
-  /** (cell, vec_id, emb, gen) rows, optionally only beyond a
-    * generation — same delta read as [[readLshRows]].
-    */
-  private def readIvfRows(spark: SparkSession, path: String,
-                          afterGen: Option[Long]): Array[(Int, Long, Array[Double], Long)] =
-    genRows(spark, path, afterGen)(_.select(col("vec_id"),
-      col("embedding").cast("array<double>"), col("cell"), col("gen")))(
-      r => (r.getInt(2), r.getLong(0), r.getSeq[Double](1).toArray, r.getLong(3)))
 
   def loadIvf(spark: SparkSession, dir: String): Ivf =
     loadIvfFrom(spark, VectorIndex.ivfIndexReady(spark, dir))
 
-  def loadIvfFrom(spark: SparkSession, path: String): Ivf = {
-    val rows = readIvfRows(spark, path, None)
-    val cells = new java.util.HashMap[Int, Array[(Long, Array[Double])]]()
-    rows.groupBy(_._1).foreach { case (c, rs) =>
-      cells.put(c, rs.map(r => (r._2, r._3)))
-    }
-    val maxGen = if (rows.isEmpty) 0L else rows.iterator.map(_._4).max
-    val fine = spark.read.parquet(path + "_centroids")
-      .select(col("cid"), col("cemb"), col("ccid")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getLong(2)))
-    new Ivf(spark, path, (cells, maxGen), fine)
-  }
+  def loadIvfFrom(spark: SparkSession, path: String): Ivf =
+    loaded(new Ivf(spark, path, readCentroids(spark, path)))
 
   /** PQ point index: codes + codebook resident (no vectors — the
-    * compressed serving shape). Query mirrors
-    * [[VectorIndex.annPqFromIndex]]: per-query ADC table, coarse
-    * (adc_dist ASC, vec_id ASC) top-coarseK (scale-relative default, [[VectorSearch.pqCoarseKFor]]), then
-    * exact-L2 rescore through `vectorLookup` when provided — with a
-    * lookup the result set is bit-identical to the batch twin; without
-    * one the fx4 ADC ranking is returned as-is (approximate tier).
+    * compressed serving shape), all in one cell. Query mirrors
+    * [[VectorIndex.annPqFromIndex]]: [[adcScan]] over that cell.
     */
-  final class Pq private[PointServe] (
-      spark: SparkSession, path: String,
-      @volatile private var snap: (Array[Long], Array[Array[Int]], Long),
-      books: Array[Array[Array[Double]]]) { // m -> cid -> subvector
-
-    import VectorSearch.{PqM, PqSubDim}
+  final class Pq private[PointServe] (spark: SparkSession, path: String,
+                                      books: Array[Array[Array[Double]]])
+      extends CellTier[Array[Int]](spark, path, cellRows(lit(0), codeCols), codesOf) {
 
     def query(qv: Array[Double], k: Int = 20, excludeId: Long = -1L,
-              coarseK: Int = VectorSearch.AutoCoarseK,
-              vectorLookup: Long => Option[Array[Double]] = _ => None): Seq[Hit] = {
-      val (ids, codes, _) = snap
-      // resident row count IS the served corpus size: the same n the
-      // batch twin resolves its scale-relative pool from
-      val ck = if (coarseK == VectorSearch.AutoCoarseK)
-        VectorSearch.pqCoarseKFor(ids.length.toLong) else coarseK
-      val adc = Array.tabulate(PqM, books(0).length) { (m, c) =>
-        l2Sq(qv, books(m)(c), m * PqSubDim, PqSubDim, 0)
-      }
-      // primitive selection: the coarse pool is scale-relative (10^4
-      // at sf10) — a boxed tuple per scanned code would dominate
-      val sel = new PrimTopK(ck, ascending = true)
-      var r = 0
-      while (r < ids.length) {
-        if (ids(r) != excludeId) {
-          val code = codes(r)
-          var dist = 0.0
-          var m = 0
-          while (m < PqM) { dist += adc(m)(code(m)); m += 1 }
-          sel.add(ids(r), fx4(dist))
-        }
-        r += 1
-      }
-      val coarse = sel.hits()
-      val rescored = coarse.flatMap(h => vectorLookup(h.vecId).map(emb =>
-        (h.vecId, fx4(l2Sq(emb, qv, 0, math.min(emb.length, qv.length), 0)))))
-      if (rescored.isEmpty) coarse.take(k).zipWithIndex.map {
-        case (h, i) => Hit(i + 1, h.vecId, h.score)
-      }
-      else topK(rescored.iterator, k, ascending = true)
-    }
-
-    /** Fold code rows appended by
-      * [[graft.streaming.EventStreams.pqIndexStream]] since load/last
-      * refresh into the snapshot (same generation-directory delta read
-      * and volatile-swap contract as [[Lsh.refresh]]); returns rows
-      * added.
-      */
-    def refresh(): Int = {
-      val (ids, codes, maxGen) = snap
-      val delta = PointServe.readPqRows(spark, path, Some(maxGen))
-      if (delta.isEmpty) 0
-      else {
-        snap = (ids ++ delta.map(_._1), codes ++ delta.map(_._2),
-          delta.iterator.map(_._3).max max maxGen)
-        delta.length
-      }
-    }
-
-    def size: Int = snap._1.length
+              vectorLookup: Long => Option[Array[Double]] = _ => None): Seq[Hit] =
+      adcScan(snap, Array(0), books, qv, k, excludeId, vectorLookup)
   }
 
-  /** (vec_id, codes, gen) rows, optionally only beyond a generation. */
-  private def readPqRows(spark: SparkSession, path: String,
-                         afterGen: Option[Long]): Array[(Long, Array[Int], Long)] = {
-    import VectorSearch.PqM
-    genRows(spark, path, afterGen)(_.select(col("vec_id") +: col("gen") +:
-      (0 until PqM).map(m => col(s"code$m")): _*))(
-      r => (r.getLong(0), Array.tabulate(PqM)(m => r.getInt(m + 2)), r.getLong(1)))
-  }
+  def loadPq(spark: SparkSession, dir: String): Pq =
+    loadPqFrom(spark, VectorIndex.pqIndexReady(spark, dir))
+
+  /** [[loadPq]] over an explicit layout path. */
+  def loadPqFrom(spark: SparkSession, path: String): Pq =
+    loaded(new Pq(spark, path, readBooks(spark, path)))
 
   /** IVF-PQ point index — the billion-scale serving shape (FAISS's
     * IndexIVFPQ; the reference's quantized index family): per-cell PQ
     * CODES resident (~10 bytes/vector), fine/coarse centroid tables
     * and the codebook alongside — no vectors. Query mirrors
-    * [[VectorIndex.annIvfPqFromIndex]] loop-for-loop: coarse probe →
-    * nprobe fine cells by (L2, cid) → per-query ADC table → fx4 ADC
-    * ranking over ONLY the probed cells' codes → exact-L2 rescore
-    * through `vectorLookup` when provided (bit-identical to the batch
-    * twin), ADC ranking as-is otherwise. [[refresh]] folds cell-keyed
-    * generations appended by
-    * [[graft.streaming.EventStreams.ivfPqIndexStream]].
+    * [[VectorIndex.annIvfPqFromIndex]]: [[probeCells]], then
+    * [[adcScan]] over ONLY the probed cells' codes.
     */
-  final class IvfPq private[PointServe] (
-      spark: SparkSession, path: String,
-      @volatile private var snap: (java.util.HashMap[Int, Array[(Long, Array[Int])]], Long),
-      fine: Array[(Long, Array[Double], Long)], // (cid, cemb, ccid)
-      books: Array[Array[Array[Double]]]) {     // m -> cid -> subvector
-
-    import VectorSearch.{PqM, PqSubDim}
+  final class IvfPq private[PointServe] (spark: SparkSession, path: String,
+                                         fine: Array[Centroid],
+                                         books: Array[Array[Array[Double]]])
+      extends CellTier[Array[Int]](spark, path, cellRows(col("cell"), codeCols), codesOf) {
 
     def query(qv: Array[Double], k: Int = 10, excludeId: Long = -1L,
-              nprobe: Int = VectorSearch.IvfNprobe,
-              coarseK: Int = VectorSearch.AutoCoarseK,
-              vectorLookup: Long => Option[Array[Double]] = _ => None): Seq[Hit] = {
-      val cells = snap._1
-      val ck = if (coarseK == VectorSearch.AutoCoarseK) {
-        var n = 0L
-        val it = cells.values().iterator()
-        while (it.hasNext) n += it.next().length
-        VectorSearch.pqCoarseKFor(n)
-      } else coarseK
-      val coarseMod = VectorSearch.IvfStride.toLong * VectorSearch.IvfCoarse
-      val qcoarse = fine.iterator.filter(_._1 % coarseMod == 0)
-        .map { case (cid, cemb, _) => (cid, l2Sq(cemb, qv, 0, math.min(cemb.length, qv.length), 0)) }
-        .toSeq.sortBy { case (cid, d) => (d, cid) }
-        .take(VectorSearch.IvfProbeCoarse).map(_._1).toSet
-      val probeCells = fine.iterator.filter(f => qcoarse.contains(f._3))
-        .map { case (cid, cemb, _) => (cid, l2Sq(cemb, qv, 0, math.min(cemb.length, qv.length), 0)) }
-        .toSeq.sortBy { case (cid, d) => (d, cid) }
-        .take(nprobe).map(_._1.toInt)
-      val adc = Array.tabulate(PqM, books(0).length) { (m, c) =>
-        l2Sq(qv, books(m)(c), m * PqSubDim, PqSubDim, 0)
-      }
-      // primitive selection (see Pq.query): the pool is
-      // scale-relative and the probed cells carry a corpus fraction
-      val sel = new PrimTopK(ck, ascending = true)
-      probeCells.foreach { c =>
-        val members = cells.get(c)
-        if (members != null) {
-          var r = 0
-          while (r < members.length) {
-            val (id, code) = members(r)
-            if (id != excludeId) {
-              var dist = 0.0
-              var m = 0
-              while (m < PqM) { dist += adc(m)(code(m)); m += 1 }
-              sel.add(id, fx4(dist))
-            }
-            r += 1
-          }
-        }
-      }
-      val coarse = sel.hits()
-      val rescored = coarse.flatMap(h => vectorLookup(h.vecId).map(emb =>
-        (h.vecId, fx4(l2Sq(emb, qv, 0, math.min(emb.length, qv.length), 0)))))
-      if (rescored.isEmpty) coarse.take(k).zipWithIndex.map {
-        case (h, i) => Hit(i + 1, h.vecId, h.score)
-      }
-      else topK(rescored.iterator, k, ascending = true)
-    }
-
-    /** Fold cell-keyed code generations appended since load/last
-      * refresh; returns rows added.
-      */
-    def refresh(): Int = {
-      val (cells, maxGen) = snap
-      val delta = PointServe.readIvfPqRows(spark, path, Some(maxGen))
-      if (delta.isEmpty) 0
-      else {
-        val next = new java.util.HashMap[Int, Array[(Long, Array[Int])]](cells)
-        delta.groupBy(_._1).foreach { case (c, rs) =>
-          val add = rs.map(r => (r._2, r._3))
-          next.put(c, Option(next.get(c)).map(_ ++ add).getOrElse(add))
-        }
-        snap = (next, delta.iterator.map(_._4).max max maxGen)
-        delta.length
-      }
-    }
-
-    def size: Int = {
-      var n = 0
-      snap._1.values().forEach(a => n += a.length)
-      n
-    }
-  }
-
-  /** (cell, vec_id, codes, gen) rows, optionally only beyond a
-    * generation — same delta read as [[readLshRows]].
-    */
-  private def readIvfPqRows(spark: SparkSession, path: String,
-                            afterGen: Option[Long]): Array[(Int, Long, Array[Int], Long)] = {
-    import VectorSearch.PqM
-    genRows(spark, path, afterGen)(_.select(col("vec_id") +: col("cell") +: col("gen") +:
-      (0 until PqM).map(m => col(s"code$m")): _*))(
-      r => (r.getInt(1), r.getLong(0), Array.tabulate(PqM)(m => r.getInt(m + 3)), r.getLong(2)))
+              vectorLookup: Long => Option[Array[Double]] = _ => None): Seq[Hit] =
+      adcScan(snap, probeCells(fine, qv), books, qv, k, excludeId, vectorLookup)
   }
 
   /** Load the IVF-PQ layout into memory (builds it first if absent).
@@ -591,26 +498,8 @@ object PointServe {
     loadIvfPqFrom(spark, VectorIndex.ivfPqIndexReady(spark, dir))
 
   /** [[loadIvfPq]] over an explicit layout path. */
-  def loadIvfPqFrom(spark: SparkSession, path: String): IvfPq = {
-    import VectorSearch.PqM
-    val rows = readIvfPqRows(spark, path, None)
-    val cells = new java.util.HashMap[Int, Array[(Long, Array[Int])]]()
-    rows.groupBy(_._1).foreach { case (c, rs) =>
-      cells.put(c, rs.map(r => (r._2, r._3)))
-    }
-    val maxGen = if (rows.isEmpty) 0L else rows.iterator.map(_._4).max
-    val fine = spark.read.parquet(path + "_centroids")
-      .select(col("cid"), col("cemb"), col("ccid")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getLong(2)))
-    val bookRow = spark.read.parquet(path + "_books")
-      .select((0 until PqM).map(m => col(s"book$m")): _*).collect()(0)
-    val books = Array.tabulate(PqM) { m =>
-      bookRow.getSeq[org.apache.spark.sql.Row](m)
-        .sortBy(_.getLong(0))
-        .map(_.getSeq[Double](1).toArray).toArray
-    }
-    new IvfPq(spark, path, (cells, maxGen), fine, books)
-  }
+  def loadIvfPqFrom(spark: SparkSession, path: String): IvfPq =
+    loaded(new IvfPq(spark, path, readCentroids(spark, path), readBooks(spark, path)))
 
   /** Embedded retrieval serving: the reference engine's in-memory
     * query surface (sparse.rs SparseIndex + hybrid.rs fusion served
@@ -1143,27 +1032,6 @@ object PointServe {
       embRows.map(_.getLong(0)), embRows.map(_.getSeq[Double](1).toArray))
   }
 
-  def loadPq(spark: SparkSession, dir: String): Pq =
-    loadPqFrom(spark, VectorIndex.pqIndexReady(spark, dir))
-
-  /** [[loadPq]] over an explicit layout path. */
-  def loadPqFrom(spark: SparkSession, path: String): Pq = {
-    import VectorSearch.PqM
-    val rows = readPqRows(spark, path, None)
-    val maxGen = if (rows.isEmpty) 0L else rows.iterator.map(_._3).max
-    // books parquet: one row of PqM array<struct<cid,cemb>> columns;
-    // codes index cid-sorted order (annPqFromIndex array_sorts), and
-    // cids are the dense 0..PqK-1 range by construction
-    val bookRow = spark.read.parquet(path + "_books")
-      .select((0 until PqM).map(m => col(s"book$m")): _*).collect()(0)
-    val books = Array.tabulate(PqM) { m =>
-      bookRow.getSeq[org.apache.spark.sql.Row](m)
-        .sortBy(_.getLong(0))
-        .map(_.getSeq[Double](1).toArray).toArray
-    }
-    new Pq(spark, path, (rows.map(_._1), rows.map(_._2), maxGen), books)
-  }
-
   /** One resident graph node: vector + neighbor ids nearest-first. */
   private type GraphNodes = java.util.HashMap[Long, (Array[Double], Array[Long])]
 
@@ -1175,33 +1043,31 @@ object PointServe {
     * Query: seed the frontier with [[GraphEntryPoints]] deterministic
     * entry nodes (lowest vec_ids — id order is stable across loads and
     * refreshes), then repeatedly expand the best unexpanded candidate's
-    * neighbor list, keeping an `ef`-bounded result set; stop when the
-    * best frontier candidate cannot beat the current ef-th result (the
-    * standard HNSW layer-0 termination). Scores are the same fx4
+    * neighbor list, keeping a [[GraphEf]]-bounded result set; stop when
+    * the best frontier candidate cannot beat the current ef-th result
+    * (the standard HNSW layer-0 termination). Scores are the same fx4
     * cosine (score DESC, vec_id ASC) contract as every other server,
     * so [[mergeHits]] composes graph shards with LSH/IVF/PQ shards
     * unchanged. Zero Spark jobs per query; recall floor vs brute force
     * pinned in PointServeSpec.
     *
-    * [[refresh]] folds generations appended by
-    * [[graft.streaming.EventStreams.knnGraphIndexStream]]: each new
-    * node lands with its own neighbor list AND is back-linked from its
-    * neighbors and its nearest resident nodes (reverse edges make the
-    * new node REACHABLE — its
-    * forward edges alone would leave it invisible to a walk that
-    * starts elsewhere; add_document in the reference mutates both
-    * directions for the same reason). Periodic
-    * [[VectorIndex.rebuildIfNeeded]] re-prunes the grown lists.
+    * A refresh lands each new node with its own neighbor list AND
+    * back-links it from its listed neighbors and from the nearest
+    * resident nodes a walk of the pre-refresh graph finds (the HNSW
+    * insert; add_document in the reference mutates both directions for
+    * the same reason): a batch of novel nodes fills each other's lists,
+    * and links among themselves alone leave the whole batch
+    * unreachable. Periodic [[VectorIndex.rebuildIfNeeded]] re-prunes
+    * the grown lists.
     */
-  final class Graph private[PointServe] (
-      spark: SparkSession, path: String,
-      @volatile private var snap: (GraphNodes, Long, Array[Long])) {
+  final class Graph private[PointServe] (spark: SparkSession, path: String)
+      extends Maintained[(GraphNodes, Array[Long])](spark, path,
+        (new GraphNodes(), Array.empty[Long])) {
 
-    def query(qv: Array[Double], k: Int = 5, ef: Int = 48,
-              excludeId: Long = -1L): Seq[Hit] = {
-      val (nodes, _, entries) = snap
+    def query(qv: Array[Double], k: Int = 5, excludeId: Long = -1L): Seq[Hit] = {
+      val (nodes, entries) = snap
       if (nodes.isEmpty) return Seq.empty
-      val efx = math.max(ef, k)
+      val efx = math.max(GraphEf, k)
       // frontier: best-first by (score DESC, id ASC)
       val frontierOrd = Ordering.by[(Long, Long), (Long, Long)](c => (c._2, -c._1))
       val frontier = scala.collection.mutable.PriorityQueue.empty[(Long, Long)](frontierOrd)
@@ -1234,32 +1100,23 @@ object PointServe {
       topK(results.iterator.filter(_._1 != excludeId), k)
     }
 
-    /** Fold generations appended since load/last refresh; new nodes
-      * are inserted with their lists and back-linked from each listed
-      * neighbor AND from the nearest resident nodes a walk of the
-      * pre-refresh graph finds (the HNSW insert): a batch of novel
-      * nodes fills each other's lists, and links among themselves
-      * alone leave the whole batch unreachable. Returns rows picked up.
-      */
-    def refresh(): Int = {
-      val (nodes, maxGen, _) = snap
-      val delta = PointServe.readGraphRows(spark, path, Some(maxGen))
-      if (delta.isEmpty) 0
-      else {
-        val next = new GraphNodes(nodes)
-        delta.foreach { case (id, emb, nbrs, _) =>
-          next.put(id, (emb, nbrs))
-          // `query` still walks the pre-refresh snapshot
+    protected def fold(s: (GraphNodes, Array[Long]), gens: Seq[Long])
+        : ((GraphNodes, Array[Long]), Int) = {
+      val delta = readGraphRows(spark, path, gens)
+      val next = new GraphNodes(s._1)
+      delta.foreach { case (id, emb, nbrs) =>
+        next.put(id, (emb, nbrs))
+        // the load lands the built lists as they are; `query` still
+        // walks the pre-refresh snapshot
+        if (!s._1.isEmpty) {
           val resident = query(emb, k = math.max(nbrs.length, 1), excludeId = id).map(_.vecId)
           (nbrs ++ resident).distinct.foreach { nb =>
             val t = next.get(nb)
             if (t != null && !t._2.contains(id)) next.put(nb, (t._1, t._2 :+ id))
           }
         }
-        snap = (next, delta.iterator.map(_._4).max max maxGen,
-          PointServe.entryPoints(next))
-        delta.length
       }
+      ((next, entryPoints(next)), delta.length)
     }
 
     def size: Int = snap._1.size()
@@ -1268,7 +1125,7 @@ object PointServe {
       * vector + neighbor-list payload plus map-entry overhead.
       */
     def residentBytes: Long = {
-      val (nodes, _, entries) = snap
+      val (nodes, entries) = snap
       var b = entries.length.toLong * 8
       val it = nodes.entrySet().iterator()
       while (it.hasNext) {
@@ -1284,6 +1141,9 @@ object PointServe {
     */
   val GraphEntryPoints = 8
 
+  /** The graph walk's result-set width (HNSW's `ef`). */
+  val GraphEf = 48
+
   private def entryPoints(nodes: GraphNodes): Array[Long] = {
     val ids = new Array[Long](nodes.size())
     var i = 0
@@ -1298,15 +1158,12 @@ object PointServe {
     else Array.tabulate(GraphEntryPoints)(j => ids(j * (ids.length / GraphEntryPoints)))
   }
 
-  /** (vec_id, emb, neighbors, gen) rows, optionally only beyond a
-    * generation — same delta read as [[readLshRows]].
-    */
-  private def readGraphRows(spark: SparkSession, path: String,
-                            afterGen: Option[Long])
-      : Array[(Long, Array[Double], Array[Long], Long)] =
-    genRows(spark, path, afterGen)(_.select(col("vec_id"),
-      col("embedding").cast("array<double>"), col("neighbors"), col("gen")))(
-      r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getSeq[Long](2).toArray, r.getLong(3)))
+  /** (vec_id, emb, neighbors) rows of generations `gens`. */
+  private def readGraphRows(spark: SparkSession, path: String, gens: Seq[Long])
+      : Array[(Long, Array[Double], Array[Long])] =
+    genRows(spark, path, gens)(_.select(col("vec_id"),
+      col("embedding").cast("array<double>"), col("neighbors")))(
+      r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getSeq[Long](2).toArray))
 
   /** Load the graph layout into memory (builds it first if absent).
     * One Spark job here; zero afterwards.
@@ -1315,13 +1172,8 @@ object PointServe {
     loadGraphFrom(spark, VectorIndex.knnGraphIndexReady(spark, dir))
 
   /** [[loadGraph]] over an explicit layout path. */
-  def loadGraphFrom(spark: SparkSession, path: String): Graph = {
-    val rows = readGraphRows(spark, path, None)
-    val nodes = new GraphNodes()
-    rows.foreach { case (id, emb, nbrs, _) => nodes.put(id, (emb, nbrs)) }
-    val maxGen = if (rows.isEmpty) 0L else rows.iterator.map(_._4).max
-    new Graph(spark, path, (nodes, maxGen, entryPoints(nodes)))
-  }
+  def loadGraphFrom(spark: SparkSession, path: String): Graph =
+    loaded(new Graph(spark, path))
 
   /** One near-dup match of a point-served admit/reject probe:
     * `jaccard` is the same fx4 fixed-point BIGINT the batch twin
@@ -1330,11 +1182,10 @@ object PointServe {
   final case class DupMatch(idOld: Long, jaccard: Long)
 
   /** Point-serving state of [[MinhashDedup]]: (band buckets keyed
-    * band<<60 | band_key → member doc_ids, doc_id → shingle sketch,
-    * loaded band generation).
+    * band<<60 | band_key → member doc_ids, doc_id → shingle sketch).
     */
   private type DedupSnap = (java.util.HashMap[Long, Array[Long]],
-                            java.util.HashMap[Long, Array[Long]], Long)
+                            java.util.HashMap[Long, Array[Long]])
 
   /** MinHash near-dup point index — the serving-tier third of the
     * incremental-dedup split (batch: [[graft.operators.Dedup
@@ -1367,19 +1218,16 @@ object PointServe {
     * buckets, each node loading its directories' bands plus the
     * sketches its buckets reference.
     *
-    * [[refresh]] folds generations appended by the streaming upkeep
-    * into the served snapshot (generation-directory delta read,
-    * volatile swap).
-    * The loaded generation tracks the BAND side — the stream's commit
-    * point — so a refresh racing the upkeep's two appends can at worst
-    * re-read next round a sketch whose bands hadn't landed yet
-    * (idempotent put), never serve a band whose verify sketch is
-    * missing.
+    * The folded generations are the BAND layout's — the upkeep's
+    * commit point, written after the generation's sketches — and a
+    * fold reads the sketches of exactly those generations, so a refresh
+    * racing the upkeep's two appends never serves a band whose verify
+    * sketch is missing.
     */
   final class MinhashDedup private[PointServe] (
-      spark: SparkSession, path: String,
-      @volatile private var snap: DedupSnap,
-      shard: Option[Set[Int]] = None) {
+      spark: SparkSession, path: String, shard: Option[Set[Int]])
+      extends Maintained[DedupSnap](spark, path,
+        (new java.util.HashMap(), new java.util.HashMap())) {
     import graft.functions.expressions.{MinHashSig, PairOverlap, ShingleHashes, Tok}
     import graft.operators.Dedup
 
@@ -1390,7 +1238,7 @@ object PointServe {
       */
     def query(text: String, threshold: Double = 0.5,
               exclude: Long => Boolean = null): Seq[DupMatch] = {
-      val (buckets, sketches, _) = snap
+      val (buckets, sketches) = snap
       val shAd = ShingleHashes.compute(
         org.apache.spark.unsafe.types.UTF8String.fromString(text), 3, Dedup.P)
       val sigAd = MinHashSig.compute(shAd, Dedup.NumHashes, Dedup.P)
@@ -1447,29 +1295,22 @@ object PointServe {
     def admit(text: String, threshold: Double = 0.5): Boolean =
       query(text, threshold).isEmpty
 
-    /** Fold band + sketch generations appended since load/last refresh
-      * into the snapshot; returns the number of band rows picked up.
+    /** Band rows and the sketches of generations `gens`; the band
+      * rows added.
       */
-    def refresh(): Int = {
-      val (buckets, sketches, maxGen) = snap
-      val bandDelta = readBandRows(spark, path, Some(maxGen), shard)
-      val shDelta = readSketchRows(spark, path + "_sh", Some(maxGen),
-        shard.map(_ => bandDelta.map(_._2)))
-      if (bandDelta.isEmpty && shDelta.isEmpty) 0
-      else {
-        val nb = new java.util.HashMap[Long, Array[Long]](buckets)
-        bandDelta.groupBy(_._1).foreach { case (key, rs) =>
-          val add = rs.map(_._2)
-          nb.put(key, Option(nb.get(key)).map(_ ++ add).getOrElse(add))
-        }
-        val ns = new java.util.HashMap[Long, Array[Long]](sketches)
-        shDelta.foreach { case (id, sh, _) => ns.put(id, sh) }
-        val nextGen =
-          if (bandDelta.isEmpty) maxGen
-          else maxGen max bandDelta.iterator.map(_._3).max
-        snap = (nb, ns, nextGen)
-        bandDelta.length
+    protected def fold(s: DedupSnap, gens: Seq[Long]): (DedupSnap, Int) = {
+      val bands = readBandRows(spark, path, gens, shard)
+      val sketches = readSketchRows(spark, path + "_sh",
+        VectorIndex.generations(spark, path + "_sh").filter(gens.contains),
+        shard.map(_ => bands.map(_._2)))
+      val nb = new java.util.HashMap[Long, Array[Long]](s._1)
+      bands.groupBy(_._1).foreach { case (key, rs) =>
+        val add = rs.map(_._2)
+        nb.put(key, Option(nb.get(key)).map(_ ++ add).getOrElse(add))
       }
+      val ns = new java.util.HashMap[Long, Array[Long]](s._2)
+      sketches.foreach { case (id, sh) => ns.put(id, sh) }
+      ((nb, ns), bands.length)
     }
 
     /** Resident corpus size (sketch count). */
@@ -1479,7 +1320,7 @@ object PointServe {
       * arrays + shingle sketches plus map-entry overheads.
       */
     def residentBytes: Long = {
-      val (buckets, sketches, _) = snap
+      val (buckets, sketches) = snap
       var b = 0L
       val it = buckets.entrySet().iterator()
       while (it.hasNext) { b += 48 + it.next().getValue.length.toLong * 8 }
@@ -1489,30 +1330,28 @@ object PointServe {
     }
   }
 
-  /** (band<<60 | band_key, doc_id, gen) rows, optionally only beyond
-    * a generation — same delta read as [[readLshRows]]. A `shard`
-    * restriction filters on the layout's `bkt` partition column: the
-    * listing covers every directory, and only the read is pruned to
-    * the shard's sub-buckets.
+  /** (band<<60 | band_key, doc_id) rows of generations `gens`. A
+    * `shard` restriction filters on the layout's `bkt` partition
+    * column: the listing covers every directory, and only the read is
+    * pruned to the shard's sub-buckets.
     */
-  private def readBandRows(spark: SparkSession, path: String,
-                           afterGen: Option[Long],
-                           shard: Option[Set[Int]] = None): Array[(Long, Long, Long)] =
-    genRows(spark, path, afterGen) { l =>
+  private def readBandRows(spark: SparkSession, path: String, gens: Seq[Long],
+                           shard: Option[Set[Int]]): Array[(Long, Long)] =
+    genRows(spark, path, gens) { l =>
       shard.fold(l)(s => l.filter(col("bkt").isin(s.toSeq: _*)))
-        .select(col("band").cast("long"), col("band_key"), col("doc_id"), col("gen"))
-    }(r => ((r.getLong(0) << 60) | r.getLong(1), r.getLong(2), r.getLong(3)))
+        .select(col("band").cast("long"), col("band_key"), col("doc_id"))
+    }(r => ((r.getLong(0) << 60) | r.getLong(1), r.getLong(2)))
 
-  /** (doc_id, shingle sketch, gen) rows from the companion `_sh`
-    * relation. `forDocs` restricts to the given ids (a shard loads
-    * only the sketches its band rows reference — the memory contract
-    * that lets the sketch side scale out with the shards).
+  /** (doc_id, shingle sketch) rows of generations `gens` of the
+    * companion `_sh` relation. `forDocs` restricts to the given ids (a
+    * shard loads only the sketches its band rows reference — the
+    * memory contract that lets the sketch side scale out with the
+    * shards); no ids, no rows and no Spark job.
     */
-  private def readSketchRows(spark: SparkSession, path: String,
-                             afterGen: Option[Long],
-                             forDocs: Option[Array[Long]] = None): Array[(Long, Array[Long], Long)] =
-    genRows(spark, path, afterGen) { l =>
-      val base = l.select(col("doc_id"), col("sh"), col("gen"))
+  private def readSketchRows(spark: SparkSession, path: String, gens: Seq[Long],
+                             forDocs: Option[Array[Long]]): Array[(Long, Array[Long])] =
+    genRows(spark, path, if (forDocs.exists(_.isEmpty)) Nil else gens) { l =>
+      val base = l.select(col("doc_id"), col("sh"))
       forDocs.fold(base) { ids =>
         val idRel = spark.createDataFrame(
           spark.sparkContext.parallelize(ids.distinct.toSeq.map(Tuple1(_)), 1)
@@ -1522,7 +1361,7 @@ object PointServe {
               org.apache.spark.sql.types.LongType, nullable = false))))
         base.join(broadcast(idRel), Seq("doc_id"), "left_semi")
       }
-    }(r => (r.getLong(0), r.getSeq[Long](1).toArray, r.getLong(2)))
+    }(r => (r.getLong(0), r.getSeq[Long](1).toArray))
 
   /** Scatter-gather merge for shard-scattered dedup probes: bucket
     * membership partitions by the layout's (band, bkt) directory, a
@@ -1548,17 +1387,8 @@ object PointServe {
     * shard answers back into the exact unsharded result.
     */
   def loadMinhashDedupFrom(spark: SparkSession, path: String,
-                           shard: Option[Set[Int]] = None): MinhashDedup = {
-    val bands = readBandRows(spark, path, None, shard)
-    val sketches = readSketchRows(spark, path + "_sh", None,
-      shard.map(_ => bands.map(_._2)))
-    val buckets = new java.util.HashMap[Long, Array[Long]]()
-    bands.groupBy(_._1).foreach { case (key, rs) => buckets.put(key, rs.map(_._2)) }
-    val sk = new java.util.HashMap[Long, Array[Long]]()
-    sketches.foreach { case (id, sh, _) => sk.put(id, sh) }
-    val maxGen = if (bands.isEmpty) 0L else bands.iterator.map(_._3).max
-    new MinhashDedup(spark, path, (buckets, sk, maxGen), shard)
-  }
+                           shard: Option[Set[Int]] = None): MinhashDedup =
+    loaded(new MinhashDedup(spark, path, shard))
 
   /** DSIR data-selection point scorer — the serving third of the
     * [[graft.operators.Curation.dsirWeights]] split (batch: the full

@@ -250,21 +250,23 @@ object VectorIndex {
       .write.mode(if (gen == 0L) "overwrite" else "append")
       .partitionBy("gen" +: keys: _*).parquet(path)
 
-  /** The one generation reader: the layout's rows with `gen` as BIGINT
-    * (partition inference reads the directory values back as INT).
-    * With `afterGen` only the `gen=` directories above it are listed
-    * and read, under `basePath` = the layout root so `gen` and the
+  /** Every generation of the layout, read by the reader below. */
+  def readGenerations(spark: SparkSession, path: String): Option[DataFrame] =
+    readGenerations(spark, path, generations(spark, path))
+
+  /** The one generation reader: the rows of the layout's generations
+    * `gens` with `gen` as BIGINT (partition inference reads the
+    * directory values back as INT). Only those `gen=` directories are
+    * read, under `basePath` = the layout root so `gen` and the
     * layout's keys stay columns. No generation to read: None, and no
     * Spark job.
     */
   def readGenerations(spark: SparkSession, path: String,
-                      afterGen: Option[Long] = None): Option[DataFrame] = {
-    val gens = generations(spark, path).filter(g => afterGen.forall(g > _))
+                      gens: Seq[Long]): Option[DataFrame] =
     if (gens.isEmpty) None
     else Some(spark.read.option("basePath", path)
       .parquet(gens.map(g => s"$path/gen=$g"): _*)
       .withColumn("gen", col("gen").cast("long")))
-  }
 
   /** Multi-probe LSH ANN served from the persisted layout: identical
     * results to [[VectorSearch.annLsh]], but the corpus side reads the

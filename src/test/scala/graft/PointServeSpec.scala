@@ -110,72 +110,8 @@ class PointServeSpec extends GraftSuite {
     assert(emb.phrase(operators.Bm25.DefaultPhrase) == phraseBatch)
   }
 
-  test("refresh folds streaming-appended generations into the served snapshot") {
-    import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("pserve").toFile.getAbsolutePath
-    val newId = 999999L
-    val newVec = queryVecs(1L) // duplicate of vector 1 → cosine 1.0 with itself
-
-    // LSH: isolated layout copy (never the shared /tmp layout — an
-    // appended test generation must not leak into other specs' probes)
-    val lshPath = tmp + "/lsh"
-    VectorIndex.buildLshIndex(spark, sf, lshPath)
-    val idx = PointServe.loadLshFrom(spark, lshPath)
-    val n0 = idx.size
-    val planes = operators.VectorSearch.lshPlanes(64, operators.VectorSearch.AnnLshPlanes)
-    VectorIndex.writeGeneration(Seq((newId, newVec.map(_.toFloat).toSeq))
-      .toDF("vec_id", "embedding")
-      .withColumn("bucket", operators.VectorSearch.lshBucket(
-        col("embedding").cast("array<double>"), planes).cast("int")), lshPath, 1L, "bucket")
-    assert(!idx.query(newVec, k = 5).exists(_.vecId == newId),
-      "snapshot must not see unrefreshed appends")
-    assert(idx.refresh() == 1 && idx.size == n0 + 1)
-    assert(idx.query(newVec, k = 5).exists(h => h.vecId == newId && h.score == 10000L))
-    assert(idx.refresh() == 0, "no new generations → no-op")
-
-    // PQ: same contract over the codes layout
-    val pqPath = tmp + "/pq"
-    VectorIndex.buildPqIndex(spark, sf, pqPath)
-    val pq = PointServe.loadPqFrom(spark, pqPath)
-    val m0 = pq.size
-    import operators.VectorSearch.{PqM, PqSubDim}
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-    val books = spark.read.parquet(pqPath + "_books")
-    VectorIndex.writeGeneration(Seq((newId, newVec.toSeq)).toDF("vec_id", "emb")
-      .crossJoin(broadcast(books))
-      .select(col("vec_id") +: (0 until PqM).map { m =>
-        column(graft.functions.expressions.NearestCentroid(
-          expression(slice(col("emb"), m * PqSubDim + 1, PqSubDim)),
-          expression(col(s"book$m")))).cast("int").as(s"code$m")
-      }: _*), pqPath, 1L)
-    assert(pq.refresh() == 1 && pq.size == m0 + 1)
-    assert(pq.query(newVec, k = 20).exists(_.vecId == newId),
-      "appended codes must serve after refresh")
-
-    // IVF: append through the actual streaming maintenance path
-    val ivfPath = tmp + "/ivf"
-    VectorIndex.buildIvfIndex(spark, sf, ivfPath)
-    val ivf = PointServe.loadIvfFrom(spark, ivfPath)
-    val v0 = ivf.size
-    val stage = tmp + "/ivf_stage"
-    Seq((newId, newVec.map(_.toFloat).toSeq)).toDF("vec_id", "embedding")
-      .write.mode("overwrite").parquet(stage)
-    val schema = spark.read.parquet(stage).schema
-    val q = graft.streaming.EventStreams.ivfIndexStream(
-      spark.readStream.schema(schema).parquet(stage), ivfPath)
-    q.processAllAvailable(); q.stop()
-    assert(!ivf.query(newVec, k = 5).exists(_.vecId == newId),
-      "snapshot must not see unrefreshed appends")
-    assert(ivf.refresh() == 1 && ivf.size == v0 + 1)
-    assert(ivf.query(newVec, k = 5).exists(h => h.vecId == newId && h.score == 10000L),
-      "streamed vector must serve at cosine 1.0 after refresh")
-    assert(ivf.refresh() == 0, "no new generations → no-op")
-  }
-
-  test("refresh with no new generation returns 0 and launches no Spark job") {
-    val path = java.nio.file.Files.createTempDirectory("pserve_noop").toString + "/lsh"
-    VectorIndex.buildLshIndex(spark, sf, path)
-    val idx = PointServe.loadLshFrom(spark, path)
+  /** `f`'s result and the Spark jobs launched while it runs. */
+  private def jobsDuring[T](f: => T): (T, Int) = {
     val sc = spark.sparkContext
     org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(sc)
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -184,10 +120,115 @@ class PointServeSpec extends GraftSuite {
     }
     sc.addSparkListener(listener)
     try {
-      assert(idx.refresh() == 0)
+      val out = f
       org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(sc)
-      assert(jobs.get() == 0, s"${jobs.get()} Spark jobs for a refresh with nothing to read")
+      (out, jobs.get())
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("refresh folds streaming-appended generations into the served snapshot") {
+    // the refresh contract, table-driven over every maintained tier, each
+    // on a private layout copy: an appended generation is unseen before
+    // refresh(); refresh() returns its rows and serves them; a second
+    // refresh() returns 0 and launches no Spark job
+    import spark.implicits._
+    import graft.functions.expressions.ShingleHashes
+    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+    val tmp = java.nio.file.Files.createTempDirectory("pserve").toFile.getAbsolutePath
+    val newId = 999999L
+    val newVec = queryVecs(1L) // duplicate of vector 1 → cosine 1.0 with itself
+    val newRows = Seq((newId, newVec.map(_.toFloat).toSeq)).toDF("vec_id", "embedding")
+    val atCosineOne = (hits: Seq[PointServe.Hit]) =>
+      hits.exists(h => h.vecId == newId && h.score == 10000L)
+    val novel = "quantum zebra lattice prose seven wanders the improbable meadow"
+    val docs = Tables.documents(spark, sf)
+    val newDoc = docs.agg(max(col("doc_id"))).head.getLong(0) + 1
+    // (kind, private layout build, load → (tier, is the appended row
+    // served?), append generation 1, rows appended)
+    def served[T <: PointServe.Maintained[_]](t: T)(p: T => Boolean) = (t, () => p(t))
+    val tiers: Seq[(String, String => Unit,
+                    String => (PointServe.Maintained[_], () => Boolean),
+                    String => Unit, Int)] = Seq(
+      ("lsh", VectorIndex.buildLshIndex(spark, sf, _),
+        p => served(PointServe.loadLshFrom(spark, p))(t => atCosineOne(t.query(newVec, k = 5))),
+        VectorIndex.encodeLsh(newRows, _, 1L), 1),
+      // IVF appends through the streaming maintenance path itself
+      ("ivf", VectorIndex.buildIvfIndex(spark, sf, _),
+        p => served(PointServe.loadIvfFrom(spark, p))(t => atCosineOne(t.query(newVec, k = 5))),
+        { p =>
+          val stage = tmp + "/ivf_stage"
+          newRows.write.mode("overwrite").parquet(stage)
+          val q = graft.streaming.EventStreams.ivfIndexStream(
+            spark.readStream.schema(spark.read.parquet(stage).schema).parquet(stage), p)
+          q.processAllAvailable(); q.stop()
+        }, 1),
+      ("pq", VectorIndex.buildPqIndex(spark, sf, _),
+        p => served(PointServe.loadPqFrom(spark, p))(_.query(newVec, k = 20).exists(_.vecId == newId)),
+        VectorIndex.encodePq(newRows, _, 1L), 1),
+      ("ivfpq", VectorIndex.buildIvfPqIndex(spark, sf, _),
+        p => served(PointServe.loadIvfPqFrom(spark, p))(_.query(newVec, k = 20).exists(_.vecId == newId)),
+        VectorIndex.encodeIvfPq(newRows, _, 1L), 1),
+      // graph: a copy of the shared build's generation 0; the clone
+      // lists the nodes a walk finds nearest to it
+      ("graph", p => VectorIndex.writeGeneration(VectorIndex.readGenerations(spark,
+          VectorIndex.knnGraphIndexReady(spark, sf)).get.drop("gen"), p, 0L),
+        p => served(PointServe.loadGraphFrom(spark, p))(t => atCosineOne(t.query(newVec, k = 5))),
+        p => VectorIndex.writeGeneration(newRows.withColumn("neighbors",
+          typedLit(PointServe.loadGraphFrom(spark, p).query(newVec, k = 5).map(_.vecId))), p, 1L),
+        1),
+      ("minhash", VectorIndex.buildMinhashIndex(spark, sf, _),
+        p => served(PointServe.loadMinhashDedupFrom(spark, p))(
+          _.query(novel) == Seq(PointServe.DupMatch(newDoc, 10000L))),
+        VectorIndex.encodeMinhash(Seq((newDoc, novel)).toDF("doc_id", "text")
+          .select(col("doc_id"), column(ShingleHashes(expression(col("text")), 3,
+            operators.Dedup.P)).as("sh")), _, 1L),
+        operators.Dedup.NumBands))
+    tiers.foreach { case (kind, build, load, append, rows) =>
+      val path = s"$tmp/$kind"
+      build(path)
+      val (tier, isServed) = load(path)
+      val n0 = tier.size
+      append(path)
+      assert(!isServed(), s"$kind: snapshot must not see unrefreshed appends")
+      assert(tier.refresh() == rows, s"$kind: refresh must return the appended rows")
+      assert(tier.size == n0 + (if (kind == "minhash") 1 else rows), s"$kind: size")
+      assert(isServed(), s"$kind: appended row must serve after refresh")
+      val (again, jobs) = jobsDuring(tier.refresh())
+      assert(again == 0, s"$kind: no new generations → no-op")
+      assert(jobs == 0, s"$kind: $jobs Spark jobs for a refresh with nothing to read")
+    }
+  }
+
+  test("refresh with no new generation returns 0 and launches no Spark job") {
+    // every maintained tier straight after its load, over the shared
+    // layouts (nothing is appended, so nothing leaks into other specs)
+    val tiers: Seq[(String, PointServe.Maintained[_])] = Seq(
+      "lsh" -> PointServe.loadLsh(spark, sf),
+      "ivf" -> PointServe.loadIvf(spark, sf),
+      "pq" -> PointServe.loadPq(spark, sf),
+      "ivfpq" -> PointServe.loadIvfPq(spark, sf),
+      "graph" -> PointServe.loadGraph(spark, sf),
+      "minhash" -> PointServe.loadMinhashDedup(spark, sf))
+    tiers.foreach { case (kind, tier) =>
+      val (n, jobs) = jobsDuring(tier.refresh())
+      assert(n == 0, s"$kind: no new generations → no-op")
+      assert(jobs == 0, s"$kind: $jobs Spark jobs for a refresh with nothing to read")
+    }
+  }
+
+  test("a shard's refresh advances past a generation that holds none of its rows") {
+    val path = java.nio.file.Files.createTempDirectory("pserve_shard").toString + "/lsh"
+    VectorIndex.buildLshIndex(spark, sf, path)
+    val odds = PointServe.loadLshFrom(spark, path, shard = Some((1 until 256 by 2).toSet))
+    // a gen-1 clone of a vector in an even bucket: outside the shard
+    val even = VectorIndex.readGenerations(spark, path).get
+      .filter(col("bucket") % 2 === 0).orderBy(col("vec_id")).limit(1)
+      .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
+    VectorIndex.encodeLsh(even, path, 1L)
+    assert(odds.refresh() == 0)
+    val (again, jobs) = jobsDuring(odds.refresh())
+    assert(again == 0)
+    assert(jobs == 0, s"$jobs Spark jobs: the shard re-read a generation it already folded")
   }
 
   test("a refresh reads only the files of the generation appended since load") {
