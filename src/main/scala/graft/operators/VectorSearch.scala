@@ -515,53 +515,6 @@ object VectorSearch {
         col("vec_id").as("neighbor_id"), col("score"))
   }
 
-  /** Bucket-blocked kNN of a PROBE batch against a candidate corpus —
-    * the incremental form of [[annKnnGraphFromVecs]] (reference
-    * query.rs add_document: a new vector's neighbor list is computed
-    * against the existing index, not by rebuilding the graph). Same
-    * machinery: both sides signed on the shared deterministic plane
-    * family, pigeonhole probe masks, over-cap buckets salt-subdivided
-    * — never an all-pairs join, so a micro-batch appends in
-    * O(batch × bucket) work at any corpus size. Returns (query_id,
-    * rank, vec_id, score) like [[rankTopK]].
-    *
-    * `cands` = (vec_id, emb); `probes` = (query_id, qv).
-    */
-  private[graft] def knnForProbes(cands: DataFrame, probes: DataFrame,
-                                  k: Int = KnnGraphK,
-                                  radius: Int = KnnGraphRadius,
-                                  cap: Int = KnnBucketCap): DataFrame = {
-    val all = lshPlanes(64, AnnLshPlanes + KnnSaltPlanes)
-    val masks = lshProbeMasks(AnnLshPlanes, radius)
-    // two consumers of the signed candidate side (census + keyed) —
-    // shared, mirroring annKnnGraphFromVecs' audited plan
-    val corpus = cands
-      .withColumn("bucket", lshBucket(col("emb"), all.take(AnnLshPlanes)))
-      .withColumn("salt", lshBucket(col("emb"), all.drop(AnnLshPlanes)))
-      .transform(OpCache.shared("knn.probes"))
-    val sizes = corpus.groupBy(col("bucket")).agg(count(lit(1)).as("bn"))
-    val keyed = corpus.join(broadcast(sizes), Seq("bucket"))
-      .withColumn("skey", when(col("bn") > cap, col("salt")).otherwise(lit(0L)))
-      .select(col("vec_id"), col("emb"), col("bucket"), col("skey"))
-    val probed = probes
-      .withColumn("bucket", lshBucket(col("qv"), all.take(AnnLshPlanes)))
-      .withColumn("salt", lshBucket(col("qv"), all.drop(AnnLshPlanes)))
-      .select(col("query_id"), col("qv"), col("salt"),
-        explode(lit(masks)).as("mask"), col("bucket"))
-      .select(col("query_id"), col("qv"), col("salt"),
-        col("bucket").bitwiseXOR(col("mask")).as("bucket"))
-      .join(broadcast(sizes), Seq("bucket"), "left")
-      .withColumn("skey",
-        when(coalesce(col("bn"), lit(0L)) > cap, col("salt")).otherwise(lit(0L)))
-      .select(col("query_id"), col("qv"), col("bucket"), col("skey"))
-    val scored = keyed
-      .join(probed.hint("shuffle_hash"), Seq("bucket", "skey"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        fx(cosineSimilarity(col("emb"), col("qv"))).as("score", ScoreTag.metadata))
-    rankTopK(scored, k)
-  }
-
   def annKnnGraphSql(k: Int = KnnGraphK, radius: Int = KnnGraphRadius,
                      cap: Int = KnnBucketCap): String = {
     val all = lshPlanes(64, AnnLshPlanes + KnnSaltPlanes)

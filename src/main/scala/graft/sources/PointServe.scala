@@ -1038,7 +1038,7 @@ object PointServe {
   /** Graph point index — the serving twin of the reference's
     * graph-traversal index (index.rs:95-260 greedy-searches an HNSW
     * adjacency held in memory): an NSW-style best-first walk over the
-    * persisted [[VectorIndex.buildKnnGraphIndex]] neighbor lists.
+    * graph layout's neighbor lists.
     *
     * Query: seed the frontier with [[GraphEntryPoints]] deterministic
     * entry nodes (lowest vec_ids — id order is stable across loads and
@@ -1051,21 +1051,31 @@ object PointServe {
     * unchanged. Zero Spark jobs per query; recall floor vs brute force
     * pinned in PointServeSpec.
     *
-    * A refresh lands each new node with its own neighbor list AND
-    * back-links it from its listed neighbors and from the nearest
-    * resident nodes a walk of the pre-refresh graph finds (the HNSW
-    * insert; add_document in the reference mutates both directions for
-    * the same reason): a batch of novel nodes fills each other's lists,
-    * and links among themselves alone leave the whole batch
-    * unreachable. Periodic [[VectorIndex.rebuildIfNeeded]] re-prunes
-    * the grown lists.
+    * This tier is where an appended node gets its neighbor list (the
+    * HNSW insert; add_document in the reference). A fold takes the
+    * generations in order: generation 0 lands with the lists
+    * [[VectorIndex.buildKnnGraphIndex]] stored, and each node of a
+    * later generation, in vec_id order, lists the
+    * [[VectorSearch.KnnGraphK]] nodes the query walk finds in the graph
+    * as it stood before that generation, and is back-linked from them
+    * (lists stored for those generations are ignored). Nodes of one
+    * generation are never candidates for each other: a batch of novel
+    * nodes would fill each other's lists and leave the batch
+    * unreachable from every resident node. A load folds the same way,
+    * so it serves what a load of generation 0 and refreshes would.
+    * Periodic [[VectorIndex.rebuildIfNeeded]] re-prunes the grown lists.
     */
   final class Graph private[PointServe] (spark: SparkSession, path: String)
       extends Maintained[(GraphNodes, Array[Long])](spark, path,
         (new GraphNodes(), Array.empty[Long])) {
 
-    def query(qv: Array[Double], k: Int = 5, excludeId: Long = -1L): Seq[Hit] = {
-      val (nodes, entries) = snap
+    def query(qv: Array[Double], k: Int = 5, excludeId: Long = -1L): Seq[Hit] =
+      walk(snap, qv, k, excludeId)
+
+    /** The best-first walk over a graph's (nodes, entry points). */
+    private def walk(graph: (GraphNodes, Array[Long]), qv: Array[Double],
+                     k: Int, excludeId: Long): Seq[Hit] = {
+      val (nodes, entries) = graph
       if (nodes.isEmpty) return Seq.empty
       val efx = math.max(GraphEf, k)
       // frontier: best-first by (score DESC, id ASC)
@@ -1104,19 +1114,29 @@ object PointServe {
         : ((GraphNodes, Array[Long]), Int) = {
       val delta = readGraphRows(spark, path, gens)
       val next = new GraphNodes(s._1)
-      delta.foreach { case (id, emb, nbrs) =>
-        next.put(id, (emb, nbrs))
-        // the load lands the built lists as they are; `query` still
-        // walks the pre-refresh snapshot
-        if (!s._1.isEmpty) {
-          val resident = query(emb, k = math.max(nbrs.length, 1), excludeId = id).map(_.vecId)
-          (nbrs ++ resident).distinct.foreach { nb =>
+      var entries = s._2
+      gens.foreach { g =>
+        val rows = delta.filter(_._1 == g).sortBy(_._2)
+        // every list is walked before any node of generation g lands
+        val lists = if (g == 0L) rows.map(_._4) else rows.map(r =>
+          walk((next, entries), r._3, VectorSearch.KnnGraphK, r._2).map(_.vecId).toArray)
+        rows.zip(lists).foreach { case ((_, id, emb, _), nbrs) =>
+          next.put(id, (emb, nbrs))
+          if (g > 0L) nbrs.foreach { nb =>
             val t = next.get(nb)
-            if (t != null && !t._2.contains(id)) next.put(nb, (t._1, t._2 :+ id))
+            if (!t._2.contains(id)) next.put(nb, (t._1, t._2 :+ id))
           }
         }
+        entries = entryPoints(next)
       }
-      ((next, entryPoints(next)), delta.length)
+      ((next, entries), delta.length)
+    }
+
+    /** vec_id → neighbor list of the served snapshot. */
+    private[graft] def lists: Map[Long, Seq[Long]] = {
+      val m = Map.newBuilder[Long, Seq[Long]]
+      snap._1.forEach((id, n) => m += id -> n._2.toSeq)
+      m.result()
     }
 
     def size: Int = snap._1.size()
@@ -1158,12 +1178,12 @@ object PointServe {
     else Array.tabulate(GraphEntryPoints)(j => ids(j * (ids.length / GraphEntryPoints)))
   }
 
-  /** (vec_id, emb, neighbors) rows of generations `gens`. */
+  /** (gen, vec_id, emb, neighbors) rows of generations `gens`. */
   private def readGraphRows(spark: SparkSession, path: String, gens: Seq[Long])
-      : Array[(Long, Array[Double], Array[Long])] =
-    genRows(spark, path, gens)(_.select(col("vec_id"),
-      col("embedding").cast("array<double>"), col("neighbors")))(
-      r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getSeq[Long](2).toArray))
+      : Array[(Long, Long, Array[Double], Array[Long])] =
+    genRows(spark, path, gens)(_.select(col("gen"), col("vec_id"),
+      col("embedding").cast("array<double>"), col("neighbors")))(r =>
+      (r.getLong(0), r.getLong(1), r.getSeq[Double](2).toArray, r.getSeq[Long](3).toArray))
 
   /** Load the graph layout into memory (builds it first if absent).
     * One Spark job here; zero afterwards.

@@ -141,7 +141,8 @@ object VectorIndex {
   // (generation 0, after its sidecars are written) and the upkeep
   // streams of graft.streaming.EventStreams (generation g, from the
   // same sidecars), so an appended row is routed exactly as its twin
-  // in the base build.
+  // in the base build. The kNN graph's base build writes its own
+  // lists; its encoder serves the upkeep stream alone.
 
   /** LSH: the rows as given plus their `bucket`, the signature under
     * the fixed hyperplane family.
@@ -176,6 +177,16 @@ object VectorIndex {
     writeGeneration(withBooks(withCell(withEmb(rows), path), path)
       .select(col("vec_id") +: col("cell") +: codeCols: _*)
       .repartition(col("cell")), path, gen, "cell")
+
+  /** kNN graph, appended generations: (vec_id, embedding) with an
+    * empty `neighbors` list, so every generation keeps the base
+    * build's schema. The serving tier computes an appended node's list
+    * ([[PointServe.Graph]]); the base build writes generation 0 with
+    * its lists itself.
+    */
+  private[graft] def encodeGraph(rows: DataFrame, path: String, gen: Long): Unit =
+    writeGeneration(rows.select(col("vec_id"), col("embedding"),
+      typedLit(Seq.empty[Long]).as("neighbors")), path, gen)
 
   /** MinHash, from (doc_id, sh) shingle sketches: the sketches land in
     * `<path>_sh`, then one row per (doc, band) with its 60-bit band key,
@@ -772,9 +783,12 @@ object VectorIndex {
     * vector: (vec_id, embedding, neighbors array<long> nearest-first)
     * under its generation directory. This is the on-disk shape of the reference's graph index
     * (index.rs:95-260 builds an HNSW adjacency and mmaps it back):
-    * [[PointServe.Graph]] loads it for zero-Spark-job greedy search,
-    * and [[graft.streaming.EventStreams.knnGraphIndexStream]] appends
-    * generation-keyed rows for new vectors. Vectors the banded build
+    * [[PointServe.Graph]] loads it for zero-Spark-job greedy search.
+    * Only generation 0 carries stored lists:
+    * [[graft.streaming.EventStreams.knnGraphIndexStream]] appends new
+    * vectors as later generations with empty lists ([[encodeGraph]]),
+    * and [[PointServe.Graph]] gives each one its list by walking the
+    * graph as it stood before that generation. Vectors the banded build
     * found no neighbors for (isolated buckets) keep an empty list —
     * still resident and servable as entry-point seeds.
     *

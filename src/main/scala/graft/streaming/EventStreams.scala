@@ -283,47 +283,18 @@ object EventStreams {
                        baseGen: Long = 1L): StreamingQuery =
     layoutUpkeep(vecs, path, baseGen)(VectorIndex.encodeIvfPq)
 
-  /** Streaming maintenance of the persisted kNN-GRAPH layout. Each
-    * micro-batch's vectors get their neighbor lists computed
-    * INCREMENTALLY (reference query.rs add_document: search the
-    * existing index for the new point's neighbors, never rebuild) via
-    * [[graft.operators.VectorSearch.knnForProbes]]: resident layout ∪
-    * batch as candidates, batch as probes — bucket-blocked with the
-    * same plane family and salt subdivision as the base build, so a
-    * batch appends in O(batch × bucket) work at any corpus size, and
-    * batch vectors can neighbor each other (two clones arriving
-    * together find one another). Rows land as (vec_id, embedding,
-    * neighbors) under `gen=<g>/`; [[graft.sources.PointServe.Graph.refresh]]
-    * folds them in and back-links reverse edges resident-side.
+  /** Streaming maintenance of the persisted kNN-GRAPH layout: each
+    * micro-batch's (vec_id, embedding) rows land as generation g with
+    * an empty neighbor list ([[VectorIndex.encodeGraph]]). No Spark
+    * job searches the resident graph: [[graft.sources.PointServe.Graph]]
+    * gives an appended node its list when it folds the generation in
+    * (reference query.rs add_document: search the existing index for
+    * the new point's neighbors, never rebuild), with the walk its
+    * queries run over the graph as it stood before that generation.
     */
   def knnGraphIndexStream(vecs: DataFrame, path: String,
                           baseGen: Long = 1L): StreamingQuery =
-    layoutUpkeep(vecs, path, baseGen) { (batch, _, gen) =>
-      import graft.operators.VectorSearch
-      val spark = batch.sparkSession
-      val newVecs = batch
-        .select(col("vec_id"), col("embedding"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val asEmb = newVecs
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-        val cands = spark.read.parquet(path)
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-          .unionByName(asEmb)
-        val probes = asEmb.select(col("vec_id").as("query_id"), col("emb").as("qv"))
-        val adj = VectorSearch.knnForProbes(cands, probes)
-          .groupBy(col("query_id"))
-          .agg(sort_array(collect_list(struct(col("rank"), col("vec_id"))))
-            .as("ranked"))
-          .select(col("query_id").as("vec_id"),
-            expr("transform(ranked, e -> e.vec_id)").as("neighbors"))
-        VectorIndex.writeGeneration(newVecs
-          .join(adj.hint("shuffle_hash"), Seq("vec_id"), "left")
-          .withColumn("neighbors",
-            coalesce(col("neighbors"), expr("array()").cast("array<bigint>"))),
-          path, gen)
-      } finally newVecs.unpersist()
-    }
+    layoutUpkeep(vecs, path, baseGen)(VectorIndex.encodeGraph)
 
   /** Streaming maintenance of the persisted MinHash band layout
     * ([[graft.sources.VectorIndex.buildMinhashIndex]]; reference

@@ -373,25 +373,48 @@ class PointServeSpec extends GraftSuite {
     assert(mean >= 0.8, f"sharded graph recall@$k $mean%.2f (per-query: $recalls)")
   }
 
-  test("graph serve refresh folds appended generations and back-links them reachable") {
-    // private layout copy so the shared build is untouched
-    val base = VectorIndex.knnGraphIndexReady(spark, sf)
-    val path = java.nio.file.Files.createTempDirectory("graph_refresh").toString + "/graph"
-    VectorIndex.writeGeneration(VectorIndex.readGenerations(spark, base).get.drop("gen"),
-      path, 0L)
-    val g = PointServe.loadGraphFrom(spark, path)
-    val before = g.size
-    val maxId = queryVecs.keys.max
-    // append a gen-1 clone of vec 7: identical embedding → cosine 1.0
-    // for query 7, so once refreshed it MUST serve at the top
+  /** A private copy of the shared graph layout's generation 0, so the
+    * shared build is untouched; its path.
+    */
+  private def graphCopy(prefix: String): String = {
+    val path = java.nio.file.Files.createTempDirectory(prefix).toString + "/graph"
+    VectorIndex.writeGeneration(VectorIndex.readGenerations(spark,
+      VectorIndex.knnGraphIndexReady(spark, sf)).get.drop("gen"), path, 0L)
+    path
+  }
+
+  /** Writes generation 1 of `path`: (vec_id, vector, stored list) rows. */
+  private def writeGen1(path: String, rows: Seq[(Long, Array[Double], Seq[Long])]): Unit = {
     import spark.implicits._
-    val nbrs = g.query(queryVecs(7L), k = 5).map(_.vecId)
-    VectorIndex.writeGeneration(Seq((maxId + 1, queryVecs(7L).toSeq, nbrs))
+    VectorIndex.writeGeneration(rows.map { case (id, v, l) => (id, v.toSeq, l) }
       .toDF("vec_id", "emb", "neighbors")
       .select(col("vec_id"),
         col("emb").cast(Tables.embeddings(spark, sf).schema("embedding").dataType)
           .as("embedding"),
         col("neighbors")), path, 1L)
+  }
+
+  /** Generation 1 of four mutually near, novel vectors whose stored
+    * lists name only each other; their ids and vectors.
+    */
+  private def writeNovelGen1(path: String): Seq[(Long, Array[Double])] = {
+    val maxId = queryVecs.keys.max
+    val rnd = new scala.util.Random(11)
+    val dir = Array.fill(queryVecs(7L).length)(rnd.nextGaussian())
+    val ids = (1L to 4L).map(maxId + _)
+    val novel = ids.map(id => id -> dir.map(_ + 0.05 * rnd.nextGaussian()))
+    writeGen1(path, novel.map { case (id, v) => (id, v, ids.filter(_ != id)) })
+    novel
+  }
+
+  test("graph serve refresh folds appended generations and back-links them reachable") {
+    val path = graphCopy("graph_refresh")
+    val g = PointServe.loadGraphFrom(spark, path)
+    val before = g.size
+    val maxId = queryVecs.keys.max
+    // append a gen-1 clone of vec 7: identical embedding → cosine 1.0
+    // for query 7, so once refreshed it MUST serve at the top
+    writeGen1(path, Seq((maxId + 1, queryVecs(7L), g.query(queryVecs(7L), k = 5).map(_.vecId))))
     assert(g.refresh() == 1 && g.size == before + 1)
     val served = g.query(queryVecs(7L), k = 5, excludeId = 7L)
     assert(served.head.vecId == maxId + 1,
@@ -405,28 +428,31 @@ class PointServeSpec extends GraftSuite {
     // neighbor lists; back-links along those lists alone leave the
     // batch unreachable from every resident node, so refresh must also
     // link each new node from its nearest resident nodes
-    val base = VectorIndex.knnGraphIndexReady(spark, sf)
-    val path = java.nio.file.Files.createTempDirectory("graph_novel").toString + "/graph"
-    VectorIndex.writeGeneration(VectorIndex.readGenerations(spark, base).get.drop("gen"),
-      path, 0L)
+    val path = graphCopy("graph_novel")
     val g = PointServe.loadGraphFrom(spark, path)
-    val maxId = queryVecs.keys.max
-    val rnd = new scala.util.Random(11)
-    val dir = Array.fill(queryVecs(7L).length)(rnd.nextGaussian())
-    val ids = (1L to 4L).map(maxId + _)
-    val vecs = ids.map(_ => dir.map(_ + 0.05 * rnd.nextGaussian()))
-    import spark.implicits._
-    VectorIndex.writeGeneration(ids.zip(vecs).map { case (id, v) => (id, v.toSeq, ids.filter(_ != id)) }
-      .toDF("vec_id", "emb", "neighbors")
-      .select(col("vec_id"),
-        col("emb").cast(Tables.embeddings(spark, sf).schema("embedding").dataType)
-          .as("embedding"),
-        col("neighbors")), path, 1L)
-    assert(g.refresh() == ids.size)
-    ids.zip(vecs).foreach { case (id, v) =>
+    val novel = writeNovelGen1(path)
+    assert(g.refresh() == novel.size)
+    novel.foreach { case (id, v) =>
       val served = g.query(v, k = 1)
       assert(served.map(_.vecId) == Seq(id), s"novel node $id unreachable: $served")
     }
+  }
+
+  test("graph tier loaded after ingest links appended nodes as a load and refresh do") {
+    // a load folds generation by generation, as refreshes do: a fresh
+    // load of a generation 1 of novel nodes that list only each other
+    // must back-link them from resident nodes too
+    val path = graphCopy("graph_loaded")
+    val refreshed = PointServe.loadGraphFrom(spark, path)
+    val novel = writeNovelGen1(path)
+    assert(refreshed.refresh() == novel.size)
+    val loaded = PointServe.loadGraphFrom(spark, path)
+    novel.foreach { case (id, v) =>
+      val served = loaded.query(v, k = 1)
+      assert(served.map(_.vecId) == Seq(id), s"novel node $id unreachable after a load: $served")
+    }
+    def sortedLists(g: PointServe.Graph) = g.lists.map { case (id, l) => id -> l.sorted }
+    assert(sortedLists(loaded) == sortedLists(refreshed))
   }
 
   test("point queries launch zero Spark jobs and beat the batch scheduling floor") {

@@ -292,10 +292,9 @@ class StreamingSpec extends GraftSuite {
     val idxPath = java.nio.file.Files.createTempDirectory("gidx_stream").toString + "/graph"
     VectorIndex.buildKnnGraphIndex(spark, sf, idxPath)
     val maxId = Tables.embeddings(spark, sf).agg(max(col("vec_id"))).head.getLong(0)
-    // a clone of vec 0's embedding: its incremental neighbor list is
-    // computed against the EXISTING layout (bucket-blocked — vec 0's
-    // own bucket necessarily contains it at radius 0), and the serve
-    // refresh back-links it, so query 0 must serve it at rank 1
+    // a clone of vec 0's embedding: the stream writes only its vector;
+    // the serve refresh walks the existing graph for its neighbor list
+    // and back-links it, so query 0 must serve it at rank 1
     val stageDir = java.nio.file.Files.createTempDirectory("gvecs_stream")
     Tables.embeddings(spark, sf).filter(col("vec_id") === 0)
       .select((col("vec_id") + maxId + 1).as("vec_id"), col("embedding"))
@@ -306,12 +305,13 @@ class StreamingSpec extends GraftSuite {
     val g = PointServe.loadGraphFrom(spark, idxPath)
     val q = EventStreams.knnGraphIndexStream(newStream(), idxPath)
     q.processAllAvailable(); q.stop()
-    // the appended row carries a non-empty neighbor list pointing into
-    // the existing graph
-    val appended = spark.read.parquet(idxPath).filter(col("gen") > 0).collect()
-    assert(appended.map(_.getAs[Long]("vec_id")).toSeq == Seq(maxId + 1))
-    assert(appended.head.getAs[scala.collection.Seq[Long]]("neighbors").nonEmpty,
-      "incremental neighbor list must not be empty")
+    // generation 1 holds exactly the clone's id and embedding
+    val clone = Tables.embeddings(spark, sf).filter(col("vec_id") === 0)
+      .select(col("embedding")).head.getSeq[Float](0)
+    val appended = VectorIndex.readGenerations(spark, idxPath, Seq(1L)).get
+      .select(col("vec_id"), col("embedding")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1)))
+    assert(appended.toSeq == Seq((maxId + 1, clone)))
     assert(g.refresh() == 1)
     val qv = Tables.embeddings(spark, sf).filter(col("vec_id") === 0)
       .select(col("embedding").cast("array<double>")).head.getSeq[Double](0).toArray
