@@ -82,20 +82,6 @@ object Bench {
     // headline line carries rounded per-query minima only; the two-pass
     // means + errors (cold-path regression visibility, advisor ask) go to
     // BENCH_DETAIL.json in the repo root for the judge to read directly.
-    // serving-tier micro-bench (reference regime: >10k QPS / <5ms
-    // point lookups) — zero-Spark-job tier behind a replica router;
-    // full runs only, and never allowed to sink the bench line
-    val serving = if (only.isEmpty) ServeBench.run(spark, sfDir)
-      else """{"skipped":"subset run"}"""
-    // second-decade serving evidence (judge ask, r8): if the
-    // synthesized sf1 corpus is present, measure the serving tier
-    // against its 10x resident sets too — the >10k QPS claim must
-    // survive corpus growth, not just the record SF
-    val sf1Dir = "/tmp/sf1"
-    val servingSf1 =
-      if (only.isEmpty && java.nio.file.Files.isDirectory(Paths.get(sf1Dir)))
-        ServeBench.run(spark, sf1Dir)
-      else """{"skipped":"sf1 corpus not present"}"""
     // bucketed/raw wall ratio per layout twin pair (judge ask, r8):
     // a ratio drifting >= 1.0 flags a layout-path wall-time regression
     // as data — the shuffle-count invariant StoreLayoutSpec pins can
@@ -108,7 +94,7 @@ object Bench {
     val sfcJson = servedFromCache.map("\"" + _ + "\"").mkString("[", ",", "]")
     val memoWarm = obj(memoColdHeadline.filter(mins.contains)
       .map(k => k -> mins(k)).toMap)
-    val detail = s"""{"metric":"total","value":$total,"unit":"sec","method":"min-of-3 (warm); memo-served bpe trainers report the cold pass (see memo_warm_min); best-2-of-3 mean in queries_mean (steal-robust); raw pass 1 in queries_cold","queries":${obj(headline)},"queries_mean":${obj(means)},"queries_cold":${obj(colds)},"memo_warm_min":$memoWarm,"served_from_cache":$sfcJson,"bucketed_ratio":${obj(twinRatios)},"errors":${obj(errors.toMap)},"serving":$serving,"serving_sf1":$servingSf1,"sf":"$sfDir"}"""
+    val detail = s"""{"metric":"total","value":$total,"unit":"sec","method":"min-of-3 (warm); memo-served bpe trainers report the cold pass (see memo_warm_min); best-2-of-3 mean in queries_mean (steal-robust); raw pass 1 in queries_cold","queries":${obj(headline)},"queries_mean":${obj(means)},"queries_cold":${obj(colds)},"memo_warm_min":$memoWarm,"served_from_cache":$sfcJson,"bucketed_ratio":${obj(twinRatios)},"errors":${obj(errors.toMap)},"sf":"$sfDir"}"""
     // detail path is env-overridable so a different launch cwd can't
     // silently strand the file; failures warn on stderr (stdout must
     // stay the single parseable JSON line). A SPARK_GRAFT_QUERIES

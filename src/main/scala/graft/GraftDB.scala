@@ -256,7 +256,7 @@ final class GraftDB(val spark: SparkSession, val dir: String,
       avg(col("duration_ms")).as("avg_ms"),
       expr("percentile(duration_ms, 0.95)").as("p95_ms"),
       expr("percentile(duration_ms, 0.99)").as("p99_ms"),
-      avg((col("duration_ms") < 10.0).cast("double")).as("hit_rate")).head
+      avg((col("duration_ms") < 10.0).cast("double")).as("hit_rate")).head()
     def g(name: String, help: String, v: Any): String =
       s"# HELP graft_$name $help\n# TYPE graft_$name gauge\ngraft_$name $v\n"
     // with zero recorded queries the latency aggregates are NULL —

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The local session every main runs on, so their plans match:
+/** The local session the Spark mains (Bench, Verify, Explain) run
+  * on, so their plans match:
   * `SPARK_GRAFT_CPUS` cores (default: the cores this JVM sees) and
   * `SPARK_GRAFT_SHUFFLE` shuffle partitions (default: the core count —
   * at a synthesized big SF the partition count must scale with data

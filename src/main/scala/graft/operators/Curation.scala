@@ -1119,7 +1119,7 @@ object Curation {
     // measured gate: broadcast only when the ACTUAL eval payload fits
     // (row count alone does not bound bytes — embedding width does)
     val (nEval, evElems) = {
-      val r = eval.agg(count(lit(1)), sum(size(col("eemb")))).head
+      val r = eval.agg(count(lit(1)), sum(size(col("eemb")))).head()
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
     val train = banded.filter(col("vec_id") % EvalMod =!= 0)

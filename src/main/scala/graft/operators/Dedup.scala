@@ -1446,8 +1446,7 @@ object Dedup {
     * self-dedups in the regular [[minhash]] job.
     */
   def minhashIncremental(spark: SparkSession, dir: String,
-                         threshold: Double = 0.5,
-                         batchMax: Long = Long.MaxValue): DataFrame = {
+                         threshold: Double = 0.5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = shingleDocs(spark, dir)
     val bands = minhashBands(docs)
@@ -1456,12 +1455,7 @@ object Dedup {
         .over(Window.partitionBy(col("band"), col("band_key"))))
       .filter(col("_bn") <= MaxBucket)
       .select(col("doc_id").as("id2"), col("band"), col("band_key"))
-    // batchMax (default: everything) restricts the INCREMENT only —
-    // the [[graft.DedupCrossover]] evidence main sweeps it to measure
-    // how recompute cost stays corpus-bound while the layout probe's
-    // falls with the increment; the corpus side is never restricted
     val batchB = bands.filter(col("doc_id") % IncrMod === IncrRes)
-      .filter(col("doc_id") <= batchMax)
       .select(col("doc_id").as("id1"), col("band"), col("band_key"))
     val cand = batchB
       .join(corpusB.hint("shuffle_hash"), Seq("band", "band_key"))
@@ -1541,7 +1535,7 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
     // the build's persisted sub-bucket modulus: probing with any other
     // value would look in the wrong directories
-    val bktMod = spark.read.parquet(path + "_meta").head.getAs[Long]("bkt_mod")
+    val bktMod = spark.read.parquet(path + "_meta").head().getAs[Long]("bkt_mod")
     // persisted: the banded increment feeds BOTH the probe-key
     // broadcast and the candidate join — without the cache the
     // MinHash signing of the whole increment runs twice (measured
@@ -1589,7 +1583,7 @@ object Dedup {
     // with document length, so a pair count alone does not bound the
     // bytes); the broadcast only happens under a measured ~64 MB
     val (nCand, shElems) = {
-      val r = withSh1.agg(count(lit(1)), sum(size(col("sh1")))).head
+      val r = withSh1.agg(count(lit(1)), sum(size(col("sh1")))).head()
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
     val corpusSh = spark.read.parquet(path + "_sh")

@@ -790,7 +790,7 @@ object TextAnalysis {
     * so a production 32k-merge vocabulary must not just raise this
     * knob: it uses [[bpeLearnBatched]], which selects up to M
     * disjoint merges per census and divides the barrier count by M
-    * (measured rounds-vs-wall curve in SURVEY §5).
+    * (measured rounds-vs-wall curve: BENCH_BPE_SCALE.json, SURVEY §5).
     */
   val BpeMerges = 8
 
@@ -828,17 +828,8 @@ object TextAnalysis {
     * the merge list IS the trained model and is O(rounds), the one
     * genuinely driver-sized artifact of tokenizer training — plus the
     * still-distributed segmented word relation for downstream
-    * application.
-    *
-    * Scale shape: the corpus compresses ONCE to the distinct-word
-    * table (one keyed aggregate with map-side partials over the
-    * native TermCounts pass — the [[vocabInduce]] compression); every
-    * merge round is then (a) one aggregate over that Zipf-bounded
-    * relation and a ONE-ROW argmax collect (TakeOrdered head, the
-    * audited bounded-collect form), and (b) one narrow per-row string
-    * rewrite — no corpus pass, no shuffle growth with rounds. The
-    * identical loop trains on 100 TB: only the word table scales, and
-    * it scales with vocabulary, not data.
+    * application. Trained by [[bpeLoop]] at one merge per census
+    * round (its scale shape).
     */
   private def bpeLearn(spark: SparkSession, dir: String)
       : (Seq[(Int, String, String, Long)], DataFrame) = {
@@ -880,45 +871,16 @@ object TextAnalysis {
     // which persists it again after an external clearCache()
     if (!bpeCache.containsKey(fp)) bpeCache.clear()
     val (merges, pid, segd) = bpeCache.computeIfAbsent(fp, _ => {
-      import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-      val words = Tables.spread(spark,
-          Tables.documents(spark, dir).select(col("doc_id"), col("text")))
-        .select(explode(column(graft.functions.expressions.TermCounts(
-          expression(col("text"))))).as("e"))
-        .select(col("e.term").as("w"), col("e.tf").as("tf"))
-        .groupBy(col("w")).agg(sum(col("tf")).as("freq"))
-        .select(col("w"), col("freq"), segInit(col("w")).as("seg"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val merges = Seq.newBuilder[(Int, String, String, Long)]
-      var cur = words
-      var rank = 1
-      var exhausted = false
-      while (rank <= BpeMerges && !exhausted) {
-        val best = cur
-          .select(col("freq"), explode(segPairs(segSymbols(col("seg")))).as("pair"))
-          .groupBy(col("pair")).agg(sum(col("freq")).as("cnt"))
-          .orderBy(col("cnt").desc, col("pair"))
-          .limit(1).collect()
-        if (best.isEmpty) exhausted = true
-        else {
-          val pair = best(0).getString(0)
-          val cnt = best(0).getLong(1)
-          val Array(lhs, rhs) = pair.split(" ", 2)
-          merges += ((rank, lhs, rhs, cnt))
-          cur = cur.withColumn("seg",
-            replace(col("seg"), lit(s" $lhs  $rhs "), lit(s" $lhs$rhs ")))
-          rank += 1
-        }
+      // the shared artifact is the FINAL segmentation: persist it and
+      // materialize it before the loop releases the word table —
+      // keeping both cached doubled the resident footprint for a
+      // relation no consumer reads again (every downstream
+      // join/aggregate starts from segd)
+      val (mergesList, segd) = bpeLoop(spark, dir, BpeMerges, 1) { cur =>
+        val segd = cur.transform(OpCache.shared("bpe.seg"))
+        segd.count()
+        segd
       }
-      // the shared artifact is the FINAL segmentation: persist it,
-      // materialize, then release the raw word table — keeping both
-      // cached doubled the resident footprint for a relation no
-      // consumer reads again (every downstream join/aggregate starts
-      // from segd)
-      val segd = cur.transform(OpCache.shared("bpe.seg"))
-      segd.count()
-      words.unpersist()
-      val mergesList = merges.result()
       val chars = segd.select(explode(split(col("w"), "")).as("piece")).distinct()
         .collect().map(_.getString(0)).sorted.toSeq
       val ids = chars.zipWithIndex.map { case (c, i) => (c, i.toLong) } ++
@@ -957,28 +919,40 @@ object TextAnalysis {
     * another), so merging any of them cannot create, destroy or
     * consume an adjacency another counts — each selected pair's census
     * count is exactly what a serial re-census would have shown, and at
-    * `batchM = 1` the loop IS [[bpeTrain]]'s serial selection
-    * (spec-pinned rank-for-rank). A production 32k-merge vocabulary
-    * thus costs ~32k/M bounded Spark jobs instead of 32k: the driver
-    * barrier shrinks M-fold while every aggregate keeps the word-table
-    * scale shape (one Zipf-bounded census + one narrow rewrite per
-    * round). Ranks are assigned in census order (count DESC, pair ASC)
-    * within each round — the order a serial trainer would emit them
-    * when their counts don't interact.
+    * `batchM = 1` the loop IS [[bpeTrain]]'s serial selection (the
+    * census top pair always qualifies; spec-pinned rank-for-rank). A
+    * production 32k-merge vocabulary thus costs ~32k/M bounded Spark
+    * jobs instead of 32k: the driver barrier shrinks M-fold while
+    * every aggregate keeps the word-table scale shape (one
+    * Zipf-bounded census + one narrow rewrite per round). Ranks are
+    * assigned in census order (count DESC, pair ASC) within each
+    * round — the order a serial trainer would emit them when their
+    * counts don't interact.
     */
   private[graft] def bpeLearnBatched(spark: SparkSession, dir: String,
                                      totalMerges: Int, batchM: Int)
       : Seq[(Int, String, String, Long)] =
-    bpeLearnBatchedCounted(spark, dir, totalMerges, batchM)._1
+    bpeLoop(spark, dir, totalMerges, batchM)(_ => ())._1
 
-  /** [[bpeLearnBatched]] plus the number of census rounds actually
-    * paid — the driver-barrier count the batching exists to divide
-    * (the [[graft.BpeScale]] evidence main reports it against wall
-    * time).
+  /** The one BPE training loop behind [[bpeTrain]] (`batchM = 1`) and
+    * [[bpeLearnBatched]]: learns up to `totalMerges` merges, up to
+    * `batchM` per census round, and hands the final segmentation
+    * (w, freq, seg) to `done` while the word table it derives from is
+    * still cached; returns the merge list and `done`'s result.
+    *
+    * Scale shape: the corpus compresses ONCE to the distinct-word
+    * table (one keyed aggregate with map-side partials over the
+    * native TermCounts pass — the [[vocabInduce]] compression); every
+    * round is then (a) one aggregate over that Zipf-bounded relation
+    * and a bounded top-`4·M` collect (TakeOrdered head, the audited
+    * bounded-collect form), and (b) one narrow per-row string rewrite
+    * per merge — no corpus pass, no shuffle growth with rounds. The
+    * identical loop trains on 100 TB: only the word table scales, and
+    * it scales with vocabulary, not data.
     */
-  private[graft] def bpeLearnBatchedCounted(spark: SparkSession, dir: String,
-                                            totalMerges: Int, batchM: Int)
-      : (Seq[(Int, String, String, Long)], Int) = {
+  private def bpeLoop[A](spark: SparkSession, dir: String,
+                         totalMerges: Int, batchM: Int)(done: DataFrame => A)
+      : (Seq[(Int, String, String, Long)], A) = {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
     require(batchM >= 1, "batchM must be >= 1")
     val words = Tables.spread(spark,
@@ -994,9 +968,7 @@ object TextAnalysis {
     var rank = 1
     var exhausted = false
     var sinceCheckpoint = 0
-    var rounds = 0
     while (rank <= totalMerges && !exhausted) {
-      rounds += 1
       val m = math.min(batchM, totalMerges - rank + 1)
       val top = cur
         .select(col("freq"), explode(segPairs(segSymbols(col("seg")))).as("pair"))
@@ -1035,30 +1007,9 @@ object TextAnalysis {
         }
       }
     }
+    val out = done(cur)
     words.unpersist()
-    (merges.result(), rounds)
-  }
-
-  /** Corpus token mass under a merge list: Σ over the word table of
-    * freq × |segmentation| — the figure that grades a trained
-    * vocabulary (compression), which is what the batched trainer's
-    * disjoint-pick approximation must preserve even where its RULE
-    * list drifts from serial ([[graft.BpeScale]] reports both).
-    */
-  private[graft] def bpeTokenMass(spark: SparkSession, dir: String,
-                                  merges: Seq[(Int, String, String, Long)]): Long = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-    val words = Tables.spread(spark,
-        Tables.documents(spark, dir).select(col("doc_id"), col("text")))
-      .select(explode(column(graft.functions.expressions.TermCounts(
-        expression(col("text"))))).as("e"))
-      .select(col("e.term").as("w"), col("e.tf").as("tf"))
-      .groupBy(col("w")).agg(sum(col("tf")).as("freq"))
-    val seg = merges.foldLeft(segInit(col("w"))) { case (c, (_, l, r, _)) =>
-      replace(c, lit(s" $l  $r "), lit(s" $l$r "))
-    }
-    words.select((col("freq") * size(split(trim(seg), "  "))).as("m"))
-      .agg(sum(col("m"))).head.getLong(0)
+    (merges.result(), out)
   }
 
   /** Trained-merge memo for [[bpeTrainBatched]], the batched twin of
@@ -1066,8 +1017,9 @@ object TextAnalysis {
     * (corpus, rounds, M) per JVM — the first call pays the full census
     * loop from the parquet input, repeat calls (the bench's warm
     * passes, the facade) rebuild the bounded merge table from the
-    * memoized rule list. [[bpeLearnBatchedCounted]] itself stays
-    * uncached so [[graft.BpeScale]] measures real training walls.
+    * memoized rule list. [[bpeLearnBatched]] itself stays uncached:
+    * a call is a real training (the BENCH_BPE_SCALE.json record, sf0.1
+    * at a 256-merge target: 21.5 s at M=1, 2.5 s at M=8).
     */
   private val bpeBatchedCache = new java.util.concurrent.ConcurrentHashMap[
     (String, Int, Int), Seq[(Int, String, String, Long)]]()

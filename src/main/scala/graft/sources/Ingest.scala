@@ -58,7 +58,7 @@ object Ingest {
     val existing = store.withColumn("is_new", lit(0))
     val w = Window.partitionBy(col("content_hash"))
       .orderBy(col("is_new").desc, col("doc_id"))
-    existing.unionByName(incoming.select(existing.columns.map(col): _*))
+    existing.unionByName(incoming.select(existing.columns.toIndexedSeq.map(col): _*))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .drop("rn", "is_new")
@@ -84,7 +84,7 @@ object Ingest {
         .orderBy(metaCols.map(c => col(s"_u_$c").desc_nulls_last): _*)))
       .filter(col("_rn") === 1).drop("_rn")
     store.join(broadcast(u), Seq("doc_id"), "left")
-      .select(store.columns.map {
+      .select(store.columns.toIndexedSeq.map {
         case c if metaCols.contains(c) => coalesce(col(s"_u_$c"), col(c)).as(c)
         case c => col(c)
       }: _*)
@@ -183,7 +183,7 @@ object Ingest {
           lit(1L << (i * zCols.size + j))
       }
     }
-    df.select(df.columns.map(col) ++ buckets: _*)
+    df.select(df.columns.toIndexedSeq.map(col) ++ buckets: _*)
       .withColumn("_z", z)
       .repartitionByRange(numFiles, col("_z"))
       .sortWithinPartitions(col("_z"))

@@ -653,8 +653,9 @@ object PointServe {
     // Per-thread dense scoring scratch: the LongMap accumulator paid
     // a hash probe per POSTING ENTRY — at a 10× corpus that is
     // hundreds of thousands of map operations per query, and the sf1
-    // ServeBench measured bm25/sparse collapsing to ~1k QPS (16×
-    // under the reference claim) purely on that constant. Dense
+    // serving record measured bm25/sparse collapsing to ~1k QPS (16×
+    // under the reference claim) purely on that constant (20.9k QPS
+    // after: BENCH_DETAIL.json `serving_sf1`, 32 cores). Dense
     // arrays indexed by doc position make each accumulation one
     // add; generation stamps avoid a per-query zero-fill; the
     // candidate list feeds the same order-independent topK, and the
@@ -1604,11 +1605,7 @@ object PointServe {
         }
         val ids = new Array[Long](syms.size())
         var k = 0
-        while (k < ids.length) {
-          val got = pid.get(syms.get(k))
-          ids(k) = if (got == null) -1L else got.longValue()
-          k += 1
-        }
+        while (k < ids.length) { ids(k) = pid.getOrDefault(syms.get(k), -1L); k += 1 }
         if (memo.size() < memoMax) memo.put(word, ids)
         ids
       }

@@ -200,7 +200,7 @@ object VectorIndex {
     */
   private[graft] def encodeMinhash(sh: DataFrame, path: String, gen: Long): Unit = {
     val spark = sh.sparkSession
-    val bktMod = spark.read.parquet(path + "_meta").head.getAs[Long]("bkt_mod")
+    val bktMod = spark.read.parquet(path + "_meta").head().getAs[Long]("bkt_mod")
     if (gen == 0L || !hasGeneration(spark, path + "_sh", gen))
       writeGeneration(sh.select(col("doc_id"), col("sh")), path + "_sh", gen)
     writeGeneration(graft.operators.Dedup.minhashBands(sh)
@@ -639,7 +639,7 @@ object VectorIndex {
   /** (generation-0 rows, appended rows) of a read layout. */
   private def rowCounts(layout: DataFrame): (Long, Long) = {
     val r = layout.agg(count(when(col("gen") === 0L, 1)),
-      count(when(col("gen") > 0L, 1))).head
+      count(when(col("gen") > 0L, 1))).head()
     (r.getLong(0), r.getLong(1))
   }
 
@@ -828,8 +828,9 @@ object VectorIndex {
     * deployment gives each id-hash shard its OWN graph over its
     * slice (per-shard kNN, per-shard walk), and the scatter-gather
     * merge of per-shard answers covers the corpus because the slices
-    * partition it. Per-shard recall is measured (RecallSweep
-    * `graph_sharded`) and floor-pinned, not assumed.
+    * partition it. Per-shard recall is floor-pinned, not assumed
+    * (PointServeSpec: per-shard graphs scatter-gather to the brute
+    * recall floor).
     */
   private[graft] def buildKnnGraphIndexFromVecs(spark: SparkSession,
                                                 embIn: DataFrame, path: String,

@@ -334,8 +334,7 @@ class PointServeSpec extends GraftSuite {
     // the distributed dense deployment: each id-hash shard builds its
     // OWN kNN graph over its slice; per-shard walks merge exactly
     // (same fx4 score contract), the union covers the corpus because
-    // the slices partition it — recall vs brute floor-pinned here,
-    // measured per SF in RecallSweep (graph_sharded)
+    // the slices partition it — recall vs brute floor-pinned here
     import graft.functions.VectorFunctions.toDouble
     val nShards = 3
     val shardGraphs = (0 until nShards).map { s =>
@@ -756,5 +755,15 @@ class PointServeSpec extends GraftSuite {
     // capped entries still serve: results stay correct with and
     // without a memo hit
     words.foreach(w => assert(capped.count(w) == free.count(w), w))
+  }
+
+  test("bpe encode marks a piece outside the trained id table with -1") {
+    // the table lacks 'z': "abz" merges to (ab, z) and 'z' must carry
+    // the unk id, not the id of whichever piece holds 0
+    val pid = new java.util.HashMap[String, Long]()
+    Seq("a" -> 0L, "b" -> 1L, "c" -> 2L, "ab" -> 3L).foreach { case (p, i) => pid.put(p, i) }
+    val bpe = new PointServe.Bpe(Array(("a", "b")), pid)
+    assert(bpe.encode("abz cab").toSeq == Seq(3L, -1L, 2L, 3L))
+    assert(bpe.count("abz cab") == ((2L, 4L)))
   }
 }

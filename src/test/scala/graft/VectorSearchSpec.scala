@@ -331,7 +331,7 @@ class VectorSearchSpec extends GraftSuite {
   }
 
   /** VERDICT r4 #6: the floors must not decay with data volume — the
-    * same three recall computations at sf0.1 (10x the suite's default
+    * same recall computations at sf0.1 (10x the suite's default
     * SF), so bucket occupancy, cell sizes and codebook coverage are
     * exercised at a different corpus scale than the one the
     * parameters were tuned on.
@@ -353,18 +353,31 @@ class VectorSearchSpec extends GraftSuite {
     val emb = Tables.embeddings(spark, big)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
     val q = emb.filter(col("vec_id") === 0).select(col("emb").as("qv"))
-    val bruteL2 = emb.filter(col("vec_id") =!= 0)
+    val bruteL2Ranked = emb.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(q))
       .select(col("vec_id"), l2DistanceSq(col("emb"), col("qv")).as("d"))
       .orderBy(col("d"), col("vec_id")).limit(20).collect()
-      .map(_.getAs[Long]("vec_id")).toSet
+      .map(_.getAs[Long]("vec_id"))
+    val bruteL2 = bruteL2Ranked.toSet
     val pq = VectorSearch.annPq(spark, big, qid = 0, k = 20).collect()
       .map(_.getAs[Long]("vec_id")).toSet
     val pqRecall = (bruteL2 intersect pq).size.toDouble / bruteL2.size
-    println(f"[ann-recall sf0.1] ivf=$ivfRecall%.3f lsh=$lshRecall%.3f pq=$pqRecall%.3f")
+    // IVF-PQ recall@10 vs exact L2; multistage at its auto pool (no
+    // coarseK) vs the cosine brute top-10 the IVF figure uses
+    val bruteL2Top10 = bruteL2Ranked.take(10).toSet
+    val ivfpq = VectorSearch.annIvfPq(spark, big, qid = 0, k = 10).collect()
+      .map(_.getAs[Long]("vec_id")).toSet
+    val ivfpqRecall = (bruteL2Top10 intersect ivfpq).size.toDouble / bruteL2Top10.size
+    val ms = VectorSearch.multiStage(spark, big, qid = 0, k = 10).collect()
+      .map(_.getAs[Long]("vec_id")).toSet
+    val msRecall = (bruteIvf intersect ms).size.toDouble / bruteIvf.size
+    println(f"[ann-recall sf0.1] ivf=$ivfRecall%.3f lsh=$lshRecall%.3f pq=$pqRecall%.3f" +
+      f" ivfpq=$ivfpqRecall%.3f multistage=$msRecall%.3f")
     assert(ivfRecall >= 0.6, f"ivf recall $ivfRecall%.3f under floor at sf0.1")
     assert(lshRecall >= 0.6, f"lsh recall $lshRecall%.3f under floor at sf0.1")
     assert(pqRecall >= 0.7, f"pq recall $pqRecall%.3f under floor at sf0.1")
+    assert(ivfpqRecall >= 0.6, f"ivf-pq recall $ivfpqRecall%.3f under floor at sf0.1")
+    assert(msRecall >= 0.6, f"multistage recall $msRecall%.3f under floor at sf0.1 (auto pool)")
   }
 
   test("ann_pq plans broadcasts only: the corpus never shuffles") {
